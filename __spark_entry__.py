@@ -2,7 +2,7 @@
 
 ``entry(spark)`` — flagship query (TPC-H Q1 shape) at sf0.001.
 ``queries()`` / ``oracle_sql()`` — SURVEY.md §2 operator inventory as
-(Spark DataFrame, DuckDB SQL) pairs; see onetable_spark/queries.py.
+(Spark DataFrame, DuckDB SQL) pairs; see the onetable_spark/queries/ package.
 
 Surface as of round 15: 154 queries. New in round 15:
 `streaming_hudi_replace` — streamed Hudi REPLACECOMMITS (VERDICT r14
@@ -167,7 +167,7 @@ into Delta + Hudi where the transform downgrades to identity on the
 materialized partition column with partition values flowing verbatim —
 per-bucket record counts matched across all three read surfaces.
 `truncate[W]` ships alongside (pure built-in expressions). Also r13:
-the bench staging deadlock fixed (eager package init in queries.py —
+the bench staging deadlock fixed (eager package init in onetable_spark.queries —
 BENCH_r12's _DeadlockError cannot recur; two-thread regression test),
 bench stdout now guaranteed parseable inside the driver's 2000-char
 tail window (slowest-K queries + totals; full detail in
@@ -402,7 +402,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    from onetable_spark.queries import q_tpch_q1
+    from onetable_spark.queries.tpch import q_tpch_q1
 
     return q_tpch_q1(spark, "/root/testdata/sf0.001")
 

@@ -79,14 +79,13 @@ def main() -> None:
     # the whole cold build and round-over-round comparisons read as
     # regressions that aren't there. The warmed queries still measure
     # their OWN plans; only the shared-index constant moves here.
-    from onetable_spark.queries import (
-        _corpus_embedding_neardups,
+    from onetable_spark.queries.ann import _corpus_embedding_neardups, _ivf_centroids
+    from onetable_spark.queries.text import (
         _corpus_gram_arrays,
         _corpus_neardup_pairs,
         _corpus_token_hashes,
         _corpus_window_hits,
         _corpus_winnow_fps,
-        _ivf_centroids,
     )
 
     _corpus_token_hashes(spark, sf_dir).count()

@@ -1630,20 +1630,24 @@ class DeltaLog:
         # scanned new_rows — i.e. re-read every added parquet — once per
         # branch; one broadcast LEFT join against the (distinct) matched
         # keys classifies postimage vs insert in a single pass. NULL keys
-        # never equi-match, so they classify as inserts either way.
+        # never equi-match, so they classify as inserts either way. The
+        # marker column is named clear of every user column.
+        marker = "_m"
+        while marker in row_schema.fieldNames():
+            marker = f"_{marker}"
         tagged = (
             new_rows.join(
-                F.broadcast(matched_keys.withColumn("_m", F.lit(1))),
+                F.broadcast(matched_keys.withColumn(marker, F.lit(1))),
                 names,
                 "left",
             )
             .withColumn(
                 "_change_type",
-                F.when(F.col("_m").isNotNull(), F.lit("update_postimage")).otherwise(
+                F.when(F.col(marker).isNotNull(), F.lit("update_postimage")).otherwise(
                     F.lit("insert")
                 ),
             )
-            .drop("_m")
+            .drop(marker)
         )
         changes = pre.unionByName(tagged)
         if pcols:

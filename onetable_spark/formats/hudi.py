@@ -1860,7 +1860,11 @@ class HudiTimeline:
         import pandas as _pd
 
         from onetable_spark.formats.avro_schema import structtype_to_avro
-        from onetable_spark.formats.hudi_log import write_avro_log_block
+        from onetable_spark.formats.hudi_log import (
+            encode_logical,
+            logical_fields,
+            write_avro_log_block,
+        )
 
         desc = self.table_descriptor()
         kf = list(desc.record_key_fields)
@@ -1873,6 +1877,12 @@ class HudiTimeline:
         cols = [f.name for f in desc.read_schema.fields]
         df = df.select(*cols)
         avro_schema = structtype_to_avro(desc.read_schema, name="record")
+        # date / timestamp columns reach the log writer as Python values;
+        # the Avro datum carries them as epoch ints
+        logical = logical_fields(avro_schema)
+        session_tz = (
+            df.sparkSession.conf.get("spark.sql.session.timeZone") if logical else None
+        )
 
         def key_expr(frame: DataFrame) -> DataFrame:
             if len(kf) == 1:
@@ -1985,8 +1995,13 @@ class HudiTimeline:
                     if not os.path.exists(lp):
                         break
                     version += 1
+                datums = (
+                    [encode_logical(r, logical, session_tz) for r in records]
+                    if logical
+                    else records
+                )
                 write_avro_log_block(
-                    lp, records, avro_schema, instant, append=False
+                    lp, datums, avro_schema, instant, append=False
                 )
                 rel_log = (
                     lp[len(table_prefix):] if lp.startswith(table_prefix) else lp

@@ -35,6 +35,7 @@ write-stat the view trusted. The reference never opens log files at all
 
 from __future__ import annotations
 
+import datetime as _dt
 import io
 import json
 import struct
@@ -104,6 +105,70 @@ HOODIE_DELETE_RECORD_LIST_SCHEMA: dict[str, Any] = {
         }
     ],
 }
+
+
+#: Avro logical types whose int/long encoding Python rows do not carry
+#: natively: epoch days for ``date``, epoch units for the timestamps
+_LOGICAL_UNITS = {
+    "date": _dt.timedelta(days=1),
+    "timestamp-millis": _dt.timedelta(milliseconds=1),
+    "timestamp-micros": _dt.timedelta(microseconds=1),
+    "local-timestamp-millis": _dt.timedelta(milliseconds=1),
+    "local-timestamp-micros": _dt.timedelta(microseconds=1),
+}
+_EPOCH_DATE = _dt.date(1970, 1, 1)
+_EPOCH_UTC = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
+_EPOCH_LOCAL = _dt.datetime(1970, 1, 1)
+
+
+def logical_fields(schema: dict) -> dict[str, str]:
+    """field name -> logical type of a record schema's date / timestamp
+    fields (nullable unions included). Empty for schemas without them, so
+    callers skip the conversion walk entirely."""
+    out = {}
+    for f in schema.get("fields", ()):
+        t = f["type"]
+        for branch in t if isinstance(t, list) else [t]:
+            if isinstance(branch, dict) and branch.get("logicalType") in _LOGICAL_UNITS:
+                out[f["name"]] = branch["logicalType"]
+    return out
+
+
+def _epoch(logical: str):
+    if logical == "date":
+        return _EPOCH_DATE
+    return _EPOCH_UTC if logical.startswith("timestamp") else _EPOCH_LOCAL
+
+
+def encode_logical(record: dict, logical: dict[str, str], tz: str = "UTC") -> dict:
+    """Copy of ``record`` with its ``logical`` fields in their Avro int/long
+    encoding. Values are ``date``s and ``datetime``s (pandas Timestamps
+    included); a naive value of an instant (``timestamp-*``) field is wall
+    clock in ``tz`` — Spark hands pandas session-local naive timestamps —
+    while ``local-timestamp-*`` values are wall clock as they stand."""
+    from zoneinfo import ZoneInfo
+
+    out = dict(record)
+    for name, lt in logical.items():
+        v = out.get(name)
+        if v is None or v != v:  # None or NaT
+            out[name] = None
+            continue
+        if lt.startswith("timestamp") and v.tzinfo is None:
+            v = v.replace(tzinfo=ZoneInfo(tz))
+        out[name] = (v - _epoch(lt)) // _LOGICAL_UNITS[lt]
+    return out
+
+
+def decode_logical(record: dict, logical: dict[str, str]) -> dict:
+    """Inverse of :func:`encode_logical`, in place: epoch days back to
+    ``date``, instants to UTC-aware ``datetime``s, local timestamps to
+    naive ones."""
+    for name, lt in logical.items():
+        v = record.get(name)
+        if v is not None:
+            record[name] = _epoch(lt) + v * _LOGICAL_UNITS[lt]
+    return record
 
 
 def _read_map(buf: io.BytesIO) -> dict[str, str]:
@@ -215,6 +280,7 @@ def avro_block_records(block: dict[str, Any], decode: bool = False) -> tuple[int
     pos = 8
     records = []
     schema = json.loads(block["headers"]["schema"]) if decode else None
+    logical = logical_fields(schema) if decode else {}
     names: dict[str, Any] = {}
     for _ in range(count):
         (length,) = struct.unpack_from(">i", content, pos)
@@ -224,7 +290,8 @@ def avro_block_records(block: dict[str, Any], decode: bool = False) -> tuple[int
         if decode:
             from onetable_spark.formats.avro_codec import _Reader, read_datum
 
-            records.append(read_datum(_Reader(raw), schema, names))
+            rec = read_datum(_Reader(raw), schema, names)
+            records.append(decode_logical(rec, logical) if logical else rec)
     if pos != len(content):
         raise ValueError(
             f"avro data block walks to {pos} of {len(content)} bytes — corrupt"

@@ -533,7 +533,7 @@ def minhash_lsh_dedup_pairs(
     At 100 TB this is the same play: materialize (id, shingle_hashes) —
     orders of magnitude smaller than the text — and reuse it. Callers
     running several dedup flavors over one corpus pass the table in via
-    ``sh`` so it is built once for ALL of them (see queries._corpus_shingles)."""
+    ``sh`` so it is built once for ALL of them (see queries.text._corpus_shingles)."""
     from pyspark import StorageLevel
 
     if sh is None:

@@ -194,8 +194,9 @@ def _bounded_unit_training_matrix(
             .limit(take)
             .drop("_k")
         )
-    # driver-ok: bounded by max_train_rows — TRAINING samples a capped
-    # subset; assignment/encoding of the full corpus stays distributed
+    # TRAINING samples a capped subset; assignment/encoding of the full
+    # corpus stays distributed
+    # driver-ok: bounded by max_train_rows
     mat = np.array([r[0] for r in sample.collect()], dtype=np.float64)
     mat /= np.linalg.norm(mat, axis=1, keepdims=True)
     return mat[np.lexsort(mat.T[::-1])]

@@ -81,7 +81,7 @@ def tumbling_event_counts(
 ) -> DataFrame:
     """Watermarked tumbling-window counts per event type.
 
-    Batch twin: ``queries.q_window_agg`` (oracle: DuckDB ``time_bucket``).
+    Batch twin: ``queries.analytics.q_window_agg`` (oracle: DuckDB ``time_bucket``).
     """
     return (
         events.withWatermark("ts", watermark)
@@ -101,7 +101,7 @@ def hopping_event_counts(
     watermark: str = "30 minutes",
 ) -> DataFrame:
     """Watermarked hopping(sliding)-window counts — each event lands in
-    window/slide overlapping windows. Batch twin: ``queries.q_hopping_window``."""
+    window/slide overlapping windows. Batch twin: ``queries.analytics.q_hopping_window``."""
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window, slide).alias("w"), "event_type")
@@ -118,7 +118,7 @@ def sessionize_stream(
     ``F.session_window`` is Spark's native stateful session operator — the
     window extends while events arrive within ``gap`` of the last one and
     closes when the watermark passes last_ts + gap. Batch twin:
-    ``queries.q_sessionize`` computes identical session boundaries with a
+    ``queries.analytics.q_sessionize`` computes identical session boundaries with a
     lag/running-sum window (verified equal in tests).
     """
     return (
@@ -146,7 +146,7 @@ def windowed_approx_reach(
     over unbounded streams, so approx_count_distinct's fixed-size
     mergeable sketch is the production pattern — per-window state is a
     few KB regardless of user cardinality. The batch twin in
-    ``queries.q_streaming_approx_reach`` audits every emitted window
+    ``queries.streaming.q_streaming_approx_reach`` audits every emitted window
     against the exact batch count."""
     return (
         events.withWatermark("ts", watermark)
@@ -265,9 +265,10 @@ def dedup_stream(
     dropDuplicates state stores the whole row, so un-projected event
     payloads (props, value, event_id) were shuffled and held in the state
     store only to be dropped at emit. Result-identical — the output is
-    the key columns either way."""
+    the key columns either way. ``ts`` may itself be a key; it is
+    projected once."""
     return (
-        events.select(*keys, "ts")
+        events.select(*dict.fromkeys([*keys, "ts"]))
         .withWatermark("ts", watermark)
         .dropDuplicates(list(keys))
         .select(*keys)

@@ -7,6 +7,8 @@ from __future__ import annotations
 from collections import Counter
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from onetable_spark.functions.bpe import (
@@ -150,3 +152,33 @@ def test_batching_reduces_driver_roundtrips(spark):
     got = learn_merges(docs, n_merges=12, batch_top_n=64, stats=wide)
     assert got == _ref_bpe(CORPUS * 4, 12)
     assert wide["iterations"] < wide["merges"]  # actually batched
+
+
+# property test: each hypothesis example spins Spark jobs — a dozen covers the shapes
+WORD = st.text(alphabet="abc", min_size=0, max_size=12)
+
+
+@settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(st.lists(WORD, min_size=1, max_size=8), st.sampled_from(["ab", "aa", "bc", "ca"]))
+def test_apply_merge_fold_matches_reference(spark, words, pair):
+    a, b = pair[0], pair[1]
+
+    def ref(w: str) -> list[str]:
+        syms, out, i = list(w), [], 0
+        while i < len(syms):
+            if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
+                out.append(a + b)
+                i += 2
+            else:
+                out.append(syms[i])
+                i += 1
+        return out
+
+    vocab = spark.createDataFrame(
+        [(w, 1) for w in words], "word string, freq long"
+    ).withColumn("syms", F.split("word", ""))
+    # split('', '') yields [''] for the empty word; the fold must pass it through
+    got = {r["word"]: r["syms"] for r in apply_merge(vocab, a, b).collect()}
+    for w in words:
+        want = ref(w) if w else [""]
+        assert got[w] == want, (w, pair)

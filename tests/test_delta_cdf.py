@@ -86,6 +86,39 @@ def test_upsert_writes_row_level_cdc_files(spark, cdf_table):
     } if hasattr(log, "read_table") else None
 
 
+def test_upsert_change_feed_keeps_a_user_column_named_like_the_marker(spark, tmp_path):
+    """The postimage/insert classifier tags matched keys with a marker
+    column; a user column of the same name (``_m``, as key and as
+    payload) must come through the change feed intact."""
+    base = str(tmp_path / "cdf_m")
+    os.makedirs(base)
+    schema = "_m long, name string, __m long"
+    df = spark.createDataFrame([(i, f"name{i}", i * 10) for i in range(4)], schema)
+    _write_file(spark, df, os.path.join(base, "f1.parquet"))
+    log = DeltaLog(spark, base)
+    log.init_table(
+        Table(name="t", base_path=base, table_format=TableFormat.DELTA,
+              read_schema=df.schema),
+        configuration={"delta.enableChangeDataFeed": "true"},
+    )
+    log.commit(adds=build_inventory(spark, [os.path.join(base, "f1.parquet")], root=base))
+    batch = spark.createDataFrame([(2, "name2_v2", 999), (100, "fresh", 1)], schema)
+    _write_file(spark, batch, os.path.join(base, "f2.parquet"))
+    v = log.upsert_by_key(
+        build_inventory(spark, [os.path.join(base, "f2.parquet")], root=base),
+        key_fields=["_m"],
+    )
+    rows = {
+        (r["_change_type"], r["_m"], r["name"], r["__m"])
+        for r in log.change_feed(v, v).collect()
+    }
+    assert rows == {
+        ("update_preimage", 2, "name2", 20),
+        ("update_postimage", 2, "name2_v2", 999),
+        ("insert", 100, "fresh", 1),
+    }
+
+
 def test_change_feed_fallbacks_and_mixed_derivation(spark, cdf_table):
     base, log, df = cdf_table
     # v1 (add-only, no cdc): derives as file-level inserts

@@ -8,11 +8,13 @@ from __future__ import annotations
 import os
 import shutil
 
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from onetable_spark.formats.delta import DeltaLog
 from onetable_spark.model import DataLayoutStrategy, Table, TableFormat
-from onetable_spark.operators.maintenance import plan_compaction_bins
+from onetable_spark.operators.maintenance import assign_compaction_bins, plan_compaction_bins
 from onetable_spark.sources.parquet_inventory import build_inventory
 
 
@@ -495,3 +497,53 @@ def test_vacuum_protects_time_travel_files(spark, sf_dir, tmp_path):
     }
     assert plan["small0.parquet"] == "referenced"  # an old version needs it
     assert reader.snapshot_files(version=1).count() == 2  # time travel intact
+
+
+# property test: each hypothesis example spins Spark jobs — a dozen covers the shapes
+@st.composite
+def inventories(draw):
+    n = draw(st.integers(min_value=1, max_value=24))
+    rows = []
+    for i in range(n):
+        part = draw(st.sampled_from(["a", "b", "c"]))
+        size = draw(st.integers(min_value=1, max_value=4000))
+        rows.append((part, f"f{i:03d}", size))
+    target = draw(st.integers(min_value=100, max_value=3000))
+    return rows, target
+
+
+@settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(inventories())
+def test_compaction_planner_invariants(spark, inv):
+    rows, target = inv
+    files = spark.createDataFrame(rows, "part string, path string, size long")
+    assigned = assign_compaction_bins(
+        files, target, part_cols=("part",), order_col="path"
+    ).collect()
+    plan = plan_compaction_bins(
+        files, target, part_cols=("part",), order_col="path"
+    ).collect()
+
+    # 1. assignment covers exactly the small files, each exactly once
+    small = {(p, f) for p, f, s in rows if s < target}
+    assert {(r["part"], r["path"]) for r in assigned} == small
+
+    # 2. no bin crosses a partition, and the plan aggregates the assignment
+    by_bin: dict = {}
+    for r in assigned:
+        by_bin.setdefault((r["part"], r["bin_id"]), []).append(r)
+    for p in plan:
+        members = by_bin[(p["part"], p["bin_id"])]
+        assert p["n_files"] == len(members) >= 2
+        assert p["total_bytes"] == sum(m["size"] for m in members)
+
+    # 3. stride bound: a bin exceeds target only via its LAST file (the
+    # documented one-file overshoot), never by two
+    for (part, _bin), members in by_bin.items():
+        members.sort(key=lambda m: m["path"])
+        if len(members) >= 2:
+            assert sum(m["size"] for m in members[:-1]) < target + max(
+                m["size"] for m in members
+            )
+            # all but the last fit strictly under one stride start
+            assert sum(m["size"] for m in members[:-1]) < 2 * target

@@ -3,7 +3,10 @@ multimodal)."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from onetable_spark.functions.dedup import (
@@ -483,7 +486,7 @@ def repetition_rows(df):
 def test_approx_distinct_bound_holds_both_sfs(spark):
     """The within_5pct flag q_approx_distinct asserts in-plan must be True
     at every test sf (deterministic — HLL++ has no RNG)."""
-    from onetable_spark.queries import q_approx_distinct
+    from onetable_spark.queries.analytics import q_approx_distinct
 
     for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         rows = q_approx_distinct(spark, sf).collect()
@@ -507,13 +510,14 @@ def test_spread_if_narrow_conditional(spark):
 def test_ivf_centroids_cached_per_session(spark):
     """q_ann_ivf_topk reuses one trained quantizer per (session, sf) — the
     index-reuse contract — and repeated calls return identical rows."""
-    from onetable_spark import queries as Q
+    from onetable_spark.queries.ann import q_ann_ivf_topk
+    from onetable_spark.queries.common import _CORPUS_CACHE
 
     sf = "/root/testdata/sf0.001"
-    a = Q.q_ann_ivf_topk(spark, sf).collect()
-    c1 = Q._CORPUS_CACHE[("ivf", id(spark), sf, 16)]
-    b = Q.q_ann_ivf_topk(spark, sf).collect()
-    c2 = Q._CORPUS_CACHE[("ivf", id(spark), sf, 16)]
+    a = q_ann_ivf_topk(spark, sf).collect()
+    c1 = _CORPUS_CACHE[("ivf", id(spark), sf, 16)]
+    b = q_ann_ivf_topk(spark, sf).collect()
+    c2 = _CORPUS_CACHE[("ivf", id(spark), sf, 16)]
     assert c1 is c2
     assert a == b
 
@@ -540,7 +544,7 @@ def test_pair_recall_stats_reports_semdedup_misses(spark, sf_dir):
     pairs the n_assign bound dropped (subset invariant makes that
     |exact| - |semdedup|)."""
     from onetable_spark.functions.similarity import pair_recall_stats, semdedup_pairs
-    from onetable_spark.queries import _corpus_embedding_neardups
+    from onetable_spark.queries.ann import _corpus_embedding_neardups
     from onetable_spark.session import load_table
 
     exact = _corpus_embedding_neardups(spark, sf_dir, threshold=0.45)
@@ -559,7 +563,7 @@ def test_substring_dedup_exposes_df_cap_cost(spark, sf_dir):
     """The windows_dropped_by_df_cap column equals total window
     occurrences minus surviving ones (the boilerplate the df<=20 cap
     removed before the join)."""
-    from onetable_spark.queries import (
+    from onetable_spark.queries.text import (
         _corpus_gram_arrays,
         _corpus_window_hits,
         q_substring_dedup,
@@ -711,3 +715,46 @@ def test_ivfpq_persisted_codes_table_prunes_partitions(spark, sf_dir, tmp_path):
 
     pf = re.search(r"PartitionFilters: \[([^\]]+)\]", plan)
     assert pf and "cluster" in pf.group(1), plan[:800]
+
+
+# property test: each hypothesis example spins Spark jobs — a dozen covers the shapes
+@settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(
+    st.lists(
+        st.tuples(
+            st.integers(min_value=1, max_value=5000),
+            st.integers(min_value=0, max_value=1000),
+        ),
+        min_size=3,
+        max_size=40,
+    )
+)
+def test_ols_closed_form_matches_numpy(spark, xy):
+    # degenerate var(x)=0 inputs are legal SQL (inf/nan) but not OLS — skip
+    xs = [x for x, _ in xy]
+    if len(set(xs)) < 2:
+        return
+    df = spark.createDataFrame(
+        [("s", x, y) for x, y in xy], "source string, x long, y long"
+    )
+    dec = "decimal(38,0)"
+    xc, yc = F.col("x").cast("long"), F.col("y").cast("long")
+    stats = df.groupBy("source").agg(
+        F.count(F.lit(1)).cast(dec).alias("n"),
+        F.sum(xc.cast(dec)).alias("sx"),
+        F.sum(yc.cast(dec)).alias("sy"),
+        F.sum((xc * yc).cast(dec)).alias("sxy"),
+        F.sum((xc * xc).cast(dec)).alias("sxx"),
+    )
+    n, sx, sy, sxy, sxx = (F.col(c) for c in ("n", "sx", "sy", "sxy", "sxx"))
+    var_x = (n * sxx - sx * sx).cast("double")
+    row = stats.select(
+        ((n * sxy - sx * sy).cast("double") / var_x).alias("slope"),
+        ((sy * sxx - sx * sxy).cast("double") / var_x).alias("intercept"),
+    ).first()
+
+    A = np.array([[x, 1.0] for x, _ in xy])
+    b = np.array([y for _, y in xy], dtype=float)
+    slope, intercept = np.linalg.lstsq(A, b, rcond=None)[0]
+    assert abs(row["slope"] - slope) < 1e-7 * max(1.0, abs(slope))
+    assert abs(row["intercept"] - intercept) < 1e-6 * max(1.0, abs(intercept))

@@ -1,8 +1,7 @@
 """Value-parity gate: every declared query runs at sf0.001 and its result
 MATCHES the DuckDB oracle (schema by sorted column name, row count, and
 order-insensitive normalized values — the same contract as the driver's
-hash gate, via tools.check_oracle.compare_result). Queries without an
-oracle (probabilistic ANN/LSH) get a runs-and-returns-rows check.
+hash gate, via tools.check_oracle.compare_result).
 
 This makes oracle parity an automated pytest gate for ALL queries —
 including the ones past the driver's 50-entry CORRECTNESS window — not
@@ -14,44 +13,9 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from onetable_spark.queries import ORACLE_SQL, SPARK_QUERIES
+from onetable_spark.queries import DRIVER_WINDOW, ORACLE_SQL, SPARK_QUERIES
 from onetable_spark.session import TABLES
 from tools.check_oracle import compare_result
-
-# The driver's correctness harness records exactly the first 50 registry
-# entries. These queries MUST stay inside that window: they are the ones
-# whose only driver-grade evidence comes from rounds >= 3 (streaming,
-# sync_inventory, ANN, multimodal, windows, temporal joins). Anyone
-# alphabetizing or appending to SPARK_QUERIES should trip this list, not
-# silently drop driver coverage.
-MUST_BE_DRIVER_MEASURED = {
-    # round-15 rotation (VERDICT r14 #2): everything green in the r14
-    # window retires; the window re-samples by staleness. Pinned here:
-    # the three late-r14 registrations that have NEVER been
-    # driver-sampled, the r15 newcomer, and 46 of the 50 queries whose
-    # latest driver hash row is r12 (tpch_q19-q22 stay out — pure-SQL
-    # translations, value-checked on every pytest run) — the rotation
-    # IS a round deliverable, so falling out must fail loudly.
-    #
-    # never driver-sampled + r15 newcomer
-    "iceberg_changelog_net", "streaming_hudi_rows",
-    "streaming_iceberg_appends", "streaming_hudi_replace",
-    # last driver rows r12 (46 of 50, from CORRECTNESS_r12/r13/r14 keys)
-    "ann_ivf_topk", "ann_ivfpq_topk", "ann_lsh_topk", "ann_pq_topk",
-    "asof_join", "bpe_pair_counts", "cluster_representatives",
-    "cohort_retention", "compaction_bins", "contamination_span",
-    "corpus_curation", "cube_agg", "dedup_clusters", "delta_dv_purge",
-    "delta_upsert", "delta_v2_checkpoint", "hudi_delete_translation",
-    "hudi_mor_compaction", "hudi_upsert", "iceberg_manifest_compaction",
-    "iceberg_rewrite_files", "iceberg_upsert", "iceberg_wap",
-    "minhash_lsh_dedup", "multimodal_ingest", "perplexity_buckets",
-    "repetition_filter", "semdedup_pairs", "simhash_near_dups",
-    "streaming_cdc_feed", "streaming_cdc_hudi", "streaming_upsert",
-    "substring_dedup", "sync_catchup", "sync_continuous",
-    "sync_foreign_table", "sync_partition_evolution", "sync_recovery",
-    "sync_safety_fallback", "sync_validation", "token_calibration",
-    "tpch_q14", "tpch_q15", "tpch_q16", "tpch_q17", "tpch_q18",
-}
 
 
 @pytest.fixture(scope="module")
@@ -66,13 +30,7 @@ def oracle_con(sf_dir):
 @pytest.mark.parametrize("name", sorted(SPARK_QUERIES))
 def test_query_matches_oracle_values(spark, sf_dir, oracle_con, name):
     df = SPARK_QUERIES[name](spark, sf_dir)
-    sql = ORACLE_SQL.get(name)
-    if sql is None:
-        # probabilistic / stub-backed: rows-only (recall bounds are pinned
-        # in test_pipeline_functions)
-        assert df.count() >= 0
-        return
-    msg = compare_result(df, sql, oracle_con)
+    msg = compare_result(df, ORACLE_SQL[name], oracle_con)
     assert msg is None, f"{name}: {msg}"
 
 
@@ -131,12 +89,10 @@ def test_every_oracle_has_a_query():
 
 
 def test_driver_window_holds_the_unproven_queries():
-    first_50 = set(list(SPARK_QUERIES)[:50])
-    missing = MUST_BE_DRIVER_MEASURED - first_50
-    assert not missing, (
-        f"registry order is load-bearing: the driver records only the first 50 "
-        f"SPARK_QUERIES entries, and these fell out of the window: {sorted(missing)}"
-    )
+    # registry order is load-bearing: the driver records only the first 50
+    # SPARK_QUERIES entries, and those must be exactly DRIVER_WINDOW
+    assert len(DRIVER_WINDOW) == 50
+    assert list(SPARK_QUERIES)[:50] == list(DRIVER_WINDOW)
 
 
 def test_entry_contract(spark):

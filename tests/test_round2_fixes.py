@@ -190,76 +190,15 @@ def test_iceberg_metadata_version_claim_is_exclusive(spark, sf_dir, tmp_path):
 def test_no_driver_collect_in_query_paths():
     """Scale guard: no unbounded driver materialization in operator/query
     code. A site must carry a ``# driver-ok:`` justification (same or
-    preceding line — the tools/check_plans.py convention) AND appear in
-    the reviewed per-file allowance below; a glib marker alone cannot
-    self-certify a new collect — adding one forces an edit here, i.e. a
-    review of its boundedness argument."""
+    preceding line) AND fit the reviewed per-file allowance in
+    tools/check_plans.py; a glib marker alone cannot self-certify a new
+    collect — adding one forces an edit there, i.e. a review of its
+    boundedness argument."""
     import pathlib
-    from collections import Counter
 
-    # file -> number of sanctioned driver-materialization sites:
-    #   similarity.py: IVF trainer's max_train_rows-capped sample
-    #   bpe.py: per-iteration bounded top-(N+1) fetch + the alphabet-sized
-    #     symbol universe (|alphabet| + n_merges entries)
-    #   maintenance.py: O(planned bins) compaction plan + the per-partition
-    #     zorder rewrite plan (same commit-payload order)
-    #   queries.py: zorder_compaction's per-file z-bounds (4 staged files)
-    #     and its snapshot read-back (commit-payload order), plus
-    #     vacuum_orphans' 4-file staged status fetch, r11's
-    #     hudi_mor_views + iceberg_eq_deletes refusal probes (raise
-    #     before rows materialize), sync_delta_dv's DV cross-check (one
-    #     row per DV'd file), and dv_translation's two staged-probe
-    #     fetches (DV verify row + the single descriptor row) plus the
-    #     round-trip contract's two 2-file read-backs
-    #   queries.py r12 sites: hudi_delete_translation's refusal probe +
-    #     its one-log verify fetch (raise/flag before rows materialize),
-    #     hudi_mor_compaction's 1-file staged equivalence read-back,
-    #     iceberg_rewrite_files' two 2-file staged read-backs (post-
-    #     rewrite inventory + pre-rewrite time-travel check), and
-    #     delta_dv_purge's two 2-file staged read-backs (post-purge
-    #     inventory + pre-purge time-travel check), iceberg_upsert's
-    #     refusal probe (raises before rows materialize), delta_upsert's
-    #     DV cross-check (one row per live DV'd file), and hudi_upsert's
-    #     refusal probe + one-log verify fetch (2 sites)
-    #   maintenance.py third site: Iceberg referenced_paths' manifest-list
-    #     walk (bounded by manifest count per snapshot)
-    #   queries.py r13 sites: sync_bucket_spec's per-bucket count fetch
-    #     (≤4 aggregated rows — one per bucket[4] value) and its
-    #     truncate-sibling distinct-dir fetch (≤5 rows — 2-char prefixes)
-    sanctioned = {
-        "functions/similarity.py": 1,
-        "functions/bpe.py": 2,
-        "operators/maintenance.py": 3,
-        # r14: +1 — sync_bucket_decimal's ≤4-row per-bucket aggregate
-        "queries.py": 24,
-    }
-    root = pathlib.Path(__file__).parent.parent / "onetable_spark"
-    offenders, marked = [], Counter()
-    for py in list((root / "functions").glob("*.py")) + list((root / "operators").glob("*.py")) + [
-        root / "queries.py"
-    ]:
-        rel = str(py.relative_to(root))
-        lines = py.read_text().splitlines()
-        for i, line in enumerate(lines, 1):
-            code = line.split("#", 1)[0]
-            if ".collect()" in code or "toLocalIterator" in code:
-                justified = "# driver-ok:" in line or (
-                    i >= 2 and "# driver-ok:" in lines[i - 2]
-                )
-                # similarity.py's capped sample predates the marker style
-                justified = justified or (
-                    rel == "functions/similarity.py" and "sample.collect()" in code
-                )
-                if not justified:
-                    offenders.append(f"{rel}:{i}: {line.strip()} (no driver-ok marker)")
-                else:
-                    marked[rel] += 1
-    for rel, n in marked.items():
-        if n > sanctioned.get(rel, 0):
-            offenders.append(
-                f"{rel}: {n} marked collect sites but only "
-                f"{sanctioned.get(rel, 0)} sanctioned — review and extend the allowance"
-            )
+    from tools.check_plans import check_no_driver_materialization
+
+    offenders = check_no_driver_materialization(pathlib.Path(__file__).parent.parent)
     assert not offenders, "driver-side materialization in query path:\n" + "\n".join(offenders)
 
 

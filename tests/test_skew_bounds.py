@@ -185,7 +185,7 @@ def test_chunk_dedup_hot_chunk_no_window(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from onetable_spark.queries import q_chunk_dedup
+    from onetable_spark.queries.text import q_chunk_dedup
 
     boiler = " ".join(f"w{i}" for i in range(16))  # one exact 16-token chunk
     rows = [
@@ -230,10 +230,10 @@ def test_incremental_dedup_shuffle_branch_matches_broadcast(spark, sf_dir, monke
     arriving batch only under a gram-count limit; a large delivery falls
     back to a plain equi-join (AQE picks the strategy). Both branches
     must be value-identical — the limit only changes the physical plan."""
-    from onetable_spark import queries
+    from onetable_spark.queries import text
 
-    bc = sorted(map(tuple, queries.q_incremental_dedup(spark, sf_dir).collect()))
+    bc = sorted(map(tuple, text.q_incremental_dedup(spark, sf_dir).collect()))
     assert bc, "fixture corpus must contain cross-batch near-dups"
-    monkeypatch.setattr(queries, "_INCR_BROADCAST_GRAM_LIMIT", 0)
-    sh = sorted(map(tuple, queries.q_incremental_dedup(spark, sf_dir).collect()))
+    monkeypatch.setattr(text, "_INCR_BROADCAST_GRAM_LIMIT", 0)
+    sh = sorted(map(tuple, text.q_incremental_dedup(spark, sf_dir).collect()))
     assert bc == sh

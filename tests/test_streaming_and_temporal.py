@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from onetable_spark.operators.temporal import asof_join, banded_range_join
 from onetable_spark.streaming.events import (
+    dedup_stream,
     read_event_stream,
     run_available_now,
     sessionize_stream,
@@ -48,6 +49,22 @@ def test_streaming_sessionize_counts(spark, sf_dir):
     from onetable_spark.session import load_table
 
     assert total_events == load_table(spark, sf_dir, "events").count()
+
+
+def test_dedup_stream_with_ts_among_keys(spark, sf_dir):
+    """``ts`` may itself be a dedup key: the projection must not duplicate
+    the column (an ambiguous ``withWatermark("ts")``), and the result is
+    the batch DISTINCT over the same keys."""
+    from onetable_spark.session import load_table
+
+    out = run_available_now(
+        dedup_stream(read_event_stream(spark, sf_dir), keys=("user_id", "ts")),
+        "t_dedup_ts",
+        output_mode="append",
+    )
+    assert out.columns == ["user_id", "ts"]
+    batch = load_table(spark, sf_dir, "events").select("user_id", "ts").distinct()
+    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, batch.collect()))
 
 
 @pytest.fixture()
@@ -283,7 +300,7 @@ def test_ivf_topk_recall(spark, sf_dir):
 def test_streaming_approx_reach_bound_holds(spark):
     """Every streaming-emitted window's HLL estimate is inside the 3-sigma/
     absolute-floor envelope the query asserts in-plan, at both test sfs."""
-    from onetable_spark.queries import q_streaming_approx_reach
+    from onetable_spark.queries.streaming import q_streaming_approx_reach
 
     for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         rows = q_streaming_approx_reach(spark, sf).collect()

@@ -72,25 +72,14 @@ def run(sf_dir: str, only: list[str]) -> int:
     for name, fn in queries.items():
         if only and name not in only:
             continue
-        sql = oracles.get(name)
         try:
             sdf = fn(spark, sf_dir)
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {e}")
             failures += 1
             continue
-        if sql is None:
-            try:
-                # DataFrames are lazy — the count() is where errors surface
-                n_rows = sdf.count()
-            except Exception as e:  # noqa: BLE001
-                print(f"FAIL {name}: spark error: {e}")
-                failures += 1
-                continue
-            print(f"ok   {name}: rows-only ({n_rows} rows)")
-            continue
         try:
-            msg = compare_result(sdf, sql, con)
+            msg = compare_result(sdf, oracles[name], con)
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: error: {e}")
             failures += 1

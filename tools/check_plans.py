@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import re
 import sys
+from collections import Counter
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -37,7 +38,7 @@ EXPECT_PUSHDOWN = {
     "hopping_window",
     "range_join",
     # simhash_near_dups untagged in r5: it now consumes the SHARED persisted
-    # token-hash intermediate (queries._corpus_token_hashes) — the scan is an
+    # token-hash intermediate (queries.text._corpus_token_hashes) — the scan is an
     # InMemoryTableScan by design, so parquet PushedFilters no longer apply
     "ann_lsh_topk",
     "ann_ivf_topk",
@@ -196,22 +197,70 @@ SKIP = {
 }
 
 # modules whose code runs in the QUERY path — a .collect()/.toLocalIterator()
-# there is a driver-materialization scale bug unless the line above it carries
-# a `# driver-ok:` justification (bounded single-row fetch, capped sample)
-QUERY_PATH_GLOBS = ("onetable_spark/functions/*.py", "onetable_spark/operators/*.py", "onetable_spark/queries.py")
+# there is a driver-materialization scale bug unless it carries a
+# `# driver-ok:` justification (bounded single-row fetch, capped sample) on
+# the same or the preceding line AND fits the reviewed per-file allowance
+# below: a marker alone cannot self-certify a new collect — adding one
+# forces an edit here, i.e. a review of its boundedness argument.
+QUERY_PATH_GLOBS = (
+    "onetable_spark/functions/*.py",
+    "onetable_spark/operators/*.py",
+    "onetable_spark/queries/*.py",
+)
+#: file (relative to onetable_spark/) -> number of sanctioned sites
+SANCTIONED_DRIVER_SITES = {
+    # IVF trainer's max_train_rows-capped sample
+    "functions/similarity.py": 1,
+    # per-iteration bounded top-(N+1) fetch + the alphabet-sized symbol
+    # universe (|alphabet| + n_merges entries)
+    "functions/bpe.py": 2,
+    # O(planned bins) compaction plan, the per-partition zorder rewrite
+    # plan (same commit-payload order), and Iceberg referenced_paths'
+    # manifest-list walk (bounded by manifest count per snapshot)
+    "operators/maintenance.py": 3,
+    # staged-lifecycle read-backs over a handful of staged files, and
+    # refusal probes that raise before rows materialize:
+    # zorder_compaction's per-file z-bounds + snapshot read-back (2),
+    # vacuum_orphans' 4-file status fetch (1), hudi_mor_views +
+    # iceberg_eq_deletes refusal probes (2), dv_translation's DV verify
+    # row, descriptor row and two 2-file round-trip read-backs (4),
+    # hudi_delete_translation's refusal probe + one-log verify fetch (2),
+    # hudi_mor_compaction's 1-file equivalence read-back (1),
+    # iceberg_rewrite_files' and delta_dv_purge's post-rewrite inventory +
+    # pre-rewrite time-travel checks (2 + 2), iceberg_upsert's refusal
+    # probe (1), delta_upsert's DV cross-check (1), and hudi_upsert's
+    # refusal probe + one-log verify fetch (2)
+    "queries/format_lifecycles.py": 20,
+    # sync_delta_dv's DV cross-check (one row per DV'd file),
+    # sync_bucket_spec's per-bucket count fetch (<=4 rows) and
+    # truncate-sibling distinct-dir fetch (<=5 rows), and
+    # sync_bucket_decimal's <=4-row per-bucket aggregate
+    "queries/sync_lifecycles.py": 4,
+}
 
 
 def check_no_driver_materialization(repo_root: Path) -> list[str]:
-    problems = []
+    problems, marked = [], Counter()
     for pattern in QUERY_PATH_GLOBS:
         for f in sorted(repo_root.glob(pattern)):
+            rel = f.relative_to(repo_root / "onetable_spark").as_posix()
             lines = f.read_text().splitlines()
             for i, line in enumerate(lines):
-                code = line.split("#")[0]
-                if ".collect()" in code or "toLocalIterator()" in code:
-                    ctx = "\n".join(lines[max(0, i - 2): i])
-                    if "driver-ok:" not in ctx:
-                        problems.append(f"{f.name}:{i + 1} unsanctioned driver materialization: {line.strip()[:80]}")
+                code = line.split("#", 1)[0]
+                if ".collect()" in code or "toLocalIterator" in code:
+                    if "# driver-ok:" in line or (i and "# driver-ok:" in lines[i - 1]):
+                        marked[rel] += 1
+                    else:
+                        problems.append(
+                            f"{rel}:{i + 1} unsanctioned driver materialization: {line.strip()[:80]}"
+                        )
+    for rel, n in sorted(marked.items()):
+        allowed = SANCTIONED_DRIVER_SITES.get(rel, 0)
+        if n > allowed:
+            problems.append(
+                f"{rel}: {n} marked driver-materialization sites but only {allowed} "
+                "sanctioned — review and extend the allowance"
+            )
     return problems
 
 

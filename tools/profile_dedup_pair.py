@@ -41,13 +41,13 @@ def main() -> None:
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     spark = get_spark("profile-dedup-pair")
 
-    from onetable_spark.queries import (
-        SPARK_QUERIES,
+    from onetable_spark.queries import SPARK_QUERIES
+    from onetable_spark.queries.text import (
         _corpus_neardup_pairs,
         _corpus_shingles,
         _corpus_token_hashes,
-        load_table,
     )
+    from onetable_spark.session import load_table
 
     # bench-equivalent warmup: JVM, Arrow pool, shared corpus indexes
     SPARK_QUERIES["g1_files_diff"](spark, sf_dir).count()

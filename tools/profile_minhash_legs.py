@@ -37,13 +37,10 @@ def main() -> None:
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     spark = get_spark("profile-minhash-legs")
 
-    from onetable_spark.queries import (
-        SPARK_QUERIES,
-        _corpus_neardup_pairs,
-        _corpus_shingles,
-        _subset_recall_contract,
-        load_table,
-    )
+    from onetable_spark.queries import SPARK_QUERIES
+    from onetable_spark.queries.ann import _subset_recall_contract
+    from onetable_spark.queries.text import _corpus_neardup_pairs, _corpus_shingles
+    from onetable_spark.session import load_table
     from onetable_spark.functions.dedup import (
         minhash_lsh_candidates_from,
         minhash_lsh_dedup_pairs,

@@ -41,7 +41,8 @@ def main() -> None:
 
     from onetable_spark.functions.dedup import _bounded_members, _simhash_sig_udf
     from onetable_spark.functions.text import spread_if_narrow, tokens
-    from onetable_spark.queries import SPARK_QUERIES, load_table
+    from onetable_spark.queries import SPARK_QUERIES
+    from onetable_spark.session import load_table
 
     SPARK_QUERIES["g1_files_diff"](spark, sf_dir).count()
     spark.range(4).mapInPandas(lambda it: it, "id long").count()

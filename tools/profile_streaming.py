@@ -78,7 +78,7 @@ def _patch_progress_capture() -> None:
         return spark.table(name)
 
     ev.run_available_now = wrapped
-    # queries.py imports run_available_now inside each function body from
+    # the query modules import run_available_now inside each function body from
     # onetable_spark.streaming.events, so patching the module attr is enough
 
 

@@ -113,13 +113,12 @@ def main() -> None:
     # the heavy scale path (signatures, shingle hashes, pair joins, window
     # hashes, k-means) and are cached per sf afterwards, so the query rows
     # below measure warm plans at both scales symmetrically.
-    from onetable_spark.queries import (
-        _corpus_embedding_neardups,
+    from onetable_spark.queries.ann import _corpus_embedding_neardups, _ivf_centroids
+    from onetable_spark.queries.text import (
         _corpus_gram_arrays,
         _corpus_neardup_pairs,
         _corpus_token_hashes,
         _corpus_window_hits,
-        _ivf_centroids,
     )
 
     INDEXES = [
