@@ -192,30 +192,227 @@ def _physical_to_logical(metadata: dict) -> Optional[dict[str, str]]:
     return out or None
 
 
-def _fill_partition_columns(
-    rows: DataFrame, pv_src: DataFrame, schema: T.StructType, pcols: list[str]
-) -> DataFrame:
-    """Materialize hive-partition columns onto row-level change frames.
+#: rows out of the executor DV / change-feed passes: ``dv`` rows name an
+#: affected data file and its new descriptor (JSON), ``cdc`` rows a
+#: written ``_change_data`` file with its size and partition values
+#: (JSON), ``key`` rows carry the keys of newly-dead rows in ``_k0..``
+_PASS_FIELDS = [
+    T.StructField("_kind", T.StringType()),
+    T.StructField("path", T.StringType()),
+    T.StructField("dv", T.StringType()),
+    T.StructField("size", T.LongType()),
+    T.StructField("pv", T.StringType()),
+]
 
-    ``rows`` carries a ``_src_path`` column naming the data file each row
-    was read from; ``pv_src`` is a small (path, partition_values) frame
-    (FILES_SCHEMA projection). Hive layout keeps partition columns out of
-    the parquet bytes, so each partition column is computed from the
-    source file's partitionValues map with a typed cast — the same
-    metadata-projection delta-spark's scan applies. Broadcast join: the
-    pv side is O(files touched by the commit)."""
-    types = {f.name: f.dataType for f in schema.fields}
-    pv = (
-        pv_src.withColumnRenamed("path", "_src_path")
-        .withColumnRenamed("partition_values", "_pv")
+
+def _pass_schema(key_fields: list[T.StructField]) -> T.StructType:
+    return T.StructType(
+        _PASS_FIELDS
+        + [T.StructField(f"_k{i}", f.dataType) for i, f in enumerate(key_fields)]
     )
-    out = rows.join(F.broadcast(pv), "_src_path", "left")
-    for c in pcols:
-        # getItem (not element_at): missing keys must read as null even
-        # under ANSI mode — Delta stores a null partition value as a null
-        # map entry, and absent keys mean the same
-        out = out.withColumn(c, F.col("_pv").getItem(c).cast(types[c]))
-    return out.drop("_pv")
+
+
+def _pass_batch(schema: T.StructType, rows: list[dict]):
+    import pyarrow as pa
+
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return pa.RecordBatch.from_pylist(rows, schema=to_arrow_schema(schema))
+
+
+def _match_positions(rows, keys):
+    """Positions of the ``rows`` (an Arrow table holding at least the
+    key columns) whose key tuple is in ``keys`` (an Arrow table of
+    distinct, null-free keys): one hash semi-join. Null keys never match,
+    as in a SQL MERGE."""
+    import numpy as np
+    import pyarrow as pa
+
+    names = keys.column_names
+    if not keys.num_rows or not rows.num_rows:
+        return np.empty(0, dtype=np.int64)
+    pos = "_pos"
+    while pos in names:
+        pos = f"_{pos}"
+    probe = rows.select(names).cast(keys.schema).append_column(
+        pos, pa.array(np.arange(rows.num_rows, dtype=np.int64))
+    )
+    hit = probe.join(keys, names, join_type="left semi")
+    return np.sort(hit.column(pos).to_numpy())
+
+
+class _ChangeFiles:
+    """Executor side of the change data feed: one task's change rows,
+    conformed to the table schema plus ``_change_type``, grouped by
+    partition-value combo and written as one ``_change_data`` parquet per
+    combo. Hive layout keeps partition columns out of the data files, so
+    they are filled from the source file's partitionValues with typed
+    casts; they stay in the cdc bytes too, self-describing for this
+    engine's streaming CDF source."""
+
+    def __init__(self, table_path: str, schema: T.StructType, pcols: list[str]):
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        self.table_path = table_path
+        self.pcols = pcols
+        self.target = to_arrow_schema(
+            T.StructType(
+                list(schema.fields) + [T.StructField("_change_type", T.StringType())]
+            )
+        )
+        self.groups: dict = {}
+
+    def add(self, rows, pv: dict, change_type) -> None:
+        """``rows``: an Arrow table read off one data file; ``pv`` its
+        partition values; ``change_type`` a string or a string array."""
+        import pyarrow as pa
+
+        n = rows.num_rows
+        if not n:
+            return
+        cols = []
+        for f in self.target:
+            if f.name == "_change_type":
+                col = (
+                    change_type
+                    if isinstance(change_type, pa.Array)
+                    else pa.array([change_type] * n, pa.string())
+                )
+            elif f.name in self.pcols:
+                col = pa.array([pv.get(f.name)] * n, pa.string()).cast(f.type)
+            elif f.name in rows.column_names:
+                col = rows.column(f.name).cast(f.type)
+            else:
+                col = pa.nulls(n, f.type)
+            cols.append(col)
+        combo = json.dumps({c: pv.get(c) for c in self.pcols}) if self.pcols else None
+        self.groups.setdefault(combo, []).append(
+            pa.Table.from_arrays(cols, schema=self.target)
+        )
+
+    def write(self, empty: bool = False) -> list[dict]:
+        """Write the files; one ``cdc`` row per file. ``empty``: with no
+        change rows, still write one empty file."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        groups = self.groups or ({None: [self.target.empty_table()]} if empty else {})
+        out = []
+        for combo, parts in groups.items():
+            rel = f"_change_data/cdc-{uuid.uuid4().hex}.parquet"
+            path = os.path.join(self.table_path, rel)
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            pq.write_table(pa.concat_tables(parts), path)
+            out.append(
+                {"_kind": "cdc", "path": rel, "size": os.path.getsize(path), "pv": combo}
+            )
+        return out
+
+
+def _dv_pass(
+    table_path: str,
+    schema: T.StructType,
+    pcols: list[str],
+    out_schema: T.StructType,
+    keys_bc,
+    change_type: Optional[str],
+    union: bool,
+):
+    """The executor pass that resolves, authors and pre-images the DVs of
+    one commit, as a ``mapInArrow`` function over one row per file:
+    ``(path, dv, pv, pos)`` — the file, its current descriptor (JSON or
+    null), its partition values (JSON) and the positions to delete. A
+    null ``pos`` means: read the file's key columns and delete the rows
+    whose key is in the broadcast ``keys_bc`` (the keyed upsert). Each
+    file's new DV goes through ``delta_dv.author_dv``; with a
+    ``change_type`` the rows at the newly-dead positions are written as
+    change rows of that type, and the upsert also returns their keys.
+
+    The pass writes files (fresh uuids), so its output must be collected
+    exactly once."""
+
+    def run(batches):
+        import pyarrow.parquet as pq
+
+        from onetable_spark.formats.delta_dv import author_dv
+
+        keys = keys_bc.value if keys_bc is not None else None
+        names = keys.column_names if keys is not None else []
+        changes = _ChangeFiles(table_path, schema, pcols) if change_type else None
+        rows = []
+        for batch in batches:
+            cols = batch.to_pydict()
+            for path, dv, pv, pos in zip(cols["path"], cols["dv"], cols["pv"], cols["pos"]):
+                data = None
+                if pos is None:
+                    data = pq.read_table(path, columns=None if changes else names)
+                    pos = _match_positions(data, keys)
+                if not len(pos):
+                    continue
+                desc, newly = author_dv(
+                    table_path, json.loads(dv) if dv else None, pos, union
+                )
+                if desc is None:
+                    continue
+                rows.append({"_kind": "dv", "path": path, "dv": json.dumps(desc)})
+                if changes is None or not len(newly):
+                    continue
+                if data is None:
+                    data = pq.read_table(path)
+                dead = data.take(newly)
+                changes.add(dead, json.loads(pv) if pv else {}, change_type)
+                for k in zip(*(dead.column(n).to_pylist() for n in names)):
+                    rows.append({"_kind": "key", **{f"_k{i}": v for i, v in enumerate(k)}})
+        if changes is not None:
+            rows += changes.write()
+        if rows:
+            yield _pass_batch(out_schema, rows)
+
+    return run
+
+
+def _new_rows_pass(
+    table_path: str, schema: T.StructType, pcols: list[str], matched_bc
+):
+    """The upsert's change-feed pass over its new files, as a
+    ``mapInArrow`` function over ``(path, pv)`` rows: each new row is an
+    ``update_postimage`` when its key is among the broadcast keys of the
+    rows the upsert deleted (``matched_bc``), an ``insert`` otherwise.
+    Writes the change files; returns their ``cdc`` rows."""
+
+    def run(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        matched = matched_bc.value
+        changes = _ChangeFiles(table_path, schema, pcols)
+        for batch in batches:
+            cols = batch.to_pydict()
+            for path, pv in zip(cols["path"], cols["pv"]):
+                data = pq.read_table(path)
+                post = np.zeros(data.num_rows, dtype=bool)
+                post[_match_positions(data, matched)] = True
+                kinds = pa.array(np.where(post, "update_postimage", "insert"))
+                changes.add(data, json.loads(pv) if pv else {}, kinds)
+        rows = changes.write()
+        if rows:
+            yield _pass_batch(_pass_schema([]), rows)
+
+    return run
+
+
+def _cdc_adds(rows) -> list[dict]:
+    """The ``cdc_adds`` of a commit from an executor pass's ``cdc`` rows."""
+    return [
+        {
+            "path": r["path"],
+            "size": int(r["size"]),
+            "partitionValues": json.loads(r["pv"]) if r["pv"] else {},
+        }
+        for r in rows
+        if r["_kind"] == "cdc"
+    ]
 
 
 def _version_path(table_path: str, version: int) -> str:
@@ -696,7 +893,7 @@ class DeltaLog:
         )
         return F.coalesce(F.try_element_at(mlit, key), key)
 
-    def _adds_to_files(self, adds: DataFrame) -> DataFrame:
+    def _adds_to_files(self, adds: DataFrame, extra: tuple = ()) -> DataFrame:
         """AddFile rows → FILES_SCHEMA. Deletion vectors (r11): the DV
         descriptor's ``cardinality`` is netted out of record and per-column
         value counts (the protocol requires writers to keep it exact);
@@ -704,7 +901,8 @@ class DeltaLog:
         nullness is unknowable from metadata — while min/max bounds stay
         (deletion only narrows a range, so they remain valid for
         pruning). The physical path still names the FULL parquet file;
-        targets receive the net-effect descriptor."""
+        targets receive the net-effect descriptor. ``extra`` columns of
+        ``adds`` pass through unchanged."""
         stats = F.from_json(
             "stats",
             "struct<numRecords:long,minValues:map<string,string>,maxValues:map<string,string>,nullCount:map<string,long>>",
@@ -746,6 +944,7 @@ class DeltaLog:
                     F.lit(None).cast("long").alias("total_size"),
                 ),
             ).alias("column_stats"),
+            *extra,
         )
 
     def snapshot_info(self, version: Optional[int] = None) -> DeltaSnapshotInfo:
@@ -929,60 +1128,121 @@ class DeltaLog:
 
         Actions STREAM into a spool file line-by-line straight off Arrow
         record batches (``iter_inventory_rows``): the driver holds one
-        columnar Arrow table (~10× smaller than a Row list — r8; the r7
-        Row-popping scheme peaked at ~380 MB per 500k files, the Arrow
-        path at ~60 MB per million) plus O(batch) Python dicts, and every
+        columnar Arrow table (~10× smaller than a Row list: a Row-popping
+        scheme peaked at ~380 MB per 500k files, the Arrow path at ~60 MB
+        per million) plus O(batch) Python dicts, and every
         encoded line goes to the OS buffer immediately, so no payload-
         sized buffer ever exists. Version races republish the same spool
         via link(), no re-serialization. ``txn`` emits a SetTransaction
         action (PROTOCOL.md "Transaction Identifiers") — the
         idempotent-writer handle streaming sinks use.
 
-        ``deletion_vectors`` (r11): ``(path, pos)`` rows to attach as REAL
-        Delta DVs — one RoaringBitmapArray .bin per affected add, authored
-        ON EXECUTORS (applyInPandas per path through formats/delta_dv.py),
-        descriptors joined onto the adds, and the protocol upgraded to the
-        deletionVectors reader feature (existing features preserved). The
-        add stats must carry the RAW physical counts — the DV cardinality
-        is what readers subtract. This is the Delta half of cross-format
+        ``deletion_vectors``: ``(path, pos)`` rows to attach as REAL
+        Delta DVs. Each affected add gets one RoaringBitmapArray .bin,
+        authored on executors by the same per-file pass the keyed upsert
+        uses (``_dv_pass``); the descriptors attach to the adds as they
+        spool, and the protocol is upgraded to the deletionVectors reader
+        feature (existing features preserved). The positions are the
+        file's whole new DV, not an addition to its current one. The add
+        stats must carry the RAW physical counts — the DV cardinality is
+        what readers subtract. This is the Delta half of cross-format
         delete translation: an Iceberg MoR source's position deletes land
         as bit-exact DVs a Delta engine will honor row-for-row, instead of
-        net-count-only metadata.
+        net-count-only metadata. On a change-data-feed table the same
+        pass writes 'delete' change rows for the NEWLY-dead positions
+        (positions an old DV already deletes are no change), unless the
+        caller passes ``cdc_adds`` itself.
 
-        ``data_change=False`` (r12): marks every add/remove as a LAYOUT
+        ``data_change=False``: marks every add/remove as a LAYOUT
         change, not a logical one — what delta-spark writes for OPTIMIZE
         and REORG ... APPLY (PURGE). CDC/streaming readers use the flag
         to skip rewrite commits (DeltaSource's skipChangeCommits
         contract); a compaction that claimed dataChange=true would replay
         every rewritten row into downstream pipelines as if it were new.
 
-        ``cdc_adds`` (r13, PROTOCOL.md "Add CDC File"): Change Data Feed
+        ``cdc_adds`` (PROTOCOL.md "Add CDC File"): Change Data Feed
         files — dicts with ``path`` (relative, under ``_change_data/``),
         ``size`` and ``partitionValues`` — emitted as ``cdc`` actions in
         the SAME commit. cdc actions never participate in table-state
         replay (the fixed ACTION_SCHEMA parse ignores them); the
         change-feed reader resolves them per version.
         """
-        now = int(time.time() * 1000)
-        n_dvs = 0
+        # driver-ok: Arrow-batched — one job, O(batch) Python objects
+        # while spooling (see above)
+        adds_tbl = adds.toArrow() if adds is not None else None
+        dvs: dict[str, dict] = {}
         if deletion_vectors is not None:
-            if adds is None:
+            if adds_tbl is None:
                 raise ValueError("deletion_vectors requires adds to attach to")
-            if cdc_adds is None and self.exists() and self.change_data_feed_enabled():
-                # r13: a DIRECT deletion-vector commit on a CDF table
-                # (e.g. cross-format delete translation landing Iceberg
-                # position deletes as DVs) authors its own 'delete' cdc
-                # rows — the rows at the NEWLY-dead positions, read on
-                # executors; positions already dead under an old DV are
-                # not re-deleted. Callers that author richer CDF payloads
-                # (upsert_by_key's preimage/postimage/insert sets) pass
-                # cdc_adds explicitly and skip this. Without this, the
-                # DV commit's remove+add-same-path shape would make the
-                # version underivable for change_feed.
-                cdc_adds = self._dv_delete_change_data(deletion_vectors)
-            adds, n_dvs = self._attach_deletion_vectors(adds, deletion_vectors)
+            cdf = cdc_adds is None and self.exists() and self.change_data_feed_enabled()
+            dvs, dv_cdc = self._author_deletion_vectors(adds_tbl, deletion_vectors, cdf)
+            if cdf:
+                cdc_adds = dv_cdc
+        remove_entries: list[tuple[str, dict]] = []
+        if removes is not None:
+            # PROTOCOL.md "Remove File": author partitionValues on every
+            # remove. Values come from the LIVE add action being
+            # dropped — one broadcast-pruned replay job, O(removes) on the
+            # driver — so they carry the add's exact (possibly physical-
+            # named) keys on any layout, hive or not.
+            remove_rels = [
+                _relativize(r["path"], self.table_path)
+                for r in removes.select("path").collect()
+            ]
+            remove_pv: dict[str, dict] = {}
+            pcols_now = list(
+                (metadata or {}).get("partitionColumns")
+                or (
+                    self.snapshot_info().metadata.get("partitionColumns")
+                    if self.exists()
+                    else None
+                )
+                or []
+            )
+            if remove_rels and pcols_now:
+                reldf = local_rows_df(
+                    self.spark, [(p,) for p in remove_rels], "path string"
+                )
+                matched = (
+                    self._live_adds(self._replay_actions())
+                    .select("path", "partitionValues")
+                    .join(F.broadcast(reldf), "path", "left_semi")
+                )
+                for r in matched.collect():
+                    remove_pv[r["path"]] = dict(r["partitionValues"] or {})
+            remove_entries = [(rel, remove_pv.get(rel, {})) for rel in remove_rels]
+        return self._commit_inventory(
+            [adds_tbl] if adds_tbl is not None else [],
+            remove_entries,
+            dvs,
+            metadata=metadata,
+            operation=operation,
+            max_retries=max_retries,
+            txn=txn,
+            data_change=data_change,
+            cdc_adds=cdc_adds,
+        )
+
+    def _commit_inventory(
+        self,
+        adds: list,
+        removes: list[tuple[str, dict]],
+        dvs: dict[str, dict],
+        metadata: Optional[dict] = None,
+        operation: str = "WRITE",
+        max_retries: int = 10,
+        txn: Optional[dict] = None,
+        data_change: bool = True,
+        cdc_adds: Optional[list[dict]] = None,
+    ) -> int:
+        """Publish one commit from driver-held rows — no Spark job but the
+        periodic checkpoint's: ``adds``
+        are Arrow tables of FILES_SCHEMA rows, ``removes`` pairs of
+        (relative path, partitionValues), ``dvs`` the new DV descriptor of
+        each affected add keyed by its absolute path."""
+        now = int(time.time() * 1000)
         field_types: dict = {}
-        if adds is not None:
+        if adds:
             schema_src = (metadata or {}).get("schemaString")
             if schema_src is None and self.exists():
                 schema_src = self.snapshot_info().metadata.get("schemaString")
@@ -999,7 +1259,7 @@ class DeltaLog:
         # upgrade ONLY when a DV actually lands: an empty positions frame
         # (e.g. a v2 source with no live deletes) must not lock older
         # readers out of the target by advertising a feature never used
-        if n_dvs > 0:
+        if dvs:
             current = self.snapshot_info().protocol if self.exists() else {}
             feats = set(current.get("readerFeatures") or [])
             if "deletionVectors" not in feats or (current.get("minReaderVersion") or 1) < 3:
@@ -1042,44 +1302,13 @@ class DeltaLog:
                     "writerFeatures": sorted(wfeats | {"changeDataFeed"}),
                 }
 
-        # PROTOCOL.md "Remove File": author partitionValues on every
-        # remove (r15). Values come from the LIVE add action being
-        # dropped — one broadcast-pruned replay job, O(removes) on the
-        # driver — so they carry the add's exact (possibly physical-
-        # named) keys on any layout, hive or not.
-        remove_rels: list[str] = []
-        remove_pv: dict[str, dict] = {}
-        if removes is not None:
-            remove_rels = [
-                _relativize(r["path"], self.table_path)
-                for r in removes.select("path").collect()
-            ]
-            pcols_now = list(
-                (metadata or {}).get("partitionColumns")
-                or (
-                    self.snapshot_info().metadata.get("partitionColumns")
-                    if self.exists()
-                    else None
-                )
-                or []
-            )
-            if remove_rels and pcols_now:
-                reldf = local_rows_df(
-                    self.spark, [(p,) for p in remove_rels], "path string"
-                )
-                matched = (
-                    self._live_adds(self._replay_actions())
-                    .select("path", "partitionValues")
-                    .join(F.broadcast(reldf), "path", "left_semi")
-                )
-                for r in matched.collect():
-                    remove_pv[r["path"]] = dict(r["partitionValues"] or {})
-
-        # r16: the dangling-DV guard rides the spool pass (the adds are
-        # streamed here anyway) instead of a separate count job per commit
-        n_dv_attached = [0]
+        # the dangling-DV guard rides the spool pass: the paths of the
+        # adds that took a descriptor
+        attached: set[str] = set()
 
         def lines():
+            from onetable_spark.model import iter_inventory_rows
+
             yield json.dumps(
                 {
                     "commitInfo": {
@@ -1096,14 +1325,12 @@ class DeltaLog:
                 yield json.dumps({"txn": {**txn, "lastUpdated": now}})
             if metadata is not None:
                 yield json.dumps({"metaData": metadata})
-            if adds is not None:
-                # driver-ok: Arrow-batched — one job, O(batch) Python
-                # objects (see commit docstring)
-                from onetable_spark.model import iter_inventory_rows
-
-                for row in iter_inventory_rows(adds):
-                    if "_dv" in row and row.get("_dv") is not None:
-                        n_dv_attached[0] += 1
+            for tbl in adds:
+                for row in iter_inventory_rows(None, arrow_table=tbl):
+                    dv = dvs.get(row["path"])
+                    if dv is not None:
+                        attached.add(row["path"])
+                        row["_dv"] = dv
                     yield json.dumps(
                         {
                             "add": _file_row_to_add(
@@ -1112,15 +1339,14 @@ class DeltaLog:
                             )
                         }
                     )
-            # driver-ok: O(removed files), pre-collected above
-            for rel in remove_rels:
+            for rel, pv in removes:
                 yield json.dumps(
                     {
                         "remove": {
                             "path": rel,
                             "deletionTimestamp": now,
                             "dataChange": data_change,
-                            "partitionValues": remove_pv.get(rel, {}),
+                            "partitionValues": pv,
                         }
                     }
                 )
@@ -1138,14 +1364,16 @@ class DeltaLog:
 
         spool = _spool_lines(self.log_path, lines())
         try:
-            # dangling-DV guard (moved from _attach_deletion_vectors):
-            # every authored bitmap must have found its add row in the
-            # spool pass above; raised BEFORE any publish, spool unlinked
-            if n_dvs and n_dv_attached[0] != n_dvs:
+            # dangling-DV guard: every authored bitmap must have found its
+            # add in the spool pass above — compared as path sets, so a
+            # duplicated add cannot stand in for a missing one; raised
+            # BEFORE any publish, spool unlinked
+            dangling = set(dvs) - attached
+            if dangling:
                 raise ValueError(
-                    f"{n_dvs - n_dv_attached[0]} deletion-vector path(s) "
-                    "match no add — positions must target files in this "
-                    "commit's adds"
+                    f"{len(dangling)} deletion-vector path(s) match no add "
+                    f"(e.g. {sorted(dangling)[0]}) — positions must target "
+                    "files in this commit's adds"
                 )
             for _ in range(max_retries):
                 version = (self._versions() or [-1])[-1] + 1
@@ -1164,66 +1392,72 @@ class DeltaLog:
             os.unlink(spool)
         raise RuntimeError(f"commit contention on {self.log_path}")
 
-    def _attach_deletion_vectors(
-        self, adds: DataFrame, positions: DataFrame
-    ) -> tuple[DataFrame, int]:
-        """Author one DV .bin per affected add ON EXECUTORS and join the
-        descriptors onto the adds as a ``_dv`` struct column. Positions
-        are distinct per (path, pos); a position set for a path absent
-        from the adds is an error (the DV would dangle). Returns
-        ``(adds_with_dv, n_dv_files)`` — zero means no bitmap was authored
-        and the caller must NOT upgrade the protocol."""
-        import pandas as _pd
+    def _live_files_with_dvs(self) -> DataFrame:
+        """The live files as FILES_SCHEMA rows with RAW physical counts
+        (what a re-add must carry), plus each file's current DV descriptor
+        as JSON (``_old_dv``, null without one) and its log
+        ``partitionValues`` (physical keys, what a remove must carry)."""
+        live = self._live_adds(self._replay_actions()).withColumn(
+            "_old_dv", F.to_json("deletionVector")
+        )
+        return self._adds_to_files(
+            live.withColumn("deletionVector", F.lit(None).cast(DV_SCHEMA)),
+            extra=("_old_dv", "partitionValues"),
+        )
 
-        from onetable_spark.formats.delta_dv import write_dv_file
-
-        table_path = self.table_path
-
-        def author(key, pdf: _pd.DataFrame) -> _pd.DataFrame:
-            desc = write_dv_file(table_path, sorted(set(int(p) for p in pdf["pos"])))
-            return _pd.DataFrame(
-                [
-                    {
-                        "path": key[0],
-                        "storageType": desc["storageType"],
-                        "pathOrInlineDv": desc["pathOrInlineDv"],
-                        "offset": desc["offset"],
-                        "sizeInBytes": desc["sizeInBytes"],
-                        "cardinality": desc["cardinality"],
-                    }
-                ]
-            )
-
-        # eager localCheckpoint: authoring is SIDE-EFFECTING (one .bin per
-        # path, fresh uuid per execution) — the guard count and the join
-        # below must both read ONE materialized run, or every re-execution
-        # would strew differently-named orphan bitmaps around the table
-        descs = positions.groupBy("path").applyInPandas(
-            author,
-            "path string, storageType string, pathOrInlineDv string, "
-            "offset int, sizeInBytes int, cardinality long",
-        ).localCheckpoint(eager=True)
-        # r16 (guide §5): ONE collect of the descriptor rows (tiny — one
-        # per affected file) replaces two count jobs, and re-planting them
-        # as a broadcast driver-local frame turns the attach join into a
-        # shuffle-free broadcast hash join. The dangling-DV guard (every
-        # DV'd path among the adds) moves to commit's spool pass, which
-        # streams the adds anyway — still raised before any publish.
-        desc_rows = [tuple(r) for r in descs.collect()]
-        n_descs = len(desc_rows)
-        descs_local = local_rows_df(
+    def _author_deletion_vectors(
+        self, adds, positions: DataFrame, cdf: bool
+    ) -> tuple[dict[str, dict], list[dict]]:
+        """The direct DV commit's executor pass: positions grouped per file
+        in the JVM, then one ``_dv_pass`` over the files. ``adds`` is the
+        commit's Arrow inventory. With ``cdf`` each file's current DV is
+        looked up first (one replay), so only NEWLY-dead positions become
+        'delete' change rows; a commit with none still gets one EMPTY cdc
+        file, which keeps the version change_feed-derivable as a logical
+        no-op. Returns ``(descriptors by path, cdc_adds)``."""
+        add_pv = {
+            r["path"]: dict(r["partition_values"] or [])
+            for r in adds.select(["path", "partition_values"]).to_pylist()
+        }
+        schema, pcols, old = None, [], {}
+        if cdf:
+            info = self.snapshot_info()
+            schema = T.StructType.fromJson(json.loads(info.metadata["schemaString"]))
+            pcols = list(info.metadata.get("partitionColumns") or [])
+            wanted = local_rows_df(self.spark, [(p,) for p in add_pv], "path string")
+            # driver-ok: one row per file of this commit's adds
+            old = {
+                r["path"]: r["_old_dv"]
+                for r in self._live_files_with_dvs()
+                .join(F.broadcast(wanted), "path", "left_semi")
+                .select("path", "_old_dv")
+                .toArrow()
+                .to_pylist()
+            }
+        files = local_rows_df(
             self.spark,
-            desc_rows,
-            "path string, storageType string, pathOrInlineDv string, "
-            "offset int, sizeInBytes int, cardinality long",
+            [(p, old.get(p), json.dumps(pv)) for p, pv in add_pv.items()],
+            "path string, dv string, pv string",
         )
-        dv_struct = F.struct(
-            "storageType", "pathOrInlineDv", "offset", "sizeInBytes", "cardinality"
-        ).alias("_dv")
-        joined = adds.join(
-            F.broadcast(descs_local.select("path", dv_struct)), "path", "left_outer"
+        per_file = (
+            positions.groupBy("path")
+            .agg(F.collect_list("pos").alias("pos"))
+            .join(F.broadcast(files), "path", "left")
+            .select("path", "dv", "pv", "pos")
         )
-        return joined, n_descs
+        out_schema = _pass_schema([])
+        run = _dv_pass(
+            self.table_path, schema, pcols, out_schema, None,
+            "delete" if cdf else None, union=False,
+        )
+        # driver-ok: one row per affected file and per written cdc file;
+        # the pass writes files, so this is its one execution
+        out = per_file.mapInArrow(run, out_schema).toArrow().to_pylist()
+        dvs = {r["path"]: json.loads(r["dv"]) for r in out if r["_kind"] == "dv"}
+        cdc = _cdc_adds(out)
+        if cdf and not cdc:
+            cdc = _cdc_adds(_ChangeFiles(self.table_path, schema, []).write(empty=True))
+        return dvs, cdc
 
     def purge_deletion_vectors(self) -> Optional[int]:
         """REORG TABLE ... APPLY (PURGE) (r12): every live AddFile that
@@ -1363,28 +1597,51 @@ class DeltaLog:
         txn: Optional[dict] = None,
         operation: str = "MERGE",
     ) -> int:
-        """Delta MERGE-shaped KEYED UPSERT via deletion vectors (r12):
-        one commit adds the new files and attaches a DV to every existing
-        live file holding a row whose key matches a new row's key — the
-        Delta twin of ``IcebergTable.commit_upsert`` (there the keys ride
-        an equality-delete file; here they resolve to positions at write
+        """Delta MERGE-shaped KEYED UPSERT via deletion vectors: one
+        commit adds the new files and attaches a DV to every existing live
+        file holding a row whose key matches a new row's key — the Delta
+        twin of ``IcebergTable.commit_upsert`` (there the keys ride an
+        equality-delete file; here they resolve to positions at write
         time, because Delta has no deferred delete form besides DVs).
 
-        Scale shape: the new keys are read off the added parquet on
-        executors and broadcast (capped at ``_MAX_UPSERT_KEYS``); live
-        files are PRUNED by their min/max stats on the first key field
-        before any data is read (a merge touching 0.1% of keys scans only
-        the stat-overlapping files — the same skipping delta-spark's
-        MERGE does); surviving files resolve matches with a vectorized
-        ``pandas.merge`` per Arrow batch, O(matches) rows out. A file's
-        new DV carries the UNION of its existing dead positions and the
-        new matches (a DV replaces, never stacks). Unaffected files are
-        untouched. Rows duplicated WITHIN the new files stay duplicated —
-        MERGE assumes source keys unique, matching delta-spark. ``txn``
-        rides the same commit (the streaming sink's exactly-once handle).
+        Each side of the merge is read once:
+
+        1. New side: the ``adds`` inventory comes to the driver as Arrow
+           once (the commit spools from it), and a JVM parquet scan of its
+           files yields the distinct non-null new keys, capped at
+           ``_MAX_UPSERT_KEYS`` and broadcast.
+        2. Old side: one log replay, PRUNED by the live files' min/max
+           stats on the first key field (a merge touching 0.1% of keys
+           opens only the stat-overlapping files — the same skipping
+           delta-spark's MERGE does); the candidate files' rows come to
+           the driver once, each with its current DV descriptor.
+        3. One executor pass over the candidates (``_dv_pass``): per file
+           it matches the key columns against the broadcast keys, unions
+           the matches with the positions the old DV already deletes (a
+           DV replaces, never stacks), authors the new DV, and — with the
+           change data feed on — writes the rows at the NEWLY-dead
+           positions as ``update_preimage`` change rows and returns their
+           keys. Files with no newly-dead row are left untouched.
+        4. Change data feed only: one pass over the new files
+           (``_new_rows_pass``) writes their rows as ``update_postimage``
+           when the key is among those returned keys, ``insert``
+           otherwise. A key whose old row was already dead therefore
+           yields an insert, not an update.
+        5. The commit spools from the driver-held rows — the affected
+           files re-added with their new DVs, the new files, the removes
+           and the cdc actions — with no further Spark job.
+
+        O(matches) rows leave the executors; no table row reaches the
+        driver. NULL keys never match. Rows duplicated WITHIN the new
+        files stay duplicated — MERGE assumes source keys unique,
+        matching delta-spark. ``txn`` rides the same commit (the streaming
+        sink's exactly-once handle).
 
         Returns the committed version."""
-        import pandas as _pd
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         self._ensure_reader_supported()
         table_path = self.table_path
@@ -1409,136 +1666,116 @@ class DeltaLog:
                     "key on a data column (or rewrite the partition in batch)"
                 )
         names = list(key_fields)
-        sql_types = {n: by_name[n].dataType.simpleString() for n in names}
+        key_struct = T.StructType([by_name[n] for n in names])
+        cdf = self.change_data_feed_enabled()
 
-        def read_keys(batches):
-            import pyarrow.parquet as _pq
-
-            for pdf in batches:
-                frames = []
-                for p in pdf["path"]:
-                    frames.append(
-                        _pq.read_table(p, columns=names).to_pandas(
-                            integer_object_nulls=True
-                        )
-                    )
-                yield (
-                    _pd.concat(frames) if frames else _pd.DataFrame(columns=names)
-                )
-
-        key_schema = ", ".join(f"`{n}` {sql_types[n]}" for n in names)
-        new_keys = adds.select("path").mapInPandas(read_keys, key_schema).distinct()
-        # driver-ok: the merge's change-key set, cap-checked right below
-        keys_pdf = new_keys.toPandas()
-        if len(keys_pdf) > self._MAX_UPSERT_KEYS:
+        # driver-ok: the new files' inventory, one row per file
+        new_tbl = adds.toArrow()
+        new_files = [
+            (r["path"], dict(r["partition_values"] or []))
+            for r in new_tbl.select(["path", "partition_values"]).to_pylist()
+        ]
+        keys = to_arrow_schema(key_struct).empty_table()
+        if new_files:
+            # driver-ok: the merge's change-key set, cap-checked right below
+            keys = (
+                self.spark.read.schema(key_struct)
+                .parquet(*[p for p, _ in new_files])
+                .select(*names)
+                .dropna()
+                .distinct()
+                .limit(self._MAX_UPSERT_KEYS + 1)
+                .toArrow()
+            )
+        if keys.num_rows > self._MAX_UPSERT_KEYS:
             raise ValueError(
-                f"{table_path}: {len(keys_pdf)} upsert keys exceed the "
-                f"{self._MAX_UPSERT_KEYS} broadcast cap; rewrite in batch "
-                "instead of merging"
+                f"{table_path}: more than {self._MAX_UPSERT_KEYS} upsert keys "
+                "exceed the broadcast cap; rewrite in batch instead of merging"
             )
-        bkeys = self.spark.sparkContext.broadcast(keys_pdf)
 
-        raw, old_positions = self.snapshot_with_deleted_positions()
-        # stats prune on the FIRST key field: a live file whose min/max
-        # range cannot contain ANY new key is never opened
-        kf = names[0]
-        ktype = by_name[kf].dataType
-        pruned = raw
-        col = keys_pdf[kf].dropna()
-        if len(col) and not isinstance(ktype, (T.BooleanType, T.BinaryType)):
-            kmin, kmax = col.min(), col.max()
-            stat = F.expr(
-                f"filter(coalesce(column_stats, array()), s -> s.field = '{kf}')"
-            )
-            lo = F.element_at(stat, 1)["min_value"].cast(ktype)
-            hi = F.element_at(stat, 1)["max_value"].cast(ktype)
-            overlap = (
-                lo.isNull()
-                | hi.isNull()
-                | ((hi >= F.lit(kmin.item() if hasattr(kmin, "item") else kmin))
-                   & (lo <= F.lit(kmax.item() if hasattr(kmax, "item") else kmax)))
-            )
-            pruned = raw.where(overlap)
-
-        def scan(batches):
-            import pyarrow.parquet as _pq
-
-            keys = bkeys.value
-            for pdf in batches:
-                out = []
-                for p in pdf["path"]:
-                    t = _pq.read_table(p, columns=names).to_pandas(
-                        integer_object_nulls=True
-                    )
-                    t.index.name = "pos"
-                    m = t.reset_index().merge(keys, on=names)
-                    if len(m):
-                        out.append(
-                            _pd.DataFrame({"path": p, "pos": m["pos"].astype("int64")})
-                        )
-                yield (
-                    _pd.concat(out)
-                    if out
-                    else _pd.DataFrame({"path": _pd.Series(dtype=object),
-                                        "pos": _pd.Series(dtype="int64")})
+        cand = None
+        if keys.num_rows:
+            cand = self._live_files_with_dvs()
+            # stats prune on the FIRST key field: a live file whose min/max
+            # range cannot contain ANY new key is never opened
+            kf = names[0]
+            ktype = by_name[kf].dataType
+            if not isinstance(ktype, (T.BooleanType, T.BinaryType)):
+                bounds = pc.min_max(keys.column(kf))
+                stat = F.expr(
+                    f"filter(coalesce(column_stats, array()), s -> s.field = '{kf}')"
                 )
+                lo = F.element_at(stat, 1)["min_value"].cast(ktype)
+                hi = F.element_at(stat, 1)["max_value"].cast(ktype)
+                cand = cand.where(
+                    lo.isNull()
+                    | hi.isNull()
+                    | ((hi >= F.lit(bounds["min"].as_py()))
+                       & (lo <= F.lit(bounds["max"].as_py())))
+                )
+            # driver-ok: the candidate files' inventory rows (stats-pruned)
+            cand = cand.toArrow()
 
-        matches = pruned.select("path").mapInPandas(scan, "path string, pos long")
-        # every consumer below (affected paths, DV union, re-adds, CDF
-        # preimages) re-executes the EXPENSIVE scan unless it is pinned —
-        # r16: checkpoint unconditionally (the r15 form pinned only when
-        # the feed was on, so a CDF-off upsert re-ran the scan 2-3×)
-        matches = matches.localCheckpoint(eager=True)
-        # r16 (guide §2.4/§5): matches is bounded by the _MAX_UPSERT_KEYS
-        # broadcast cap, so the affected-path set is driver-safe — collect
-        # it ONCE and broadcast a driver-local frame instead of
-        # shuffle-joining `raw`/`old_positions` against a distributed
-        # distinct. Each downstream action (DV authoring, removes collect,
-        # the adds spool) previously re-ran that distinct+join as its own
-        # AQE job chain (34 jobs per upsert measured at r16 start; the
-        # broadcast form cuts the whole flow to roughly a third).
-        aff_paths = sorted(
-            {r["path"] for r in matches.select("path").distinct().collect()}
-        )
-        affected = F.broadcast(
-            local_rows_df(self.spark, [(p,) for p in aff_paths], "path string")
-        )
-        # prune the decoded old positions to affected files FIRST — the
-        # union and the CDF anti-join below only ever look at those; with
-        # the feed on there are two consumers, so pin one decode run
-        old_on_affected = old_positions.join(affected, "path", "left_semi")
-        if self.change_data_feed_enabled():
-            old_on_affected = old_on_affected.localCheckpoint(eager=True)
-        # a DV REPLACES its file's descriptor — the new bitmap must carry
-        # the already-dead positions too, or the old deletes resurrect
-        union_positions = matches.unionByName(old_on_affected).distinct()
-        re_adds = raw.join(affected, "path", "left_semi")
-        all_adds = re_adds.unionByName(adds, allowMissingColumns=True)
-        cdc_files = None
-        if self.change_data_feed_enabled():
-            # positions that were ALREADY dead under an old DV are not
-            # updates — no preimage exists, so their new rows classify as
-            # plain inserts (the anti-join below drops them from matches)
-            live_matches = matches.join(
-                old_on_affected, ["path", "pos"], "left_anti"
+        out: list[dict] = []
+        out_schema = _pass_schema(list(key_struct.fields))
+        if cand is not None and cand.num_rows:
+            files = local_rows_df(
+                self.spark,
+                [
+                    (r["path"], r["_old_dv"], json.dumps(dict(r["partition_values"] or [])))
+                    for r in cand.select(["path", "_old_dv", "partition_values"]).to_pylist()
+                ],
+                "path string, dv string, pv string",
+            ).withColumn("pos", F.lit(None).cast("array<long>"))
+            run = _dv_pass(
+                table_path, schema, pcols, out_schema,
+                self.spark.sparkContext.broadcast(keys),
+                "update_preimage" if cdf else None, union=True,
             )
-            cdc_files = self._upsert_change_data(
-                schema, names, adds, live_matches,
-                pcols=pcols, src_pv=raw.select("path", "partition_values"),
+            # driver-ok: one row per affected file / cdc file, plus the
+            # keys of the newly-dead rows — O(matches); the pass writes
+            # files, so this is its one execution
+            out = files.mapInArrow(run, out_schema).toArrow().to_pylist()
+        matched = pa.Table.from_pylist(
+            [
+                {n: r[f"_k{i}"] for i, n in enumerate(names)}
+                for r in out
+                if r["_kind"] == "key"
+            ],
+            schema=keys.schema,
+        )
+        dvs = {r["path"]: json.loads(r["dv"]) for r in out if r["_kind"] == "dv"}
+        cdc_adds = _cdc_adds(out)
+        if cdf and new_files:
+            rows = local_rows_df(
+                self.spark,
+                [(p, json.dumps(pv)) for p, pv in new_files],
+                "path string, pv string",
             )
-        return self.commit(
-            adds=all_adds,
-            # the removes ARE the affected paths (re_adds = raw semi-joined
-            # on them, and every affected path is a live raw file) — the
-            # driver-local frame spares commit a re-execution of the join
-            # just to collect the same path list back out
-            removes=local_rows_df(
-                self.spark, [(p,) for p in aff_paths], "path string"
-            ),
-            deletion_vectors=union_positions,
-            operation=operation,
-            txn=txn,
-            cdc_adds=cdc_files,
+            run = _new_rows_pass(
+                table_path, schema, pcols,
+                self.spark.sparkContext.broadcast(matched),
+            )
+            # driver-ok: one row per written cdc file
+            cdc_adds += _cdc_adds(
+                rows.mapInArrow(run, _pass_schema([])).toArrow().to_pylist()
+            )
+
+        adds_out, removes = [new_tbl], []
+        if dvs:
+            # the affected files leave and come back with their new DVs
+            hit = cand.filter(pc.is_in(cand.column("path"), pa.array(list(dvs))))
+            adds_out.insert(0, hit.select(new_tbl.column_names))
+            removes = [
+                (_relativize(p, table_path), dict(pv or []))
+                for p, pv in zip(
+                    hit.column("path").to_pylist(),
+                    hit.column("partitionValues").to_pylist(),
+                )
+            ]
+        return self._commit_inventory(
+            adds_out, removes, dvs, operation=operation, txn=txn,
+            cdc_adds=cdc_adds or None,
         )
 
     # ------------------------------------------------- change data feed
@@ -1548,261 +1785,6 @@ class DeltaLog:
     def change_data_feed_enabled(self) -> bool:
         conf = self.snapshot_info().metadata.get("configuration") or {}
         return str(conf.get(self.CDF_PROP, "false")).lower() == "true"
-
-    def _upsert_change_data(
-        self, schema: T.StructType, names: list[str], adds: DataFrame,
-        matches: DataFrame, pcols: list[str] | None = None,
-        src_pv: DataFrame | None = None,
-    ) -> list[dict]:
-        """Row-level CDF payload for one MERGE-shaped upsert (r13,
-        PROTOCOL.md "Add CDC File" / delta-spark's enableChangeDataFeed):
-
-        - ``update_preimage``: the matched rows AS THEY WERE — read at the
-          matched (path, pos) positions per affected file on executors;
-        - ``update_postimage``: the new rows whose keys matched;
-        - ``insert``: the new rows whose keys did not.
-
-        All three land in ``_change_data/`` parquet written on executors
-        (one file per non-empty partition, Arrow-native so column types
-        round-trip exactly); the returned dicts become ``cdc`` actions in
-        the same commit. The change-feed reader then serves EXACT row
-        changes for this version instead of the add/remove file-level
-        fallback.
-
-        Partitioned tables (r14): hive layout keeps partition columns OUT
-        of the parquet bytes, so every change row tags its source file
-        (``_src_path``) and the partition columns are materialized from
-        that file's ``partitionValues`` map (``src_pv`` for existing
-        files, the adds inventory for new ones) with typed casts — the
-        same coalesce delta-spark's CDC reader applies. Without this, a
-        partitioned table's cdc rows would silently carry NULL for every
-        partition column."""
-        pcols = list(pcols or [])
-        data_fields = [f for f in schema.fields if f.name not in set(pcols)]
-        pre_schema = T.StructType(
-            data_fields
-            + [
-                T.StructField("_change_type", T.StringType()),
-                T.StructField("_src_path", T.StringType()),
-            ]
-        )
-
-        def read_pre(key, pdf):
-            import numpy as _np
-            import pyarrow.parquet as _pq
-
-            t = _pq.read_table(key[0]).take(_np.sort(pdf["pos"].to_numpy()))
-            df = t.to_pandas(integer_object_nulls=True)
-            df["_change_type"] = "update_preimage"
-            df["_src_path"] = key[0]
-            return df
-
-        pre = matches.groupBy("path").applyInPandas(read_pre, pre_schema)
-        # r16: pre feeds BOTH the matched-key broadcast build and the
-        # changes union — without a pin the per-path position reads ran
-        # twice (once per consumer)
-        pre = pre.localCheckpoint(eager=True)
-
-        def read_full(batches):
-            import pandas as _pd
-            import pyarrow.parquet as _pq
-
-            for pdf in batches:
-                frames = []
-                for p in pdf["path"]:
-                    f = _pq.read_table(p).to_pandas(integer_object_nulls=True)
-                    f["_src_path"] = p
-                    frames.append(f)
-                yield (
-                    _pd.concat(frames)
-                    if frames
-                    else _pd.DataFrame(
-                        columns=[f.name for f in data_fields] + ["_src_path"]
-                    )
-                )
-
-        row_schema = T.StructType(
-            data_fields + [T.StructField("_src_path", T.StringType())]
-        )
-        new_rows = adds.select("path").mapInPandas(read_full, row_schema)
-        matched_keys = pre.select(*names).distinct()
-        # r16 (guide §1.2 don't compute twice): the old semi+anti pair
-        # scanned new_rows — i.e. re-read every added parquet — once per
-        # branch; one broadcast LEFT join against the (distinct) matched
-        # keys classifies postimage vs insert in a single pass. NULL keys
-        # never equi-match, so they classify as inserts either way. The
-        # marker column is named clear of every user column.
-        marker = "_m"
-        while marker in row_schema.fieldNames():
-            marker = f"_{marker}"
-        tagged = (
-            new_rows.join(
-                F.broadcast(matched_keys.withColumn(marker, F.lit(1))),
-                names,
-                "left",
-            )
-            .withColumn(
-                "_change_type",
-                F.when(F.col(marker).isNotNull(), F.lit("update_postimage")).otherwise(
-                    F.lit("insert")
-                ),
-            )
-            .drop(marker)
-        )
-        changes = pre.unionByName(tagged)
-        if pcols:
-            pv_src = src_pv.unionByName(adds.select("path", "partition_values"))
-            changes = _fill_partition_columns(changes, pv_src, schema, pcols)
-        ordered = [f.name for f in schema.fields] + ["_change_type"]
-        return self._write_change_data(changes.select(*ordered), pcols=pcols)
-
-    def _dv_delete_change_data(self, positions: DataFrame) -> list[dict]:
-        """CDF payload for a pure deletion-vector commit: 'delete' rows
-        read at the NEWLY-dead (path, pos) positions on executors —
-        positions already dead under an old DV carry no logical change
-        and are excluded. Returns cdc-action dicts (possibly one EMPTY
-        cdc file: a commit whose every position was already dead is a
-        logical no-op, and the empty file keeps the version
-        change_feed-derivable)."""
-        info = self.snapshot_info()
-        schema = T.StructType.fromJson(json.loads(info.metadata["schemaString"]))
-        pcols = list(info.metadata.get("partitionColumns") or [])
-        raw, old_positions = self.snapshot_with_deleted_positions()
-        new_dead = positions.select("path", "pos").distinct().join(
-            old_positions, ["path", "pos"], "left_anti"
-        )
-        data_fields = [f for f in schema.fields if f.name not in set(pcols)]
-        out_schema = T.StructType(
-            data_fields
-            + [
-                T.StructField("_change_type", T.StringType()),
-                T.StructField("_src_path", T.StringType()),
-            ]
-        )
-
-        def read_pos(key, pdf):
-            import numpy as _np
-            import pyarrow.parquet as _pq
-
-            t = _pq.read_table(key[0]).take(_np.sort(pdf["pos"].to_numpy()))
-            df = t.to_pandas(integer_object_nulls=True)
-            df["_change_type"] = "delete"
-            df["_src_path"] = key[0]
-            return df
-
-        rows = new_dead.groupBy("path").applyInPandas(read_pos, out_schema)
-        if pcols:
-            rows = _fill_partition_columns(
-                rows, raw.select("path", "partition_values"), schema, pcols
-            )
-        ordered = [f.name for f in schema.fields] + ["_change_type"]
-        return self._write_change_data(
-            rows.select(*ordered), pcols=pcols, ensure_nonempty=True
-        )
-
-    def _write_change_data(
-        self, change_df: DataFrame, pcols: list[str] | None = None,
-        ensure_nonempty: bool = False,
-    ) -> list[dict]:
-        """Write CDF rows (table columns + ``_change_type``) as parquet
-        under ``_change_data/``, one file per non-empty partition,
-        serialized on the EXECUTORS via mapInArrow (exact type
-        round-trip). Returns the cdc-action dicts.
-
-        Partitioned tables (r14): one cdc file PER PARTITION-VALUE combo
-        with its real ``partitionValues`` stamped on the action (the shape
-        delta-spark's CDC reader expects). The combo is serialized
-        Spark-side (``cast(string)`` — Delta's canonical 'yyyy-MM-dd' /
-        'true' forms) so executors group Arrow rows by an opaque JSON key
-        and never re-format typed values. The partition columns stay IN
-        the file bytes too — self-describing for this engine's streaming
-        CDF source, ignored by foreign readers that project them from
-        partitionValues.
-
-        ``ensure_nonempty``: when the frame resolves to ZERO rows, still
-        write one empty cdc parquet — marking the commit cdc-authoritative
-        with zero logical changes (vs no cdc action at all, which would
-        send change_feed down the underivable-commit refusal)."""
-        table_path = self.table_path
-        os.makedirs(os.path.join(table_path, "_change_data"), exist_ok=True)
-        base_schema = change_df.schema
-        if pcols:
-            pv_json = F.to_json(
-                F.map_from_arrays(
-                    F.array(*[F.lit(c) for c in pcols]),
-                    F.array(*[F.col(c).cast("string") for c in pcols]),
-                )
-            )
-            change_df = change_df.withColumn("_pv", pv_json).repartition(
-                F.col("_pv")
-            )
-
-        def write(batches):
-            import os as _os
-            import uuid as _uuid
-
-            import pyarrow as _pa
-            import pyarrow.parquet as _pq
-
-            collected = [b for b in batches if b.num_rows]
-            if not collected:
-                return
-            t = _pa.Table.from_batches(collected)
-            groups = [(None, t)]
-            if "_pv" in t.column_names:
-                by_key: dict = {}
-                for i, k in enumerate(t.column("_pv").to_pylist()):
-                    by_key.setdefault(k, []).append(i)
-                groups = [
-                    (k, t.take(idx).drop_columns(["_pv"]))
-                    for k, idx in by_key.items()
-                ]
-            names, sizes, pvs = [], [], []
-            for k, gt in groups:
-                rel = f"_change_data/cdc-{_uuid.uuid4().hex}.parquet"
-                p = _os.path.join(table_path, rel)
-                _pq.write_table(gt, p)
-                names.append(rel)
-                sizes.append(_os.path.getsize(p))
-                pvs.append(k)
-            yield _pa.RecordBatch.from_arrays(
-                [
-                    _pa.array(names, type=_pa.string()),
-                    _pa.array(sizes, type=_pa.int64()),
-                    _pa.array(pvs, type=_pa.string()),
-                ],
-                ["path", "size", "pv"],
-            )
-
-        # eager localCheckpoint: the writer has side effects (fresh uuid
-        # per execution) — the commit must see ONE materialized run
-        written = (
-            change_df.mapInArrow(write, "path string, size long, pv string")
-            .localCheckpoint(eager=True)
-        )
-        # driver-ok: one row per written CDF file (≤ partition count)
-        out = [
-            {
-                "path": r["path"],
-                "size": int(r["size"]),
-                "partitionValues": json.loads(r["pv"]) if r["pv"] else {},
-            }
-            for r in written.collect()
-        ]
-        if not out and ensure_nonempty:
-            import uuid as _uuid
-
-            import pyarrow as _pa
-            import pyarrow.parquet as _pq
-
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            arrow_schema = to_arrow_schema(base_schema)
-            rel = f"_change_data/cdc-{_uuid.uuid4().hex}.parquet"
-            p = os.path.join(table_path, rel)
-            _pq.write_table(arrow_schema.empty_table(), p)
-            out = [{"path": rel, "size": os.path.getsize(p), "partitionValues": {}}]
-        return out
 
     def _read_rows_with_pv(
         self,

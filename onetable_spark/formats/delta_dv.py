@@ -201,10 +201,10 @@ def read_dv(table_path: str, descriptor: dict) -> list[int]:
 
 
 # ------------------------------------------------------- roaring (encode)
-# The encoder exists for the conformance FIXTURE (spec-authored foreign
-# bytes, same pattern as tools/foreign_iceberg.py) and for any future
-# DV-writing path. Array containers + the no-run cookie only — every
-# position set a test authors fits comfortably.
+# The encoder serves the conformance FIXTURE (spec-authored foreign
+# bytes, same pattern as tools/foreign_iceberg.py) and the commit plane's
+# DV authoring (``author_dv``). Array containers + the no-run cookie
+# only, bitmap containers above 4096 values per 16-bit bucket.
 
 
 def encode_rbm_array(rows: list[int]) -> bytes:
@@ -263,3 +263,31 @@ def write_dv_file(table_path: str, rows: list[int], prefix: str = "") -> dict:
         "sizeInBytes": len(data),
         "cardinality": len(set(rows)),
     }
+
+
+def author_dv(
+    table_path: str, old: dict | None, dead, union: bool
+) -> tuple[dict | None, "np.ndarray"]:
+    """Author the DV that replaces one file's descriptor ``old`` (None:
+    the file has no DV yet). ``dead`` holds the positions to delete; with
+    ``union`` the new bitmap also keeps every position ``old`` already
+    deletes (a DV replaces, never stacks), otherwise ``dead`` is the whole
+    new set. Returns ``(descriptor, newly_dead)``: ``newly_dead`` is
+    ``dead`` minus the positions ``old`` already deletes — the rows this
+    DV takes out of the table. With ``union`` and nothing newly dead the
+    file's DV would not change, so nothing is written and the descriptor
+    is None."""
+    import numpy as np
+
+    dead = np.unique(np.asarray(dead, dtype=np.int64))
+    prev = (
+        np.asarray(read_dv(table_path, old), dtype=np.int64)
+        if old
+        else np.empty(0, dtype=np.int64)
+    )
+    newly = np.setdiff1d(dead, prev, assume_unique=True)
+    if union:
+        if not len(newly):
+            return None, newly
+        dead = np.union1d(prev, dead)
+    return write_dv_file(table_path, dead.tolist()), newly

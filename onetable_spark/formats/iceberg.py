@@ -2866,7 +2866,7 @@ class IcebergTable:
                 raise ValueError(f"tuple frame lacks key column(s) {sorted(missing)}")
             tuples = tuples.select(*names).withColumn("_pk", F.lit("{}"))
 
-        def write_eq(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def write_eq(key, pdf):
             import pyarrow as pa
             import pyarrow.parquet as pq
 
@@ -2890,13 +2890,12 @@ class IcebergTable:
             )
 
         # one executor task per partition tuple writes its sorted, deduped
-        # tuple parquet (tuple volume is O(changed rows)); the eager
-        # localCheckpoint pins the side-effecting run
+        # tuple parquet (tuple volume is O(changed rows)); the run writes
+        # files, so it is collected exactly once
         groups = (
             tuples.distinct()
             .groupBy("_pk")
             .applyInPandas(write_eq, "del_path string, n long, pk string")
-            .localCheckpoint(eager=True)
         )
         # driver-ok: one row per PARTITION TUPLE (the commit payload)
         group_rows = [r for r in groups.collect() if int(r["n"])]

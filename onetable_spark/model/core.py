@@ -262,7 +262,7 @@ class TableMetadata:
         return cls(last_instant_synced_millis=int(raw), inflight_commits=inflight)
 
 
-def iter_inventory_rows(files: DataFrame, batch_rows: int = 65536, arrow_table=None):
+def iter_inventory_rows(files: DataFrame | None, batch_rows: int = 65536, arrow_table=None):
     """Driver-side iteration of a file inventory as plain dicts, batched
     through Arrow.
 
@@ -278,11 +278,12 @@ def iter_inventory_rows(files: DataFrame, batch_rows: int = 65536, arrow_table=N
     shape ``collect()`` gave them.
     """
     # arrow_table: a pre-collected table, when the caller already paid for
-    # the one-job Arrow materialization (e.g. to size a write fan-out)
+    # the one-job Arrow materialization (e.g. to size a write fan-out);
+    # ``files`` may then be None
+    import pyarrow as pa
+
     tbl = files.toArrow() if arrow_table is None else arrow_table
-    map_cols = [
-        f.name for f in files.schema.fields if isinstance(f.dataType, T.MapType)
-    ]
+    map_cols = [f.name for f in tbl.schema if pa.types.is_map(f.type)]
     for batch in tbl.to_batches(max_chunksize=batch_rows):
         for row in batch.to_pylist():
             for c in map_cols:

@@ -413,7 +413,8 @@ def read_cdf_stream(
     (r13; r14 closes the append hole): the union of
 
     - a file stream over ``_change_data/`` — every cdc parquet a CDF
-      commit writes (``DeltaLog._write_change_data``) arrives as rows
+      commit writes (``DeltaLog.upsert_by_key`` and deletion-vector
+      commits, through ``formats.delta._ChangeFiles``) arrives as rows
       with ``_change_type`` ('update_preimage'/'update_postimage'/
       'insert'/'delete'), exact row changes for cdc-authoritative
       versions; and

@@ -119,6 +119,90 @@ def test_upsert_change_feed_keeps_a_user_column_named_like_the_marker(spark, tmp
     }
 
 
+def test_upsert_null_keys_never_match(spark, tmp_path):
+    """As in a SQL MERGE, a NULL key matches nothing: the old NULL-key
+    row stays live and the new one is an insert."""
+    base = str(tmp_path / "cdf_null")
+    os.makedirs(base)
+    df = spark.createDataFrame([(1, "a"), (None, "old")], "id long, name string")
+    _write_file(spark, df, os.path.join(base, "f1.parquet"))
+    log = DeltaLog(spark, base)
+    log.init_table(
+        Table(name="t", base_path=base, table_format=TableFormat.DELTA,
+              read_schema=df.schema),
+        configuration={"delta.enableChangeDataFeed": "true"},
+    )
+    log.commit(adds=build_inventory(spark, [os.path.join(base, "f1.parquet")], root=base))
+    batch = spark.createDataFrame([(1, "a2"), (None, "new")], "id long, name string")
+    _write_file(spark, batch, os.path.join(base, "f2.parquet"))
+    v = log.upsert_by_key(
+        build_inventory(spark, [os.path.join(base, "f2.parquet")], root=base),
+        key_fields=["id"],
+    )
+    rows = {(r["_change_type"], r["id"], r["name"]) for r in log.change_feed(v, v).collect()}
+    assert rows == {
+        ("update_preimage", 1, "a"),
+        ("update_postimage", 1, "a2"),
+        ("insert", None, "new"),
+    }
+    assert sum(r["record_count"] for r in log.snapshot_files().collect()) == 3
+
+
+def test_upsert_runs_a_bounded_number_of_jobs(spark, cdf_table):
+    """One keyed upsert on an unpartitioned CDF table reads each side of
+    the merge once: at most 10 Spark jobs, counted through its job
+    group."""
+    base, log, df = cdf_table
+    batch = spark.createDataFrame(
+        [(2, "name2_v2", 999), (100, "fresh", 1)], "id long, name string, score long"
+    )
+    _write_file(spark, batch, os.path.join(base, "f2.parquet"))
+    inv = build_inventory(spark, [os.path.join(base, "f2.parquet")], root=base)
+    sc = spark.sparkContext
+    sc.setJobGroup("delta_upsert_jobs", "one keyed upsert")
+    try:
+        v = log.upsert_by_key(inv, key_fields=["id"])
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup("delta_upsert_jobs")
+    assert len(jobs) <= 10, f"expected at most 10 jobs, saw {len(jobs)}"
+    rows = {(r["_change_type"], r["id"]) for r in log.change_feed(v, v).collect()}
+    assert rows == {
+        ("update_preimage", 2), ("update_postimage", 2), ("insert", 100)
+    }
+
+
+def test_upsert_and_dv_commit_emit_no_type_hint_warning(spark, cdf_table):
+    """No pandas function on the upsert or direct-DV path carries partial
+    type hints, so neither emits pyspark's eval-type inference warning."""
+    import warnings
+
+    import pyarrow.parquet as pq
+
+    base, log, df = cdf_table
+    batch = spark.createDataFrame(
+        [(3, "name3_v2", 7)], "id long, name string, score long"
+    )
+    _write_file(spark, batch, os.path.join(base, "f2.parquet"))
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        log.upsert_by_key(
+            build_inventory(spark, [os.path.join(base, "f2.parquet")], root=base),
+            key_fields=["id"],
+        )
+        target = os.path.join(base, "f1.parquet")
+        ids = pq.read_table(target, columns=["id"])["id"].to_pylist()
+        log.commit(
+            adds=build_inventory(spark, [target], root=base),
+            deletion_vectors=spark.createDataFrame(
+                [(target, ids.index(3)), (target, ids.index(4))], "path string, pos long"
+            ),
+        )
+    assert not [
+        w for w in caught if "Cannot infer the eval type" in str(w.message)
+    ]
+
+
 def test_change_feed_fallbacks_and_mixed_derivation(spark, cdf_table):
     base, log, df = cdf_table
     # v1 (add-only, no cdc): derives as file-level inserts

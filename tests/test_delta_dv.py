@@ -400,6 +400,35 @@ def test_empty_positions_commit_skips_protocol_upgrade(spark, sf_dir, tmp_path):
     assert not [f for f in os.listdir(base) if f.startswith("deletion_vector_")]
 
 
+def test_dangling_dv_guard_compares_path_sets(spark, sf_dir, tmp_path):
+    """Every authored DV must attach to an add of the same commit. The
+    guard compares the set of descriptor paths with the set of adds that
+    took one: adds that carry file A twice must not stand in for a DV on
+    file B, which no add names — the commit raises before publishing."""
+    base = str(tmp_path / "dangle")
+    os.makedirs(base)
+    a, b = os.path.join(base, "a.parquet"), os.path.join(base, "b.parquet")
+    for f in (a, b):
+        shutil.copy(os.path.join(sf_dir, "region.parquet"), f)
+    log = DeltaLog(spark, base)
+    log.init_table(
+        Table(name="g", base_path=base, table_format=TableFormat.DELTA,
+              read_schema=spark.read.parquet(a).schema,
+              layout=DataLayoutStrategy.FLAT)
+    )
+    log.commit(adds=build_inventory(spark, [a, b], root=base))
+    before = log.latest_version()
+    inv_a = build_inventory(spark, [a], root=base)
+    with pytest.raises(ValueError, match="match no add"):
+        log.commit(
+            adds=inv_a.unionByName(inv_a),
+            deletion_vectors=spark.createDataFrame(
+                [(a, 0), (b, 1)], "path string, pos long"
+            ),
+        )
+    assert DeltaLog(spark, base).latest_version() == before
+
+
 def test_dv_translation_authors_exactly_one_bitmap_per_file(spark, sf_dir, tmp_path):
     """DV authoring is side-effecting; the commit plan must evaluate it
     exactly once — re-execution would strew orphan bitmaps with fresh
@@ -644,3 +673,67 @@ def test_v2_checkpoint_write_and_replay(spark, sf_dir, tmp_path):
         for r in DeltaLog(spark, base).snapshot_files().collect()
     }
     assert got2 == {**pre, "f3.parquet": n}
+
+
+def test_purge_dv_on_partitioned_table_carries_partition_values(spark, tmp_path):
+    base = str(tmp_path / "pdv")
+    os.makedirs(base)
+    df = spark.createDataFrame(
+        [(i, "a" if i < 5 else "b", f"row{i}") for i in range(10)],
+        "id long, part string, payload string",
+    )
+    # hive-partitioned physical layout, ONE file per partition dir (the
+    # purge must produce a replacement, so the DV'd file needs survivors)
+    df.coalesce(1).write.partitionBy("part").parquet(base, mode="overwrite")
+    data_files = sorted(
+        os.path.join(dp, f)
+        for dp, _, fs in os.walk(base)
+        for f in fs
+        if f.endswith(".parquet") and not dp.endswith("_delta_log")
+    )
+    from onetable_spark.model import PartitionField
+
+    log = DeltaLog(spark, base)
+    schema = spark.read.parquet(base).schema
+    log.init_table(
+        Table(name="pdv", base_path=base, table_format=TableFormat.DELTA,
+              read_schema=schema,
+              layout=DataLayoutStrategy.HIVE_STYLE_PARTITION,
+              partition_fields=(PartitionField(source_field="part"),)),
+    )
+    adds = build_inventory(spark, data_files, root=base, partition_cols=["part"])
+    log.commit(adds=adds)
+    # attach a DV that kills id=7 (partition b): find the physical file
+    # holding it and its row position within that file
+    import pyarrow.parquet as pq
+
+    target, dead_pos = None, None
+    for p in data_files:
+        if "part=b" not in p:
+            continue
+        ids = pq.read_table(p, columns=["id"])["id"].to_pylist()
+        if 7 in ids:
+            target, dead_pos = p, ids.index(7)
+            break
+    assert target is not None
+    positions = spark.createDataFrame([(target, int(dead_pos))], "path string, pos long")
+    dv_adds = build_inventory(spark, [target], root=base, partition_cols=["part"])
+    log.commit(adds=dv_adds, deletion_vectors=positions)
+
+    v = log.purge_deletion_vectors()
+    assert v is not None
+    # the purged replacement must live inside part=b/ and its add must
+    # carry partitionValues {part: b} — a root-level add with {} vanishes
+    # from partition-filtered scans
+    with open(os.path.join(base, "_delta_log", f"{v:020d}.json")) as f:
+        actions = [json.loads(line) for line in f]
+    new_adds = [a["add"] for a in actions if "add" in a]
+    assert len(new_adds) == 1
+    assert "part=b" in new_adds[0]["path"]
+    assert new_adds[0]["partitionValues"] == {"part": "b"}
+    # and the table still reads correctly partition-filtered
+    files = log.snapshot_files()
+    b_files = files.where(F.col("partition_values")["part"] == "b")
+    assert b_files.count() == 1
+    total = sum(r["record_count"] for r in files.collect())
+    assert total == 9  # 10 rows minus the purged one

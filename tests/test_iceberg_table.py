@@ -22,7 +22,7 @@ from onetable_spark.model import (
     TableFormat,
     TableMetadata,
 )
-from onetable_spark.sources.parquet_inventory import inventory_from_directory
+from onetable_spark.sources.parquet_inventory import build_inventory, inventory_from_directory
 
 
 def test_schema_conversion_roundtrip():
@@ -909,3 +909,102 @@ def test_compact_manifests_folds_v2_with_explicit_seqs(spark, sf_dir, tmp_path):
     ice.commit_overwrite(adds=build_inventory(spark, [f], root=base))
     assert counts()["f9.parquet"] == n
     assert ice.compact_manifests(threshold=50) is None
+
+
+def _init_iceberg(spark, base, schema, format_version=1):
+    ice = IcebergTable(spark, base)
+    ice.init_table(
+        Table(name="t", base_path=base, table_format=TableFormat.ICEBERG,
+              read_schema=schema, layout=DataLayoutStrategy.FLAT),
+        format_version=format_version,
+    )
+    return ice
+
+
+def test_publish_branch_refuses_non_fast_forward(spark, sf_dir, tmp_path):
+    base = str(tmp_path / "ff")
+    os.makedirs(base)
+    src = os.path.join(sf_dir, "region.parquet")
+    shutil.copy(src, os.path.join(base, "f1.parquet"))
+    schema = spark.read.parquet(src).schema
+    ice = _init_iceberg(spark, base, schema)
+    ice.commit_overwrite(
+        adds=build_inventory(spark, [os.path.join(base, "f1.parquet")], root=base)
+    )
+
+    # stage a branch off the current main
+    shutil.copy(src, os.path.join(base, "f2.parquet"))
+    staged = ice.commit_overwrite(
+        adds=build_inventory(spark, [os.path.join(base, "f2.parquet")], root=base),
+        branch="audit",
+    )
+
+    # main ADVANCES with a real data commit → the branch head no longer
+    # descends from main → fast-forward must refuse
+    shutil.copy(src, os.path.join(base, "f3.parquet"))
+    ice.commit_overwrite(
+        adds=build_inventory(spark, [os.path.join(base, "f3.parquet")], root=base)
+    )
+    with pytest.raises(ValueError, match="not an ancestor"):
+        ice.publish_branch("audit")
+    # the deliberate override still works (cherry-pick-style replace)
+    assert ice.publish_branch("audit", force=True) == staged
+    assert ice.metadata()["current-snapshot-id"] == staged
+
+
+def test_properties_only_commit_mints_no_snapshot(spark, sf_dir, tmp_path):
+    base = str(tmp_path / "props")
+    os.makedirs(base)
+    src = os.path.join(sf_dir, "region.parquet")
+    shutil.copy(src, os.path.join(base, "f1.parquet"))
+    schema = spark.read.parquet(src).schema
+    ice = _init_iceberg(spark, base, schema)
+    snap = ice.commit_overwrite(
+        adds=build_inventory(spark, [os.path.join(base, "f1.parquet")], root=base)
+    )
+    n_before = len(ice.metadata()["snapshots"])
+    returned = ice.commit_overwrite(properties={"touch": "1"})
+    md = ice.metadata()
+    assert returned == snap  # the still-current snapshot id
+    assert len(md["snapshots"]) == n_before  # no snapshot minted
+    assert md["current-snapshot-id"] == snap
+    assert md["properties"]["touch"] == "1"
+    # ...and a WAP publish still fast-forwards across the touch commit
+    shutil.copy(src, os.path.join(base, "f2.parquet"))
+    staged = ice.commit_overwrite(
+        adds=build_inventory(spark, [os.path.join(base, "f2.parquet")], root=base),
+        branch="audit",
+    )
+    ice.commit_overwrite(properties={"touch": "2"})
+    assert ice.publish_branch("audit") == staged
+
+
+def test_upsert_commit_path_has_manifest_guard(spark, sf_dir, tmp_path):
+    from onetable_spark.formats.avro_codec import read_container
+
+    base = str(tmp_path / "guard")
+    os.makedirs(base)
+    src = os.path.join(sf_dir, "region.parquet")
+    shutil.copy(src, os.path.join(base, "f1.parquet"))
+    schema = spark.read.parquet(src).schema
+    ice = _init_iceberg(spark, base, schema, format_version=2)
+    ice.commit_overwrite(
+        adds=build_inventory(spark, [os.path.join(base, "f1.parquet")], root=base)
+    )
+    # inflate the CARRIED manifest list to the guard by editing the
+    # current snapshot's manifest list (cheaper than 100 real commits)
+    md = ice.metadata()
+    snap = ice.current_snapshot_meta(md)
+    from onetable_spark.formats.avro_codec import write_container
+    from onetable_spark.formats.iceberg import MANIFEST_LIST_SCHEMA_V2
+
+    _, manifests = read_container(snap["manifest-list"])
+    write_container(
+        snap["manifest-list"], MANIFEST_LIST_SCHEMA_V2, manifests * 100
+    )
+    shutil.copy(src, os.path.join(base, "f2.parquet"))
+    up_adds = build_inventory(
+        spark, [os.path.join(base, "f2.parquet")], root=base
+    )
+    with pytest.raises(ValueError, match="manifest guard"):
+        ice.commit_upsert(up_adds, key_fields=["r_regionkey"])
