@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from onetable_spark.session import local_rows_df
+from onetable_spark.session import local_path, local_rows_df
 from onetable_spark.model import (
     FILES_SCHEMA,
     DataLayoutStrategy,
@@ -1810,12 +1810,7 @@ class DeltaLog:
             [(p, pv or {}) for p, pv in file_pv],
             "_src_file string, _pv map<string,string>",
         )
-        # input_file_name is URI-form (file:///…, percent-encoded) — fold
-        # it back to the plain absolute path the action list was built on
-        src = F.regexp_replace(
-            F.url_decode(F.input_file_name()), r"^file:/+", "/"
-        )
-        df = df.withColumn("_src_file", src).join(
+        df = df.withColumn("_src_file", local_path(F.input_file_name())).join(
             F.broadcast(pv_df), "_src_file", "left"
         )
         for c in pcols:

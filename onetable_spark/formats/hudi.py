@@ -1684,7 +1684,7 @@ class HudiTimeline:
             "hoodie.table.cdc.supplemental.logging.mode", "data_before_after"
         )
 
-        def author(key, pdf: _pd.DataFrame) -> _pd.DataFrame:
+        def author(key, pdf):
             import pyarrow.parquet as pq
 
             path = key[0]
@@ -1975,7 +1975,7 @@ class HudiTimeline:
         stat_rows: list[dict] = []
         if updates is not None:
 
-            def author(key, pdf: _pd.DataFrame) -> _pd.DataFrame:
+            def author(key, pdf):
                 path = key[0]
                 row0 = pdf.iloc[0]
                 records = [
@@ -2254,7 +2254,7 @@ class HudiTimeline:
         inflight = os.path.join(self.hoodie_path, f"{instant}.inflight")
         open(inflight, "w").close()
 
-        def merge(key, pdf: _pd.DataFrame) -> _pd.DataFrame:
+        def merge(key, pdf):
             import pyarrow as pa
             import pyarrow.parquet as pq
 

@@ -15,9 +15,11 @@ HadoopTables layout the reference uses (IcebergTableManager.java:52-85):
   (optimistic: version-hint create-if-absent semantics);
 - snapshot expiry (IcebergClient.java:219-227 parity).
 
-Manifest decoding is distributed: executor tasks decode manifest files via
-mapInPandas, so a table with thousands of manifests never bottlenecks on
-the driver.
+Data-manifest decoding is distributed: executor tasks decode manifest
+files via mapInPandas, so a table with thousands of manifests never
+bottlenecks on the driver. Delete manifests (O(delete commits)) decode on
+the driver, and row-level reads — changelog rows, position deletes and
+equality matches — go through Spark's parquet scan.
 """
 
 from __future__ import annotations
@@ -28,7 +30,7 @@ import struct
 import time
 import uuid
 from collections.abc import Iterator
-from typing import Any, Optional
+from typing import Any, NamedTuple, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -36,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from onetable_spark.formats.avro_codec import read_container, write_container
-from onetable_spark.session import local_rows_df
+from onetable_spark.session import local_path, local_rows_df
 from onetable_spark.model import (
     FILES_SCHEMA,
     DataLayoutStrategy,
@@ -244,15 +246,108 @@ class _CountingEntries:
             yield e
 
 
-def _unpersist_quietly(frames) -> None:
-    """Release pooled changelog caches; called from a ``weakref``
-    finalizer when the returned DataFrame is dropped, so a stopped
-    session or a GC-thread py4j hiccup must never raise."""
-    for df in frames:
-        try:
-            df.unpersist(False)
-        except Exception:
-            pass
+class _DeleteFile(NamedTuple):
+    """One live delete file as its manifest entry describes it."""
+
+    path: str
+    seq: int
+    content: int
+    equality_ids: tuple[int, ...]
+    record_count: int
+
+
+def _delete_files(
+    delete_manifests: list[dict],
+    allow_equality: bool,
+    cache: Optional[dict[str, list[_DeleteFile]]] = None,
+) -> list[_DeleteFile]:
+    """Every live delete file the given delete manifests reference,
+    decoded on the driver: delete manifests are O(delete commits), and the
+    scans that apply them need the file list there. Equality-delete
+    entries refuse loudly unless ``allow_equality`` — applying them needs
+    data rows. ``cache`` (manifest path → files) lets a chain walk decode
+    each manifest once."""
+    out: list[_DeleteFile] = []
+    for m in delete_manifests:
+        mp = m["manifest_path"]
+        files = None if cache is None else cache.get(mp)
+        if files is None:
+            mseq = m.get("sequence_number", 0)
+            files = []
+            for e in read_container(mp)[1]:
+                if e["status"] not in (STATUS_ADDED, STATUS_EXISTING):
+                    continue
+                df_ = e["data_file"]
+                seq = e.get("sequence_number")
+                files.append(
+                    _DeleteFile(
+                        df_["file_path"],
+                        int(mseq if seq is None else seq),
+                        int(df_.get("content", _CONTENT_POSITION_DELETES)),
+                        tuple(sorted(int(i) for i in df_.get("equality_ids") or [])),
+                        int(df_.get("record_count") or 0),
+                    )
+                )
+            if cache is not None:
+                cache[mp] = files
+        for f in files:
+            if f.content == _CONTENT_EQUALITY_DELETES and not allow_equality:
+                raise ValueError(
+                    f"{mp}: Iceberg v2 EQUALITY delete file {f.path} — "
+                    "equality deletes cannot be applied from metadata "
+                    "alone; refusing rather than resurrecting deleted rows "
+                    "(pass apply_equality_deletes=True for the data-assisted "
+                    "scan, or compact with rewrite_data_files)"
+                )
+        out += files
+    return out
+
+
+def _known(value, what: str):
+    """``value``, failing the task where it is null: a scanned file whose
+    path does not fold back to its manifest entry's would otherwise match
+    no delete at all and pass for live."""
+    return F.coalesce(value, F.raise_error(F.lit(f"Iceberg scan: {what}")))
+
+
+def _join_deletes(
+    rows: DataFrame, source: tuple[DataFrame, Optional[list[str]]], how: str
+) -> DataFrame:
+    """Join ``_path``/``_pos``/``_seq``-tagged data rows against one
+    ``IcebergTable._delete_sources`` frame under the spec's sequence rule:
+    a position delete applies at delete_seq >= data_seq, an equality
+    delete (null-safe on every key column) only at delete_seq > data_seq."""
+    frame, names = source
+    if names is None:
+        cond = (
+            (F.col("_path") == F.col("_dpath"))
+            & (F.col("_pos") == F.col("_dpos"))
+            & (F.col("_dseq") >= F.col("_seq"))
+        )
+    else:
+        cond = F.col("_dseq") > F.col("_seq")
+        for j, n in enumerate(names):
+            cond = cond & F.col(n).eqNullSafe(F.col(f"_k{j}"))
+    return rows.join(frame, cond, how)
+
+
+def _killed(rows: DataFrame, sources: list) -> DataFrame:
+    """The rows at least one delete source kills, each once: source i
+    takes only the rows no earlier source killed."""
+    out = None
+    for i, src in enumerate(sources):
+        part = _join_deletes(rows, src, "left_semi")
+        for prev in sources[:i]:
+            part = _join_deletes(part, prev, "left_anti")
+        out = part if out is None else out.unionByName(part)
+    return out
+
+
+def _surviving(rows: DataFrame, sources: list) -> DataFrame:
+    """The rows no delete source kills."""
+    for src in sources:
+        rows = _join_deletes(rows, src, "left_anti")
+    return rows
 
 
 def _avro_partition(
@@ -746,16 +841,16 @@ class IcebergTable:
         """Live file set via manifest-list → manifests (distributed decode).
 
         ``apply_equality_deletes`` opts into the DATA-ASSISTED equality-
-        delete path: eq tuples are canonicalized + broadcast (capped at
-        ``_MAX_EQ_TUPLES``), executors scan each data file's eq columns
-        for match positions, and the kill set unions with the position
-        deletes (distinct per (path, pos) — a doubly-deleted row counts
-        once). Without the flag, equality deletes refuse loudly as
-        before: the scan reads data bytes, which a metadata-only sync
-        must never do implicitly.
+        delete path (``_deleted_positions``): a parquet scan of the
+        reachable data files' eq columns, joined null-safe against the
+        eq-delete rows (capped at ``_MAX_EQ_TUPLES``), and the kill set
+        unions with the position deletes (distinct per (path, pos) — a
+        doubly-deleted row counts once). Without the flag, equality
+        deletes refuse loudly: the scan reads data bytes, which a
+        metadata-only sync must never do implicitly.
 
         v2 merge-on-read tables: position deletes are APPLIED (r11) — the
-        delete parquet files are read distributed, distinct (path, pos)
+        delete parquet files are read by Spark's scan, distinct (path, pos)
         pairs that pass the sequence-number rule (delete_seq >= data_seq,
         spec §Scan Planning) are counted per data file, and the inventory
         reports NET record counts with per-column value counts adjusted
@@ -795,324 +890,166 @@ class IcebergTable:
             base, deletes, ice_schema=ice_schema, apply_equality=apply_equality_deletes
         )
 
-    def _decode_delete_files(
-        self, delete_manifests: list[dict], allow_equality: bool = False
-    ) -> DataFrame:
-        """``(delete_path, delete_seq, content, equality_ids)`` for every
-        live delete file the given delete manifests reference. Equality-
-        delete entries (data_file.content = 2) refuse loudly unless
-        ``allow_equality`` — applying them needs data rows (the opt-in
-        ``apply_equality_deletes`` path reads them). Distributed over
-        manifests; output is bounded by the delete-FILE count, not delete
-        rows."""
-        pairs = [
-            (m["manifest_path"], m.get("sequence_number", 0)) for m in delete_manifests
-        ]
-
-        def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for mp, mseq in zip(pdf["p"], pdf["seq"]):
-                    _, entries = read_container(mp)
-                    for e in entries:
-                        if e["status"] not in (STATUS_ADDED, STATUS_EXISTING):
-                            continue
-                        df_ = e["data_file"]
-                        content = df_.get("content", _CONTENT_POSITION_DELETES)
-                        if content == _CONTENT_EQUALITY_DELETES and not allow_equality:
-                            raise ValueError(
-                                f"{mp}: Iceberg v2 EQUALITY delete file "
-                                f"{df_['file_path']} — equality deletes "
-                                "cannot be applied from metadata alone; "
-                                "refusing rather than resurrecting deleted "
-                                "rows (pass apply_equality_deletes=True for "
-                                "the data-assisted scan, or compact with "
-                                "rewrite_data_files)"
-                            )
-                        seq = e.get("sequence_number")
-                        rows.append(
-                            {"delete_path": df_["file_path"],
-                             "delete_seq": int(mseq if seq is None else seq),
-                             "content": int(content),
-                             "equality_ids": list(df_.get("equality_ids") or [])}
-                        )
-                yield pd.DataFrame(
-                    rows,
-                    columns=["delete_path", "delete_seq", "content", "equality_ids"],
-                )
-
-        # sliced as wide as the per-row work (one avro read per row) at
-        # birth — no repartition Exchange needed (r15, local_rows_df)
-        base = local_rows_df(
-            self.spark, pairs, "p string, seq long", slices=len(pairs)
-        )
-        return base.mapInPandas(
-            scan,
-            "delete_path string, delete_seq long, content int, equality_ids array<int>",
-        )
-
     #: equality-delete tuples above this count refuse the data-assisted
-    #: path (the broadcast predicate set must stay executor-memory-sized;
+    #: path (counted from the eq-delete entries' manifest ``record_count``;
     #: a table with more eq-delete rows than this needs compaction anyway)
     _MAX_EQ_TUPLES = 1_000_000
 
-    def _read_eq_tuples(self, eq_files: DataFrame, ice_schema: dict) -> DataFrame:
-        """One row per equality-delete FILE: its sorted field-id set,
-        sequence number, tuple count, and the tuple frame as Arrow IPC
-        bytes — the read half of ``_equality_match_positions``, split
-        out (r14) so the changelog can pool MANY snapshots' tuple reads
-        into ONE job instead of one collect job per snapshot. An
-        optional ``_sid`` tag column on the input passes through."""
-        id_to_name = _flatten_field_paths(ice_schema["fields"])
-        carry_sid = "_sid" in eq_files.columns
-
-        def read_tuples(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import pyarrow as pa
-
-            cols = ["ids", "delete_seq", "n", "ipc"] + (
-                ["_sid"] if carry_sid else []
-            )
-            for pdf in batches:
-                rows = []
-                sids = pdf["_sid"] if carry_sid else [None] * len(pdf)
-                for dp, seq, ids, sid in zip(
-                    pdf["delete_path"], pdf["delete_seq"], pdf["equality_ids"], sids
-                ):
-                    ids = sorted(int(i) for i in ids)
-                    names = []
-                    for i in ids:
-                        if i not in id_to_name:
-                            raise ValueError(
-                                f"{dp}: equality field id {i} is not a "
-                                "top-level column or nested struct path; "
-                                "equality deletes on map/list elements "
-                                "are unsupported"
-                            )
-                        names.append(id_to_name[i])
-                    t = _read_leaf_columns(dp, names)
-                    sink = pa.BufferOutputStream()
-                    with pa.ipc.new_stream(sink, t.schema) as w:
-                        w.write_table(t)
-                    row = {"ids": json.dumps(ids), "delete_seq": int(seq),
-                           "n": len(t), "ipc": sink.getvalue().to_pybytes()}
-                    if carry_sid:
-                        row["_sid"] = int(sid)
-                    rows.append(row)
-                yield pd.DataFrame(rows, columns=cols)
-
-        out = "ids string, delete_seq long, n long, ipc binary" + (
-            ", _sid long" if carry_sid else ""
+    def _rows(
+        self,
+        schema: T.StructType,
+        paths: list[str],
+        seqs: Optional[list[tuple[str, int]]] = None,
+    ) -> DataFrame:
+        """Rows of the given data files through Spark's parquet scan, each
+        tagged with its file (``_path``, folded to the plain manifest path)
+        and its parquet row index (``_pos``) — the coordinates position
+        deletes address. ``seqs`` ((path, data sequence number) pairs)
+        adds each file's ``_seq`` through a broadcast join."""
+        rows = self.spark.read.schema(schema).parquet(*paths).select(
+            "*",
+            local_path(F.col("_metadata.file_path")).alias("_path"),
+            F.col("_metadata.row_index").alias("_pos"),
         )
-        return eq_files.mapInPandas(read_tuples, out)
+        if seqs is None:
+            return rows
+        seq_df = self.spark.createDataFrame(
+            pd.DataFrame(seqs, columns=["_path", "_seq"]), "_path string, _seq long"
+        )
+        return rows.join(F.broadcast(seq_df), "_path", "left").withColumn(
+            "_seq", _known(F.col("_seq"), "data file missing from its manifest entries")
+        )
 
-    def _equality_match_positions(
-        self,
-        base_with_seq: DataFrame,
-        eq_files: DataFrame,
-        ice_schema: dict,
-    ) -> DataFrame:
-        """(path, pos) of every data row an applicable equality delete
-        kills — the data-assisted scan behind ``apply_equality_deletes``.
-
-        Shape (r12, fully vectorized — the r11 version built a json key
-        per DATA row in Python, the classic hidden scale-killer inside an
-        Arrow batch): executors read each eq-delete parquet ONCE and ship
-        its tuple frame back as Arrow IPC bytes (one row per delete FILE);
-        the driver concats per field-set, takes max(delete_seq) per tuple
-        with a vectorized groupby, enforces the cap, and BROADCASTS the
-        per-field-set pandas frames. Executors then read each data file's
-        eq-column UNION once and resolve matches with ``pandas.merge`` —
-        a hash join in C — per field-set, emitting O(matches) rows, never
-        O(table). The sequence rule is strict (spec: an equality delete
-        applies to data files with data_seq < delete_seq); tuples at
-        seq <= data_seq are pre-filtered from the merge input.
-
-        Null semantics: both sides materialize through the same
-        ``to_pandas(integer_object_nulls=True)``, so null tuple values
-        match null data values (Java's StructLikeSet parity); float
-        columns stay float64 where NaN==NaN under pandas merge, matching
-        the reference engines' Double.equals behavior.
-
-        NESTED struct fields (r12) resolve through the canonical
-        dot-path vocabulary (``a.b.c`` — IcebergSchemaExtractor.java:
-        137-141); both sides project the leaf via pyarrow dataset field
-        refs, so an equality id pointing inside a struct works the same
-        as a top-level one. Fields under maps/lists refuse (no canonical
-        row-wise identity)."""
-        # driver-ok: one row per delete FILE; the byte volume is bounded
-        # by the tuple cap enforced in _eq_match_from_rows
-        per_file_rows = self._read_eq_tuples(eq_files, ice_schema).collect()
-        return self._eq_match_from_rows(base_with_seq, per_file_rows, ice_schema)
-
-    def _eq_match_from_rows(
-        self,
-        base_with_seq: DataFrame,
-        per_file_rows: list,
-        ice_schema: dict,
-    ) -> DataFrame:
-        """The match half of ``_equality_match_positions``: group the
-        collected tuple rows per field-set, broadcast the pandas frames,
-        and hash-join each data file's eq-column union against them on
-        executors (r14 split — the changelog hands in POOLED rows from
-        one chain-wide collect)."""
-        id_to_name = _flatten_field_paths(ice_schema["fields"])
-        n_tuples = sum(r["n"] for r in per_file_rows)
+    def _delete_sources(
+        self, files: list[_DeleteFile], ice_schema: dict, schema: T.StructType
+    ) -> list[tuple[DataFrame, Optional[list[str]]]]:
+        """The given delete files as JVM scans that data rows join against:
+        one ``(_dpath, _dpos, _dseq)`` frame for the position deletes, and
+        one ``(_k0, …, _dseq)`` frame per equality field-id set paired with
+        the data-side column names (``None`` pairs the position frame).
+        Each row carries its file's sequence number from the manifest
+        entry, looked up by the scanned file path (delete files come a
+        few per commit, so the lookup is a small literal map). Equality
+        ids resolve to top-level columns or nested struct dot-paths; ids
+        under maps/lists refuse. The equality-tuple cap is enforced from
+        the entries' record counts."""
+        n_tuples = sum(
+            f.record_count for f in files if f.content == _CONTENT_EQUALITY_DELETES
+        )
         if n_tuples > self._MAX_EQ_TUPLES:
             raise ValueError(
                 f"{self.table_path}: {n_tuples} equality-delete tuples "
                 f"exceed the {self._MAX_EQ_TUPLES} data-assisted cap; "
                 "compact with rewrite_data_files"
             )
-
-        import pyarrow as pa
-
-        by_ids: dict[tuple, list] = {}
-        for r in per_file_rows:
-            by_ids.setdefault(tuple(json.loads(r["ids"])), []).append(r)
-        frames: dict[tuple, pd.DataFrame] = {}
-        for ids, group in by_ids.items():
-            names = [id_to_name[i] for i in ids]
-            parts = []
-            for r in group:
-                t = pa.ipc.open_stream(r["ipc"]).read_all()
-                df = t.to_pandas(integer_object_nulls=True)
-                df["delete_seq"] = int(r["delete_seq"])
-                parts.append(df)
-            big = pd.concat(parts, ignore_index=True)
-            # a tuple at a higher sequence covers a superset of data
-            # files — vectorized max seq per distinct tuple
-            frames[ids] = big.groupby(names, dropna=False, as_index=False)[
-                "delete_seq"
-            ].max()
-        b = self.spark.sparkContext.broadcast(frames)
-
-        def scan_data(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import numpy as np
-
-            frames_ = b.value
-            for pdf in batches:
-                for path, dseq in zip(pdf["path"], pdf["_seq"]):
-                    dseq = int(dseq)
-                    live = {
-                        ids: f[f["delete_seq"] > dseq]
-                        for ids, f in frames_.items()
-                    }
-                    live = {ids: f for ids, f in live.items() if len(f)}
-                    if not live:
-                        yield pd.DataFrame({"path": [], "pos": []})
-                        continue
-                    # read the data file ONCE for the union of field-sets
-                    union = sorted(
-                        {id_to_name[i] for ids in live for i in ids}
+        id_to_name = _flatten_field_paths(ice_schema["fields"])
+        groups: dict[tuple, dict[str, int]] = {}
+        for f in files:
+            groups.setdefault((f.content, f.equality_ids), {})[f.path] = f.seq
+        out = []
+        for (content, ids), seqs in groups.items():
+            if content == _CONTENT_POSITION_DELETES:
+                names, read_schema = None, "file_path string, pos long"
+                cols = [F.col("file_path").alias("_dpath"), F.col("pos").alias("_dpos")]
+            else:
+                unknown = [i for i in ids if i not in id_to_name]
+                if unknown or not ids:
+                    raise ValueError(
+                        f"{self.table_path}: equality field ids {list(ids)} "
+                        "include one that is not a top-level column or nested "
+                        "struct path; equality deletes on map/list elements "
+                        "are unsupported"
                     )
-                    data = _read_leaf_columns(path, union).to_pandas(
-                        integer_object_nulls=True
-                    )
-                    data["pos"] = np.arange(len(data), dtype=np.int64)
-                    hit_parts = []
-                    for ids, f in live.items():
-                        cols = [id_to_name[i] for i in ids]
-                        left = data[cols + ["pos"]]
-                        right = f[cols]
-                        for c in cols:
-                            # dtype alignment (e.g. one side's int column
-                            # went object from nulls): merge both as object
-                            if left[c].dtype != right[c].dtype:
-                                left = left.astype({c: object})
-                                right = right.astype({c: object})
-                        hit_parts.append(
-                            left.merge(right, on=cols, how="inner")["pos"]
-                        )
-                    pos = np.unique(np.concatenate([h.to_numpy() for h in hit_parts]))
-                    yield pd.DataFrame({"path": path, "pos": pos})
+                names, read_schema = [id_to_name[i] for i in ids], schema
+                cols = [F.col(n).alias(f"_k{j}") for j, n in enumerate(names)]
+            seq_of = F.create_map(*[F.lit(x) for kv in seqs.items() for x in kv])
+            frame = self.spark.read.schema(read_schema).parquet(*seqs).select(
+                *cols,
+                _known(
+                    F.element_at(seq_of, local_path(F.col("_metadata.file_path"))),
+                    "delete file missing from its manifest entries",
+                ).cast("long").alias("_dseq"),
+            )
+            out.append((frame, names))
+        return out
 
-        return base_with_seq.select("path", "_seq").mapInPandas(
-            scan_data, "path string, pos long"
-        )
+    def _equality_positions(
+        self,
+        candidates: list[tuple[str, int]],
+        eq_files: list[_DeleteFile],
+        ice_schema: dict,
+    ) -> DataFrame:
+        """``(path, pos)`` of every row of the candidate ``(path, data
+        sequence number)`` files that an equality delete kills: one
+        parquet scan of the candidates' equality columns with their row
+        index, semi-joined null-safe on the key columns against the
+        eq-delete scans under the strict rule delete_seq > data_seq (spec
+        §Scan Planning). Null keys match null tuple values and NaN matches
+        NaN, as Java's StructLikeSet does."""
+        schema = iceberg_to_structtype(ice_schema)
+        rows = self._rows(schema, [p for p, _ in candidates], candidates)
+        return _killed(
+            rows, self._delete_sources(eq_files, ice_schema, schema)
+        ).select(F.col("_path").alias("path"), F.col("_pos").alias("pos"))
 
     def _deleted_positions(
         self,
         base_with_seq: DataFrame,
         delete_manifests: list[dict],
-        ice_schema: Optional[dict] = None,
+        ice_schema: dict,
         apply_equality: bool = False,
-        has_equality: Optional[bool] = None,
-        eq_tuple_rows: Optional[list] = None,
     ) -> DataFrame:
         """Distinct ``(path, pos)`` of every row the applicable deletes
-        kill at this snapshot — the shared core of net-count application
-        AND cross-format delete translation (an Iceberg position delete
-        becomes a Delta deletion vector from exactly these rows).
+        kill at this snapshot — the shared core of net-count application,
+        ``rewrite_data_files`` and cross-format delete translation (an
+        Iceberg position delete becomes a Delta deletion vector from
+        exactly these rows).
 
-        ``has_equality`` (r14): callers that already know whether the
-        manifests reference equality-delete files (the changelog reads
-        the tiny manifest avro driver-side anyway) pass the flag and skip
-        the per-call ``isEmpty`` probe job — along an N-commit changelog
-        chain that probe was one scheduled Spark job per snapshot.
-        ``eq_tuple_rows`` (r14): pre-collected ``_read_eq_tuples`` rows
-        for THIS snapshot's equality deletes — the changelog collects the
-        whole chain's tuples in one job and slices per snapshot, so no
-        per-snapshot collect job runs here either."""
-        delete_files = self._decode_delete_files(
-            delete_manifests, allow_equality=apply_equality
-        )
-
-        def read_deletes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import pyarrow.parquet as pq
-
-            for pdf in batches:
-                for dp, seq, content in zip(
-                    pdf["delete_path"], pdf["delete_seq"], pdf["content"]
-                ):
-                    if content != _CONTENT_POSITION_DELETES:
-                        continue
-                    t = pq.read_table(dp, columns=["file_path", "pos"])
-                    out = t.to_pandas()
-                    out.columns = ["path", "pos"]
-                    out["delete_seq"] = int(seq)
-                    yield out
-
-        # one row per (delete file, position) — the delete-row volume is
-        # O(deleted rows), far below data volume; distinct guards against
-        # the same position appearing in deletes from multiple snapshots
-        positions = delete_files.mapInPandas(
-            read_deletes, "path string, pos long, delete_seq long"
-        )
-        # no broadcast hint: either side can dominate (million-file
-        # inventories vs bulk deletes) — AQE picks the strategy at runtime
-        deleted = (
-            positions.join(base_with_seq.select("path", "_seq"), "path")
-            .where(F.col("delete_seq") >= F.col("_seq"))
-            .select("path", "pos")
-        )
-        if apply_equality:
-            if eq_tuple_rows is not None:
-                if eq_tuple_rows:
-                    deleted = deleted.unionByName(
-                        self._eq_match_from_rows(
-                            base_with_seq, eq_tuple_rows, ice_schema
-                        )
-                    )
-            else:
-                eq_files = delete_files.where(
-                    F.col("content") == _CONTENT_EQUALITY_DELETES
+        The delete manifests decode on the driver. Position deletes are a
+        JVM scan of the delete files' ``(file_path, pos)``, joined to
+        ``base_with_seq`` (the data files with their ``_seq``) under
+        delete_seq >= data_seq. Equality deletes refuse unless
+        ``apply_equality``; applied, they cost one collect of the data
+        files they can reach (data_seq below the newest equality delete's)
+        and ``_equality_positions`` over those files. A row killed by
+        several deletes counts once."""
+        files = _delete_files(delete_manifests, allow_equality=apply_equality)
+        pos_files = [f for f in files if f.content == _CONTENT_POSITION_DELETES]
+        eq_files = [f for f in files if f.content == _CONTENT_EQUALITY_DELETES]
+        parts = []
+        if pos_files:
+            (frame, _), = self._delete_sources(
+                pos_files, ice_schema, iceberg_to_structtype(ice_schema)
+            )
+            # no broadcast hint: either side can dominate (million-file
+            # inventories vs bulk deletes) — AQE picks the strategy
+            parts.append(
+                frame.join(
+                    base_with_seq.select("path", "_seq"),
+                    (F.col("_dpath") == F.col("path"))
+                    & (F.col("_dseq") >= F.col("_seq")),
+                ).select("path", F.col("_dpos").alias("pos"))
+            )
+        if eq_files:
+            newest = max(f.seq for f in eq_files)
+            # driver-ok: one (path, seq) row per data file an equality
+            # delete can reach — the parquet scan needs the file list
+            candidates = [
+                (r["path"], int(r["_seq"]))
+                for r in base_with_seq.where(F.col("_seq") < newest)
+                .select("path", "_seq")
+                .collect()
+            ]
+            if candidates:
+                parts.append(
+                    self._equality_positions(candidates, eq_files, ice_schema)
                 )
-                if has_equality is not False:
-                    # ONE job: the capped tuple read doubles as the
-                    # emptiness probe (r15 — the r14 form ran a separate
-                    # isEmpty job first, two sequential driver-blocking
-                    # jobs per data-assisted scan; empty tables collect
-                    # zero rows from the same job)
-                    rows = self._read_eq_tuples(
-                        eq_files, ice_schema
-                    ).collect()
-                    if rows:
-                        deleted = deleted.unionByName(
-                            self._eq_match_from_rows(
-                                base_with_seq, rows, ice_schema
-                            )
-                        )
-        return deleted.distinct()
+        if not parts:
+            return local_rows_df(self.spark, [], "path string, pos long")
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        return out.distinct()
 
     def snapshot_with_deleted_positions(
         self,
@@ -1425,25 +1362,14 @@ class IcebergTable:
             else local_rows_df(self.spark, [], "path string")
         )
         new_deletes = [m for m in deletes if m.get("added_snapshot_id") == snapshot_id]
-        if new_deletes:
-            targeted = (
-                self._decode_delete_files(new_deletes)
-                .withColumnRenamed("delete_path", "dp")
+        files = _delete_files(new_deletes, allow_equality=False)
+        if files:
+            hit = (
+                self.spark.read.schema("file_path string, pos long")
+                .parquet(*[f.path for f in files])
+                .select(F.col("file_path").alias("path"))
+                .distinct()
             )
-
-            def target_paths(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                import pyarrow.parquet as pq
-
-                for pdf in batches:
-                    for dp in pdf["dp"]:
-                        t = pq.read_table(dp, columns=["file_path"])
-                        yield (
-                            t.to_pandas()
-                            .rename(columns={"file_path": "path"})
-                            .drop_duplicates()
-                        )
-
-            hit = targeted.mapInPandas(target_paths, "path string").distinct()
             # adjusted descriptors for every targeted file still live at
             # this snapshot (dead targets drop out via the semi-join)
             net = self.snapshot_files(snapshot_id).join(hit, "path", "left_semi")
@@ -1471,12 +1397,11 @@ class IcebergTable:
         identifier_fields: Optional[list[str]] = None,
         net_changes: bool = False,
     ) -> DataFrame:
-        """ROW-LEVEL changelog scan (r13 — Iceberg's
-        ``create_changelog_view`` procedure; the Delta sibling is
-        ``DeltaLog.change_feed``): table rows + ``_change_type``
-        ('insert'/'delete') + ``_change_ordinal`` + ``_commit_snapshot_id``
-        for every snapshot in (from_snapshot_id, to_snapshot_id], walked
-        along the parent chain. Iceberg parity throughout:
+        """ROW-LEVEL changelog scan (Iceberg's ``create_changelog_view``
+        procedure; the Delta sibling is ``DeltaLog.change_feed``): table
+        rows + ``_change_type`` ('insert'/'delete') + ``_change_ordinal`` +
+        ``_commit_snapshot_id`` for every snapshot in (from_snapshot_id,
+        to_snapshot_id], walked along the parent chain. Iceberg parity:
 
         - an upsert (equality-delete + data files in one snapshot) emits
           the killed old rows as 'delete' and the new rows as 'insert' —
@@ -1484,23 +1409,37 @@ class IcebergTable:
           which its procedure also leaves off by default;
         - 'replace' snapshots (rewrite_data_files / compact_file_groups)
           emit NOTHING — a compaction is not a logical change;
-        - a data file REMOVED by a snapshot emits only its rows still
-          LIVE at the parent snapshot (rows already dead under older
-          position deletes died in an earlier ordinal — re-emitting them
-          would double-delete);
-        - NEW delete files emit the rows they kill in older-sequence data
-          files, resolved through the same distributed position/equality
-          machinery the net-count scan uses (equality deletes via the
-          data-assisted path, ``apply_equality_deletes=False`` to refuse).
+        - a data file REMOVED by a snapshot emits its rows still live at
+          the parent snapshot;
+        - NEW delete files emit the rows they kill in the parent's live
+          data files that were still live there (equality deletes through
+          the data-assisted scan, ``apply_equality_deletes=False`` to
+          refuse). A row killed again by a later delete is not emitted
+          again.
 
-        ``identifier_fields`` (r14 — create_changelog_view's
-        identifier-columns mode / ChangelogIterator.computeUpdates): when
-        given, a same-key delete+insert within one snapshot pairs into
+        Flow. A driver pass over the chain's avro metadata decodes each
+        snapshot's OWN data and delete manifests (O(commit)) and its
+        parent's delete manifests. One pooled collect then fetches, for
+        the whole chain, the parent data files a new delete or a removal
+        can reach as ``(path, data sequence number)``. Everything else is
+        Spark's parquet scan, tagged with ``_metadata.file_path`` and
+        ``_metadata.row_index``: inserted rows are a scan of the added
+        files; deleted rows are a scan of the removed files, or of the
+        parent's files semi-joined against the new position deletes
+        (``(file_path, pos)``) and equality deletes (null-safe on the key
+        columns, under delete_seq > data_seq). Both anti-join the parent's
+        own delete files, so a row already dead at the parent is never
+        emitted. No row passes through Python and no data file is read
+        twice.
+
+        ``identifier_fields`` (create_changelog_view's identifier-columns
+        mode / ChangelogIterator.computeUpdates): when given, a same-key
+        delete+insert within one snapshot pairs into
         ``update_preimage``/``update_postimage``. One extra shuffle on
         (ordinal, keys); keys are assumed unique per snapshot, exactly
         what Iceberg's iterator assumes. Default off — bare parity.
 
-        ``net_changes`` (r14 — create_changelog_view's net_changes /
+        ``net_changes`` (create_changelog_view's net_changes /
         ChangelogIterator.removeNetCarryovers): only the NET change per
         row CONTENT across the whole range survives — an insert later
         deleted (or a delete later re-inserted identically, the
@@ -1509,15 +1448,6 @@ class IcebergTable:
         on the full row content. Mutually exclusive with
         ``identifier_fields``, exactly as the procedure refuses
         compute_updates + net_changes together.
-
-        Chain scaling (r14): dead-position state is carried INCREMENTALLY
-        along the walk — one full reconstruction at the chain's start (if
-        the walk begins mid-history), then each snapshot's killed
-        positions (already resolved for its own delete emission, pinned
-        with persist()) accumulate into the running state. The r13 form
-        re-ran ``snapshot_with_deleted_positions(parent)`` per
-        removed-file snapshot, re-decoding the same delete files
-        O(chain) times.
 
         The reference has no changelog surface at all (file-level change
         scan only, IcebergSourceClient.java:169-194)."""
@@ -1555,121 +1485,6 @@ class IcebergTable:
             ]
         )
 
-        def rows_of(paths_df: DataFrame, drop_positions: Optional[DataFrame]):
-            """Full rows of the given files, minus the given dead
-            positions — read per file on executors."""
-            if drop_positions is not None:
-                src = paths_df.join(
-                    drop_positions.groupBy("path").agg(
-                        F.collect_list("pos").alias("_dead")
-                    ),
-                    "path",
-                    "left",
-                )
-            else:
-                src = paths_df.withColumn(
-                    "_dead", F.lit(None).cast("array<long>")
-                )
-
-            def read(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                import numpy as _np
-                import pyarrow.parquet as _pq
-
-                for pdf in batches:
-                    for p, dead in zip(pdf["path"], pdf["_dead"]):
-                        t = _pq.read_table(p)
-                        if dead is not None and len(dead):
-                            keep = _np.setdiff1d(
-                                _np.arange(len(t), dtype=_np.int64),
-                                _np.asarray(dead, dtype=_np.int64),
-                            )
-                            t = t.take(keep)
-                        yield t.to_pandas(integer_object_nulls=True)
-
-            return src.select("path", "_dead").mapInPandas(read, schema)
-
-        def rows_at(positions: DataFrame):
-            """'delete' rows at the given TAGGED (path, pos, ordinal,
-            snapshot-id) positions — ONE groupBy shuffle and one read per
-            file for the WHOLE chain (r14; the r13 form ran a separate
-            shuffle per snapshot, so an N-commit changelog paid N stage
-            round-trips of pure scheduling)."""
-
-            def read_pos(key, pdf: pd.DataFrame) -> pd.DataFrame:
-                import numpy as _np
-                import pyarrow.parquet as _pq
-
-                order = _np.argsort(pdf["pos"].to_numpy(), kind="stable")
-                t = _pq.read_table(key[0]).take(pdf["pos"].to_numpy()[order])
-                df = t.to_pandas(integer_object_nulls=True)
-                df["_change_type"] = "delete"
-                df["_change_ordinal"] = pdf["_change_ordinal"].to_numpy()[order]
-                df["_commit_snapshot_id"] = (
-                    pdf["_commit_snapshot_id"].to_numpy()[order]
-                )
-                return df
-
-            return positions.groupBy("path").applyInPandas(read_pos, out_schema)
-
-        def counts_or_none(records: list[dict], *keys: str) -> Optional[int]:
-            """Sum the first present count field per manifest record;
-            None when EVERY record omits them all (v1 manifest lists may
-            — treating absent as zero would silently drop a foreign
-            snapshot's changes, ADVICE r13) so the caller opens the gate
-            and lets the subtree resolve lazily."""
-            vals = []
-            for m in records:
-                v = next((m.get(k) for k in keys if m.get(k) is not None), None)
-                vals.append(v)
-            if vals and all(v is None for v in vals):
-                return None
-            return sum(int(v) for v in vals if v is not None)
-
-        frames = []
-        # incremental dead-position state along the walk: one full
-        # reconstruction at the chain's start, then each snapshot's own
-        # killed positions accumulate into ONE running frame (persisted
-        # killed frames are reused by every later snapshot's prior_dead
-        # AND the final union, so each delete file decodes once per
-        # changelog). The running frame's lineage is truncated with a
-        # lazy localCheckpoint every few unions (r15 — the r14 form
-        # re-unioned the whole killed list PER SNAPSHOT, building
-        # ~N²/2 plan nodes over an N-commit walk; at N≈5k Catalyst
-        # analysis alone would dominate).
-        persisted: list[DataFrame] = []
-        killed_tagged: list[DataFrame] = []
-        dead_state: Optional[DataFrame] = None
-        dead_since_ckpt = 0
-        initial_dead: Optional[DataFrame] = None
-        initial_dead_done = False
-
-        def state_before(removed: DataFrame) -> Optional[DataFrame]:
-            nonlocal initial_dead, initial_dead_done
-            if not initial_dead_done:
-                initial_dead_done = True
-                p0 = chain[0].get("parent-snapshot-id")
-                if p0 is not None and p0 in by_id:
-                    _, initial_dead = self.snapshot_with_deleted_positions(
-                        p0, apply_equality_deletes=apply_equality_deletes
-                    )
-            parts = [
-                p for p in (initial_dead, dead_state) if p is not None
-            ]
-            if not parts:
-                return None
-            dead = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-            # files removed along the walk can't be in `removed` again
-            # (paths are unique), so stale pairs wash out in this join
-            return dead.join(removed, "path", "left_semi")
-
-        # ---- PRE-PASS (r14): one driver walk over the chain's tiny avro
-        # metadata harvests, per non-replace snapshot, its manifest split
-        # plus (a) every parent manifest's (path, seq) pair for ONE pooled
-        # base decode and (b) every equality-delete descriptor for ONE
-        # pooled tuple-read job. The r13 loop decoded the parent's
-        # manifests and collected eq tuples PER SNAPSHOT — a 100-commit
-        # chain profiled ~46 s of driver wall in those collect jobs alone
-        # and re-decoded the same manifests O(chain) times at execution.
         mlist_cache: dict[str, list] = {}
 
         def manifest_list(snap_: dict) -> list:
@@ -1678,175 +1493,102 @@ class IcebergTable:
                 mlist_cache[lp] = read_container(lp)[1]
             return mlist_cache[lp]
 
-        prep = []
-        parent_pairs: dict[str, int] = {}
-        parent_paths_by_sid: dict[int, list[str]] = {}
-        eq_descs: list[tuple] = []
-        has_eq_by_sid: dict[int, bool] = {}
+        # ---- driver pass: own manifests and the parent's delete files
+        delete_cache: dict[str, list[_DeleteFile]] = {}
+        steps = []
+        parent_seq: dict[str, int] = {}
+        kill_manifests: set[str] = set()
+        removed_paths: set[str] = set()
         for ordinal, snap in enumerate(chain):
-            sid = snap["snapshot-id"]
             if (snap.get("summary") or {}).get("operation") == "replace":
                 continue
+            sid = snap["snapshot-id"]
             data, deletes = _split_manifests(manifest_list(snap))
-            own_data = [
-                m["manifest_path"]
-                for m in data
-                if m.get("added_snapshot_id") == sid
-            ]
-            own_deletes = [
-                m for m in deletes if m.get("added_snapshot_id") == sid
-            ]
-            parent = snap.get("parent-snapshot-id")
-            prep.append((ordinal, sid, data, own_data, own_deletes, parent))
-            if own_deletes and parent is not None and parent in by_id:
-                pdata, _ = _split_manifests(manifest_list(by_id[parent]))
-                paths = []
-                for m in pdata:
-                    parent_pairs[m["manifest_path"]] = m.get(
-                        "sequence_number", 0
+            added, removed = [], []
+            for m in data:
+                if m.get("added_snapshot_id") != sid:
+                    continue
+                for e in read_container(m["manifest_path"])[1]:
+                    if e["status"] == STATUS_ADDED:
+                        added.append(e["data_file"]["file_path"])
+                    elif e["status"] == STATUS_DELETED:
+                        removed.append(e["data_file"]["file_path"])
+            parent = by_id.get(snap.get("parent-snapshot-id"))
+            new: list[_DeleteFile] = []
+            prior: list[_DeleteFile] = []
+            pmanifests: list[str] = []
+            if parent is not None:
+                new = _delete_files(
+                    [m for m in deletes if m.get("added_snapshot_id") == sid],
+                    apply_equality_deletes,
+                    delete_cache,
+                )
+                pdata, pdeletes = _split_manifests(manifest_list(parent))
+                if new or removed:
+                    prior = _delete_files(
+                        pdeletes, apply_equality_deletes, delete_cache
                     )
-                    paths.append(m["manifest_path"])
-                parent_paths_by_sid[sid] = paths
-                # driver-ok: the snapshot's OWN delete manifests are tiny
-                # avro files — harvesting eq-delete descriptors here both
-                # hands _deleted_positions the presence flag (no isEmpty
-                # probe job) and feeds the pooled tuple read below
-                has_eq = False
-                for m in own_deletes:
-                    mseq = m.get("sequence_number", 0)
-                    for e in read_container(m["manifest_path"])[1]:
-                        if e.get("status") not in (
-                            STATUS_ADDED, STATUS_EXISTING
-                        ):
-                            continue
-                        df_ = e["data_file"]
-                        if (
-                            df_.get("content", _CONTENT_POSITION_DELETES)
-                            != _CONTENT_EQUALITY_DELETES
-                        ):
-                            continue
-                        has_eq = True
-                        eseq = e.get("sequence_number")
-                        eq_descs.append(
-                            (
-                                df_["file_path"],
-                                int(mseq if eseq is None else eseq),
-                                int(_CONTENT_EQUALITY_DELETES),
-                                [int(x) for x in (df_.get("equality_ids") or [])],
-                                sid,
-                            )
-                        )
-                has_eq_by_sid[sid] = has_eq
+                if new or (removed and prior):
+                    pmanifests = [m["manifest_path"] for m in pdata]
+                    for m in pdata:
+                        parent_seq[m["manifest_path"]] = m.get("sequence_number", 0)
+                    if new:
+                        kill_manifests.update(pmanifests)
+                    if prior:
+                        removed_paths.update(removed)
+            steps.append((ordinal, sid, added, removed, new, prior, pmanifests))
 
-        all_base = None
-        if parent_pairs:
-            # decode every parent-referenced manifest ONCE for the whole
-            # chain (persisted); per-snapshot parent states are isin
-            # slices of this one frame
-            all_base = self._decode_manifests(
-                sorted(parent_pairs), ice_schema, spec,
+        # ---- ONE pooled job: the parent files a kill or removal reaches
+        live: dict[str, list[tuple[str, int]]] = {}
+        if parent_seq:
+            pooled = self._decode_manifests(
+                sorted(parent_seq), ice_schema, spec,
                 statuses=(STATUS_ADDED, STATUS_EXISTING),
-                seq_by_manifest=parent_pairs,
+                seq_by_manifest=parent_seq,
                 emit_manifest_path=True,
-            ).persist()
-            persisted.append(all_base)
-        eq_rows_by_sid: dict[int, list] = {}
-        if eq_descs and apply_equality_deletes:
-            eqdf = local_rows_df(
-                self.spark,
-                eq_descs,
-                "delete_path string, delete_seq long, content int, "
-                "equality_ids array<int>, _sid long",
-                slices=len(eq_descs),
             )
-            # driver-ok: ONE job over the whole chain's eq-delete files;
-            # one row per file, bytes capped in _eq_match_from_rows
-            for r in self._read_eq_tuples(eqdf, ice_schema).collect():
-                eq_rows_by_sid.setdefault(int(r["_sid"]), []).append(r)
+            reach = F.col("_manifest").isin(sorted(kill_manifests))
+            if removed_paths:
+                reach = reach | F.col("path").isin(sorted(removed_paths))
+            # driver-ok: one (path, seq) row per reachable parent data
+            # file — the parquet scans below need the file list
+            for r in pooled.where(reach).select("path", "_seq", "_manifest").collect():
+                live.setdefault(r["_manifest"], []).append(
+                    (r["path"], int(r["_seq"]))
+                )
 
-        for ordinal, sid, data, own_data, own_deletes, parent in prep:
+        cols = [F.col(f"`{n}`") for n in schema.fieldNames()]
+        frames = []
+        for ordinal, sid, added, removed, new, prior, pmanifests in steps:
 
             def stamp(df: DataFrame, change: str) -> DataFrame:
-                return (
-                    df.withColumn("_change_type", F.lit(change))
-                    .withColumn("_change_ordinal", F.lit(ordinal))
-                    .withColumn("_commit_snapshot_id", F.lit(sid).cast("long"))
+                return df.select(
+                    *cols,
+                    F.lit(change).alias("_change_type"),
+                    F.lit(ordinal).alias("_change_ordinal"),
+                    F.lit(sid).cast("long").alias("_commit_snapshot_id"),
                 )
 
-            # gate every subtree on the manifest-list COUNT RECORDS
-            # (driver-held metadata, zero Spark jobs) — the r13 bench
-            # showed per-snapshot isEmpty() probes made this the
-            # registry's slowest plan; all row reads now execute lazily
-            # inside the final union's single job. None = counts absent
-            # (optional in v1) — open the gate rather than drop changes.
-            own_records = [
-                m for m in data if m.get("added_snapshot_id") == sid
-            ]
-            n_added = counts_or_none(
-                own_records, "added_data_files_count", "added_files_count"
+            if added:
+                frames.append(
+                    stamp(self.spark.read.schema(schema).parquet(*added), "insert")
+                )
+            parent_files = [f for mp in pmanifests for f in live.get(mp, [])]
+            prior_sources = (
+                self._delete_sources(prior, ice_schema, schema) if prior else []
             )
-            n_removed = counts_or_none(
-                own_records, "deleted_data_files_count", "deleted_files_count"
-            )
-            if own_data and (n_added is None or n_added):
-                added = self._decode_manifests(
-                    own_data, ice_schema, spec, statuses=(STATUS_ADDED,)
-                ).select("path")
-                frames.append(stamp(rows_of(added, None), "insert"))
-            if own_data and (n_removed is None or n_removed):
-                removed = self._decode_manifests(
-                    own_data, ice_schema, spec, statuses=(STATUS_DELETED,)
-                ).select("path")
-                # rows already dead BEFORE this snapshot don't die again
-                prior_dead = (
-                    state_before(removed)
-                    if parent is not None and parent in by_id
-                    else None
-                )
-                frames.append(stamp(rows_of(removed, prior_dead), "delete"))
-            if own_deletes and parent is not None and parent in by_id:
-                # what the new delete files kill in OLDER-sequence files,
-                # resolved against the parent state; the frame rides the
-                # union unconditionally — resolving to zero positions
-                # costs nothing beyond plan size
-                pbase = all_base.where(
-                    F.col("_manifest").isin(parent_paths_by_sid[sid])
-                ).drop("_manifest")
-                killed = self._deleted_positions(
-                    pbase, own_deletes, ice_schema=ice_schema,
-                    apply_equality=apply_equality_deletes,
-                    has_equality=has_eq_by_sid[sid],
-                    eq_tuple_rows=(
-                        eq_rows_by_sid.get(sid, [])
-                        if apply_equality_deletes
-                        else None
-                    ),
-                ).persist()
-                persisted.append(killed)
-                # running dead-state: ONE frame, lineage truncated every
-                # 16 unions (lazy localCheckpoint — no job at build
-                # time; blocks are ContextCleaner-scoped)
-                dead_state = (
-                    killed
-                    if dead_state is None
-                    else dead_state.unionByName(killed)
-                )
-                dead_since_ckpt += 1
-                if dead_since_ckpt >= 16:
-                    dead_state = dead_state.localCheckpoint(eager=False)
-                    dead_since_ckpt = 0
-                killed_tagged.append(
-                    killed.withColumn("_change_ordinal", F.lit(ordinal))
-                    .withColumn("_commit_snapshot_id", F.lit(sid).cast("long"))
-                )
+            gone = set(removed)
+            if removed:
+                seqs = [f for f in parent_files if f[0] in gone]
+                rows = self._rows(schema, removed, seqs if prior_sources else None)
+                frames.append(stamp(_surviving(rows, prior_sources), "delete"))
+            candidates = [f for f in parent_files if f[0] not in gone]
+            if new and candidates:
+                rows = self._rows(schema, [p for p, _ in candidates], candidates)
+                killed = _killed(rows, self._delete_sources(new, ice_schema, schema))
+                frames.append(stamp(_surviving(killed, prior_sources), "delete"))
 
-        if killed_tagged:
-            allk = killed_tagged[0]
-            for k in killed_tagged[1:]:
-                allk = allk.unionByName(k)
-            frames.append(rows_at(allk))
         if not frames:
-            _unpersist_quietly(persisted)
             return local_rows_df(self.spark, [], out_schema)
         out = frames[0]
         for f in frames[1:]:
@@ -1918,16 +1660,6 @@ class IcebergTable:
                 )
                 .drop("_net", "_rk")
             )
-        if persisted:
-            # scope the pooled caches to the RETURNED frame's lifetime
-            # (r15 — they were persisted and never released, so a
-            # long-lived service calling changelog() per commit
-            # accumulated cached partitions unboundedly): when the
-            # caller drops the result, the finalizer unpersists every
-            # pooled frame.
-            import weakref
-
-            weakref.finalize(out, _unpersist_quietly, list(persisted))
         return out
 
     def properties(self) -> dict[str, str]:
@@ -2586,7 +2318,7 @@ class IcebergTable:
         else:
             keyed = distinct.withColumn("_pk", F.lit("{}"))
 
-        def write_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def write_group(key, pdf):
             import pyarrow as pa
             import pyarrow.parquet as pq
 
@@ -3109,7 +2841,7 @@ class IcebergTable:
         data_dir = os.path.join(table_path, "data")
         os.makedirs(data_dir, exist_ok=True)
 
-        def rewrite(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def rewrite(key, pdf):
             import numpy as np
             import pyarrow.parquet as pq
 

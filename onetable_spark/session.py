@@ -50,6 +50,16 @@ def local_rows_df(spark: SparkSession, rows, schema, slices: int | None = None):
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, slices), schema)
 
 
+def local_path(uri):
+    """A scan's file URI column (``input_file_name()``,
+    ``_metadata.file_path``: ``file:///…``, percent-encoded) folded back
+    to the plain absolute path that log actions and manifest entries
+    carry, so scanned rows join against them."""
+    from pyspark.sql import functions as F
+
+    return F.regexp_replace(F.url_decode(uri), r"^file:/+", "/")
+
+
 def get_spark(app_name: str = "onetable_spark", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-conscious defaults."""
     if cpus is None:
@@ -73,6 +83,13 @@ def get_spark(app_name: str = "onetable_spark", cpus: int | None = None) -> Spar
         # events.parquet carries TIMESTAMP(NANOS) which Spark's vectorized
         # reader rejects; read as epoch-nanos long and convert in load_table.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Python workers unpickle UDFs that reference this package's
+        # functions by module: put the package's parent on their path, so a
+        # driver started outside the checkout runs them too
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

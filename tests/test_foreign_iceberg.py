@@ -386,14 +386,14 @@ def test_equality_deletes_translate_to_delta_dvs(spark, sf_dir, tmp_path):
 def test_nested_equality_deletes_match_by_dot_path(spark, tmp_path):
     """r12: equality ids pointing INSIDE a struct resolve through the
     canonical dot-path vocabulary (IcebergSchemaExtractor.java:137-141)
-    — the data-assisted scan projects the leaf on both sides via pyarrow
-    dataset field refs and kills exactly the matching rows. Exercises
-    _equality_match_positions directly over hand-built nested parquet
+    — the data-assisted scan projects the leaf on both sides of a
+    null-safe Spark join and kills exactly the matching rows. Exercises
+    _equality_positions directly over hand-built nested parquet
     (the foreign fixture tool is flat-region-shaped)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from onetable_spark.formats.iceberg import _flatten_field_paths
+    from onetable_spark.formats.iceberg import _DeleteFile, _flatten_field_paths
 
     base = str(tmp_path)
     data_path = os.path.join(base, "data.parquet")
@@ -434,25 +434,17 @@ def test_nested_equality_deletes_match_by_dot_path(spark, tmp_path):
         1: "id", 2: "addr", 3: "addr.city", 4: "addr.zip",
     }
     tbl = IcebergTable(spark, base)
-    base_with_seq = spark.createDataFrame(
-        [(data_path, 1)], "path string, _seq long"
-    )
-    eq_files = spark.createDataFrame(
-        [(del_path, 2, 2, [3])],
-        "delete_path string, delete_seq long, content int, equality_ids array<int>",
-    )
-    hits = tbl._equality_match_positions(base_with_seq, eq_files, ice_schema)
+    base_with_seq = [(data_path, 1)]
+    eq_files = [_DeleteFile(del_path, 2, 2, (3,), 2)]
+    hits = tbl._equality_positions(base_with_seq, eq_files, ice_schema)
     # city='aa' kills positions 0 and 2; the null-city delete tuple kills
     # position 3 (null matches null — StructLikeSet parity)
     assert sorted(r["pos"] for r in hits.collect()) == [0, 2, 3]
 
     # an id under the struct but unknown to the schema refuses loudly
-    bad = spark.createDataFrame(
-        [(del_path, 2, 2, [99])],
-        "delete_path string, delete_seq long, content int, equality_ids array<int>",
-    )
+    bad = [_DeleteFile(del_path, 2, 2, (99,), 2)]
     with pytest.raises(Exception, match="not a top-level column or nested"):
-        tbl._equality_match_positions(base_with_seq, bad, ice_schema).collect()
+        tbl._equality_positions(base_with_seq, bad, ice_schema).collect()
 
 
 def test_rewrite_data_files_applies_deletes_and_drops_them(spark, sf_dir, tmp_path):

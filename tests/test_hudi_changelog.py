@@ -211,3 +211,28 @@ def test_changelog_round_trips_date_and_timestamp_upserts(spark, tmp_path):
         ("u", *r) for r in map(tuple, batch.collect())
     }
     assert got == want
+
+
+def test_hudi_writers_emit_no_type_hint_warning(spark, mor_table):
+    """No pandas function on the upsert, delete-log or compaction path
+    carries partial type hints, so none emits pyspark's eval-type
+    inference warning."""
+    import warnings
+
+    import pyarrow.parquet as pq
+
+    base, tl = mor_table
+    target = tl.snapshot_files().collect()[0]["path"]
+    ids = pq.read_table(target, columns=["id"])["id"].to_pylist()
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        tl.upsert_records(
+            spark.createDataFrame([(2, "name2_v2"), (9, "nine")], "id long, name string")
+        )
+        tl.commit_delete_logs(
+            spark.createDataFrame([(target, ids.index(4))], "path string, pos long")
+        )
+        tl.compact_file_groups()
+    assert not [
+        w for w in caught if "Cannot infer the eval type" in str(w.message)
+    ]

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -776,3 +777,14 @@ def test_read_optimized_states_before_incremental_walk(spark, tmp_path):
     # the rollback restores fa and drops fm
     assert states["005"] == ["a.parquet", "b.parquet"]
     assert states["006"] == ["a.parquet", "b.parquet", "c.parquet"]
+
+
+def test_hudi_last_modified_is_epoch_millis(spark, seeded_hudi):
+    """ADVICE(low): last_modified_millis is epoch millis, not the instant
+    literal cast to long."""
+    tl = HudiTimeline(spark, seeded_hudi)
+    row = tl.snapshot_files().first()
+    instant = tl.latest_instant()
+    assert row["last_modified_millis"] == instant_to_millis(instant)
+    # sanity: within a day of now, not a 2e16 yyyyMMdd literal
+    assert abs(row["last_modified_millis"] - time.time() * 1000) < 86_400_000

@@ -201,10 +201,11 @@ def test_changelog_net_changes(spark, v2_table):
 
 
 def test_changelog_plan_builds_with_one_pooled_job(spark, v2_table):
-    """r14: plan construction over an N-upsert chain schedules exactly
-    ONE Spark job — the chain-wide pooled equality-tuple collect. The
-    r13 form ran one collect per snapshot (cProfile: ~46 s of a
-    100-commit walk) plus an isEmpty probe each."""
+    """Plan construction over an N-upsert chain schedules exactly ONE
+    Spark job — the chain-wide pooled collect of the parent data files a
+    new delete can reach, as (path, data sequence number). The r13 form
+    ran one collect per snapshot (cProfile: ~46 s of a 100-commit walk)
+    plus an isEmpty probe each."""
     base, ice = v2_table
     for k in range(3):
         _write_parquet(
@@ -289,3 +290,58 @@ def test_changelog_dead_state_plan_is_bounded(spark, v2_table):
     # each deleted row dies exactly once
     deletes = [r for r in log.collect() if r["_change_type"] == "delete"]
     assert len(deletes) == len({(r["id"], r["_change_ordinal"]) for r in deletes})
+
+
+def test_changelog_does_not_redelete_a_row_dead_at_the_parent(spark, v2_table):
+    """Upsert key 2 twice: the second snapshot's equality delete also
+    matches the original (2, name2), which already died in the first
+    upsert. Only rows still live at the parent may come out as deletes —
+    for the one snapshot alone and along the whole chain."""
+    base, ice = v2_table
+    for k, name in enumerate(["v1", "v2"]):
+        path = os.path.join(base, f"r{k}.parquet")
+        _write_parquet([(2, name)], ["id", "name"], path)
+        ice.commit_upsert(build_inventory(spark, [path], root=base), ["id"])
+    first_upsert = ice.metadata()["snapshots"][1]["snapshot-id"]
+    one = ice.changelog(from_snapshot_id=first_upsert).collect()
+    assert sorted(
+        (r["_change_type"], r["_change_ordinal"], r["id"], r["name"]) for r in one
+    ) == [("delete", 0, 2, "v1"), ("insert", 0, 2, "v2")]
+    deletes = sorted(
+        (r["_change_ordinal"], r["name"])
+        for r in ice.changelog().collect()
+        if r["_change_type"] == "delete"
+    )
+    assert deletes == [(1, "name2"), (2, "v1")]
+
+
+def test_upsert_changelog_runs_few_jobs_and_no_python_row_stage(spark, v2_table):
+    """The changelog of one upsert snapshot reads rows, position deletes
+    and equality matches through Spark's parquet scan: plan build plus
+    collect() stay within 5 Spark jobs, and the returned plan holds at
+    most one Python operator (the only Python left is the parent-manifest
+    decode inside the plan-build collect)."""
+    import re
+
+    base, ice = v2_table
+    before = ice.metadata()["current-snapshot-id"]
+    path = os.path.join(base, "u1.parquet")
+    _write_parquet([(2, "name2_v2"), (9, "nine")], ["id", "name"], path)
+    ice.commit_upsert(build_inventory(spark, [path], root=base), ["id"])
+    sc = spark.sparkContext
+    sc.setJobGroup("ice_upsert_changelog", "one-snapshot changelog")
+    try:
+        feed = ice.changelog(from_snapshot_id=before)
+        rows = feed.collect()
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup("ice_upsert_changelog")
+    assert len(jobs) <= 5, f"{len(jobs)} jobs for one upsert snapshot"
+    assert sorted((r["_change_type"], r["id"], r["name"]) for r in rows) == [
+        ("delete", 2, "name2"), ("insert", 2, "name2_v2"), ("insert", 9, "nine"),
+    ]
+    plan = feed._jdf.queryExecution().executedPlan().toString()
+    python_ops = re.findall(
+        r"MapInPandas|FlatMapGroupsInPandas|MapInArrow|EvalPython", plan
+    )
+    assert len(python_ops) <= 1, plan

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from onetable_spark.formats.iceberg import (
+    CommitConflictError,
     IcebergTable,
     iceberg_to_structtype,
     structtype_to_iceberg,
@@ -921,6 +922,30 @@ def _init_iceberg(spark, base, schema, format_version=1):
     return ice
 
 
+def test_position_deletes_and_rewrite_emit_no_type_hint_warning(spark, sf_dir, tmp_path):
+    """No pandas function on the position-delete commit or the
+    rewrite_data_files path carries partial type hints, so neither emits
+    pyspark's eval-type inference warning."""
+    import warnings
+
+    base = str(tmp_path / "hints")
+    os.makedirs(base)
+    src = os.path.join(sf_dir, "region.parquet")
+    f1 = os.path.join(base, "f1.parquet")
+    shutil.copy(src, f1)
+    ice = _init_iceberg(spark, base, spark.read.parquet(src).schema, format_version=2)
+    ice.commit_overwrite(adds=build_inventory(spark, [f1], root=base))
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        ice.commit_position_deletes(
+            spark.createDataFrame([(f1, 0), (f1, 2)], "path string, pos long")
+        )
+        assert ice.rewrite_data_files() is not None
+    assert not [
+        w for w in caught if "Cannot infer the eval type" in str(w.message)
+    ]
+
+
 def test_publish_branch_refuses_non_fast_forward(spark, sf_dir, tmp_path):
     base = str(tmp_path / "ff")
     os.makedirs(base)
@@ -1008,3 +1033,71 @@ def test_upsert_commit_path_has_manifest_guard(spark, sf_dir, tmp_path):
     )
     with pytest.raises(ValueError, match="manifest guard"):
         ice.commit_upsert(up_adds, key_fields=["r_regionkey"])
+
+
+def test_iceberg_overwrite_emits_deleted_entries(spark, sf_dir, tmp_path):
+    """ADVICE(medium): removed files appear as STATUS_DELETED entries, so a
+    downstream IcebergSource sees the deletions incrementally."""
+    table_path = str(tmp_path / "ice")
+    os.makedirs(table_path)
+    for n in ("a", "b"):
+        shutil.copy(os.path.join(sf_dir, "region.parquet"), os.path.join(table_path, f"{n}.parquet"))
+    schema = spark.read.parquet(table_path).schema
+    ice = IcebergTable(spark, table_path)
+    ice.init_table(
+        Table(name="ice", base_path=table_path, table_format=TableFormat.ICEBERG, read_schema=schema)
+    )
+    inv = inventory_from_directory(spark, table_path)
+    ice.commit_overwrite(adds=inv, schema=schema)
+
+    doomed = inv.orderBy("path").limit(1)
+    sid = ice.commit_overwrite(removes=doomed, schema=schema)
+
+    change = ice.changes_for_snapshot(sid)
+    removed = [r["path"] for r in change.diff.removed.collect()]
+    assert removed == [doomed.first()["path"]]
+    # live snapshot no longer contains it
+    live = {r["path"] for r in ice.snapshot_files().collect()}
+    assert doomed.first()["path"] not in live and len(live) == 1
+
+
+def test_iceberg_id_keyed_schema_and_spec_lookup():
+    """ADVICE(medium): schema-id / spec-id are identifiers, not positions."""
+    md = {
+        "schemas": [
+            {"schema-id": 7, "type": "struct", "fields": [{"id": 1, "name": "x", "required": False, "type": "long"}]},
+            {"schema-id": 2, "type": "struct", "fields": [{"id": 1, "name": "old", "required": False, "type": "int"}]},
+        ],
+        "current-schema-id": 7,
+        "partition-specs": [
+            {"spec-id": 4, "fields": [{"name": "p", "transform": "identity", "source-id": 1, "field-id": 1000}]},
+            {"spec-id": 0, "fields": []},
+        ],
+        "default-spec-id": 4,
+    }
+    assert IcebergTable._schema_for(md)["fields"][0]["name"] == "x"
+    assert IcebergTable._spec_for(md)[0]["name"] == "p"
+    with pytest.raises(ValueError):
+        IcebergTable._schema_for({**md, "current-schema-id": 99})
+
+
+def test_iceberg_metadata_version_claim_is_exclusive(spark, sf_dir, tmp_path):
+    """ADVICE(medium): two committers racing from the same base version —
+    the second claim of v(N+1) must fail, not silently clobber."""
+    table_path = str(tmp_path / "race")
+    os.makedirs(table_path)
+    shutil.copy(os.path.join(sf_dir, "region.parquet"), os.path.join(table_path, "r.parquet"))
+    schema = spark.read.parquet(table_path).schema
+    ice = IcebergTable(spark, table_path)
+    ice.init_table(
+        Table(name="race", base_path=table_path, table_format=TableFormat.ICEBERG, read_schema=schema)
+    )
+    md = ice.metadata()
+    v = ice.current_version()
+    ice._write_metadata(v + 1, md)
+    with pytest.raises(CommitConflictError):
+        ice._write_metadata(v + 1, md)
+    # commit_overwrite re-reads and lands on the NEXT version instead
+    sid = ice.commit_overwrite(adds=inventory_from_directory(spark, table_path), schema=schema)
+    assert ice.current_snapshot_meta()["snapshot-id"] == sid
+    assert ice.current_version() == v + 2

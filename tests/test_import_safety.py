@@ -82,3 +82,37 @@ def test_threaded_function_body_imports_after_queries_import():
         [sys.executable, "-c", script], capture_output=True, text=True, timeout=180
     )
     assert proc.returncode == 0, proc.stderr
+
+
+def test_udf_runs_with_the_driver_outside_the_checkout(tmp_path):
+    """A session from ``get_spark`` ships the package to its Python
+    workers: a mapInPandas function that calls an ``onetable_spark``
+    function (pickled by module reference) runs from a driver whose cwd
+    is outside the checkout, where the workers would otherwise fail with
+    ModuleNotFoundError."""
+    import os
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {str(root)!r})
+        from onetable_spark.formats.iceberg import _flat_fields
+        from onetable_spark.session import get_spark
+
+        def count_fields(batches):
+            for pdf in batches:
+                yield pdf.assign(n=len(_flat_fields({{"fields": [{{"name": "a", "id": 1}}]}})))
+
+        spark = get_spark("worker-path", cpus=1)
+        rows = spark.range(2).mapInPandas(count_fields, "id long, n long").collect()
+        assert [r["n"] for r in rows] == [1, 1], rows
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]

@@ -3,6 +3,8 @@ multimodal)."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -758,3 +760,28 @@ def test_ols_closed_form_matches_numpy(spark, xy):
     slope, intercept = np.linalg.lstsq(A, b, rcond=None)[0]
     assert abs(row["slope"] - slope) < 1e-7 * max(1.0, abs(slope))
     assert abs(row["intercept"] - intercept) < 1e-6 * max(1.0, abs(intercept))
+
+
+def test_checkerboard_near_dup_matches_broadcast_reference(spark, sf_dir):
+    """The blocked all-pairs GEMM must produce the exact pair set of a
+    naive bucket-free quadratic check (on the small sf)."""
+    from onetable_spark.functions.similarity import brute_force_near_dup_pairs, cosine
+
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    got = {
+        (r["id_a"], r["id_b"])
+        for r in brute_force_near_dup_pairs(emb, threshold=0.3, n_blocks=3).collect()
+    }
+    a, b = emb.alias("a"), emb.alias("b")
+    want = {
+        (r["id_a"], r["id_b"])
+        for r in a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
+        .select(
+            F.col("a.vec_id").alias("id_a"),
+            F.col("b.vec_id").alias("id_b"),
+            F.round(cosine(F.col("a.embedding"), F.col("b.embedding")), 4).alias("c"),
+        )
+        .filter(F.col("c") >= 0.3)
+        .collect()
+    }
+    assert got == want and len(want) > 0

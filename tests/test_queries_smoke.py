@@ -101,3 +101,18 @@ def test_entry_contract(spark):
     df = e.entry(spark)
     assert df.count() >= 0
     assert set(e.oracle_sql()) <= set(e.queries())
+
+
+def test_no_driver_collect_in_query_paths():
+    """Scale guard: no unbounded driver materialization in operator/query
+    code. A site must carry a ``# driver-ok:`` justification (same or
+    preceding line) AND fit the reviewed per-file allowance in
+    tools/check_plans.py; a glib marker alone cannot self-certify a new
+    collect — adding one forces an edit there, i.e. a review of its
+    boundedness argument."""
+    import pathlib
+
+    from tools.check_plans import check_no_driver_materialization
+
+    offenders = check_no_driver_materialization(pathlib.Path(__file__).parent.parent)
+    assert not offenders, "driver-side materialization in query path:\n" + "\n".join(offenders)

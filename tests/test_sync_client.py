@@ -6,6 +6,7 @@ files through each format's snapshot and assert row-identical DataFrames
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import time
@@ -14,7 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from onetable_spark.formats.delta import DeltaLog
-from onetable_spark.formats.hudi import HudiTimeline
+from onetable_spark.formats.hudi import HudiTimeline, instant_to_millis
 from onetable_spark.formats.iceberg import IcebergTable
 from onetable_spark.model import SyncMode, SyncStatus, Table, TableFormat
 from onetable_spark.sources.parquet_inventory import build_inventory, inventory_from_directory
@@ -437,3 +438,84 @@ def test_lagging_target_catches_up_while_current_target_prunes(spark, sf_dir, se
         for fmt, t in ((TableFormat.ICEBERG, iceberg), (TableFormat.HUDI, hudi))
     }
     assert marks[TableFormat.ICEBERG] == marks[TableFormat.HUDI] > ice_mark_before
+
+
+def _complete_pending_commit(tl: HudiTimeline, instant: str, rel_path: str, size: int, rows: int):
+    """Finish a previously-pending instant by hand (a late-landing writer)."""
+    meta = {
+        "partitionToWriteStats": {
+            "": [
+                {
+                    "fileId": "late-file-id",
+                    "path": rel_path,
+                    "prevCommit": "null",
+                    "numWrites": rows,
+                    "numInserts": rows,
+                    "totalWriteBytes": size,
+                    "fileSizeInBytes": size,
+                    "partitionPath": "",
+                    "columnStats": None,
+                }
+            ]
+        },
+        "compacted": False,
+        "operationType": "UPSERT",
+        "extraMetadata": {},
+    }
+    with open(os.path.join(tl.hoodie_path, f"{instant}.commit"), "w") as f:
+        json.dump(meta, f)
+    for leftover in (f"{instant}.commit.requested", f"{instant}.inflight"):
+        p = os.path.join(tl.hoodie_path, leftover)
+        if os.path.exists(p):
+            os.remove(p)
+
+
+def test_incremental_sync_preserves_inflight_commits(spark, sf_dir, seeded_hudi):
+    """ADVICE(high): the first incremental sync must NOT wipe the pending-
+    commit watermark; a commit that completes after the watermark advances
+    is still synced on the next round."""
+    table_path = seeded_hudi
+    tl = HudiTimeline(spark, table_path)
+
+    # a writer starts a commit... and stalls (requested + inflight markers)
+    pending_instant = tl.new_instant()
+    open(os.path.join(tl.hoodie_path, f"{pending_instant}.commit.requested"), "w").close()
+    open(os.path.join(tl.hoodie_path, f"{pending_instant}.inflight"), "w").close()
+
+    client = SyncClient(spark)
+    source = source_for(spark, TableFormat.HUDI, table_path)
+    target = target_for(spark, TableFormat.DELTA, table_path)
+
+    r1 = client.sync(source, [target])
+    assert r1[TableFormat.DELTA].status == SyncStatus.SUCCESS
+    meta1 = target.get_sync_metadata()
+    assert instant_to_millis(pending_instant) in meta1.inflight_commits
+
+    # the watermark advances past the stalled instant via a newer commit
+    time.sleep(0.05)
+    new_file = os.path.join(table_path, "f2.parquet")
+    shutil.copy(os.path.join(sf_dir, "nation.parquet"), new_file)
+    tl.commit(adds=build_inventory(spark, [new_file], root=table_path))
+
+    r2 = client.sync(source, [target])
+    assert r2[TableFormat.DELTA].status == SyncStatus.SUCCESS
+    meta2 = target.get_sync_metadata()
+    # the incremental path must carry the still-pending instant forward
+    assert instant_to_millis(pending_instant) in meta2.inflight_commits
+    assert meta2.last_instant_synced_millis > meta1.last_instant_synced_millis
+
+    # the stalled writer finally lands — with its ORIGINAL (old) instant
+    late_file = os.path.join(table_path, "f3.parquet")
+    shutil.copy(os.path.join(sf_dir, "nation.parquet"), late_file)
+    _complete_pending_commit(
+        tl, pending_instant, "f3.parquet", os.path.getsize(late_file), 25
+    )
+
+    r3 = client.sync(source, [target])
+    assert r3[TableFormat.DELTA].status == SyncStatus.SUCCESS
+    from onetable_spark.formats.delta import DeltaLog
+
+    delta_paths = {r["path"] for r in DeltaLog(spark, table_path).snapshot_files().collect()}
+    assert late_file in delta_paths, "late-completing pending commit was lost"
+    # once synced, it is no longer tracked as inflight
+    assert instant_to_millis(pending_instant) not in target.get_sync_metadata().inflight_commits

@@ -8,16 +8,19 @@ materializations and broadcast builds count too — they cost the same
 scheduling latency as "real" jobs.
 
 Jobs per operation, this tool's own output: the r16 baseline, after the
-r16 upsert collapse, and after the one-pass Delta upsert (each side of the
-merge read once, commit spooled from driver-held rows):
-  delta commit (plain add)          1 ->  1 -> 1
-  delta upsert_by_key (CDF on)     34 -> 25 -> 7
-  delta change_feed + count         3 ->  3 -> 3
-  iceberg commit_overwrite          1 ->  1 -> 1
-  iceberg commit_upsert             5 ->  5 -> 4
-  iceberg eq-delete scan + count    3 ->  3 -> 3
-  iceberg changelog + count        10 (unchanged)
-  hudi commit                       4 ->  4 -> 4
+r16 upsert collapse, after the one-pass Delta upsert (each side of the
+merge read once, commit spooled from driver-held rows), and after the
+Iceberg changelog moved onto Spark's parquet scan (own manifests decoded
+on the driver, one pooled collect of the reachable parent files, no
+Python row stage; the third column's 9 is the parent re-measured):
+  delta commit (plain add)          1 ->  1 -> 1 -> 1
+  delta upsert_by_key (CDF on)     34 -> 25 -> 7 -> 7
+  delta change_feed + count         3 ->  3 -> 3 -> 3
+  iceberg commit_overwrite          1 ->  1 -> 1 -> 1
+  iceberg commit_upsert             5 ->  5 -> 4 -> 4
+  iceberg eq-delete scan + count    3 ->  3 -> 3 -> 3
+  iceberg changelog + count        10 -> 10 -> 9 -> 5
+  hudi commit                       4 ->  4 -> 4 -> 4
   sync full / incremental (2 tgt)   7 / 6 (unchanged)
 
 Usage: python tools/profile_commit_jobs.py
