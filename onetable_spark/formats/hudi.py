@@ -22,10 +22,12 @@ replacecommit ≤ t, nor its commit rolled back.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
 import uuid
+from contextlib import contextmanager
 from datetime import datetime, timezone
 from typing import Optional
 
@@ -33,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from onetable_spark.session import local_rows_df
+from onetable_spark.session import local_rows_df, tagged_rows
 
 from onetable_spark.formats.avro_schema import (
     add_id_tracking,
@@ -135,6 +137,233 @@ def instant_to_millis(instant: str) -> int:
     if len(instant) > 14:
         millis += int(instant[14:17])
     return millis
+
+
+#: the rows every Hudi writer's executor stage returns, one per written
+#: file: the write-stat facts ``_write_stat`` turns into commit JSON, plus
+#: the record keys a log author wrote (``matched``)
+_STAT_ROWS = T.StructType(
+    [
+        T.StructField("rel_path", T.StringType()),
+        T.StructField("file_id", T.StringType()),
+        T.StructField("partition_path", T.StringType()),
+        T.StructField("prev_commit", T.StringType()),
+        T.StructField("num_writes", T.LongType()),
+        T.StructField("num_inserts", T.LongType()),
+        T.StructField("num_updates", T.LongType()),
+        T.StructField("num_deletes", T.LongType()),
+        T.StructField("size", T.LongType()),
+        T.StructField("cdc_path", T.StringType()),
+        T.StructField("cdc_size", T.LongType()),
+        T.StructField("matched", T.ArrayType(T.StringType())),
+    ]
+)
+
+
+def _write_stat(row: dict, column_stats: Optional[str] = None) -> dict:
+    """One HoodieWriteStat (``partitionToWriteStats`` entry) from a
+    ``_STAT_ROWS``-shaped dict, absent counts 0; ``cdcStats`` (RFC-51)
+    only when the write authored a supplemental cdc log."""
+    stat = {
+        "fileId": row["file_id"],
+        "path": row["rel_path"],
+        "prevCommit": row["prev_commit"],
+        "numWrites": row["num_writes"],
+        "numInserts": row.get("num_inserts") or 0,
+        "numDeletes": row.get("num_deletes") or 0,
+        "numUpdateWrites": row.get("num_updates") or 0,
+        "totalWriteBytes": row["size"],
+        "fileSizeInBytes": row["size"],
+        "partitionPath": row["partition_path"],
+        "columnStats": column_stats,
+    }
+    if row.get("cdc_path"):
+        stat["cdcStats"] = {row["cdc_path"]: row["cdc_size"]}
+    return stat
+
+
+# ----------------------------------------------------------- record keys
+# Hudi's KeyGenUtils: a single-field key is the bare value
+# (SimpleKeyGenerator), a composite key ``f1:v1,f2:v2``
+# (ComplexKeyGenerator) with placeholders for NULL and empty parts; a
+# record whose key is entirely NULL or empty has no key at all.
+
+_NULL_PART = "__null__"
+_EMPTY_PART = "__empty__"
+_NO_KEY = "Hudi record has no record key"
+
+
+def _record_key(kf: list[str]):
+    """The record key of each row as a Column — the one encoding every
+    writer matches and logs by. Values are Spark's string casts; NULL
+    where the row has no key (``_required_key`` refuses those)."""
+    texts = [F.col(f).cast("string") for f in kf]
+    if len(kf) == 1:
+        return F.when(texts[0] != "", texts[0])
+    keyless = F.lit(True)
+    for t in texts:
+        keyless = keyless & (F.coalesce(t, F.lit("")) == "")
+    return F.when(
+        ~keyless,
+        F.concat_ws(
+            ",",
+            *[
+                F.concat(
+                    F.lit(f"{f}:"),
+                    F.when(t.isNull(), F.lit(_NULL_PART))
+                    .when(t == "", F.lit(_EMPTY_PART))
+                    .otherwise(t),
+                )
+                for f, t in zip(kf, texts)
+            ],
+        ),
+    )
+
+
+def _required_key(key, kf: list[str]):
+    """``key``, failing the task where it is NULL — inside the stage that
+    computes it, so refusing costs no extra Spark job;
+    ``HudiTimeline._refusing_keyless_rows`` turns the failure into a
+    ValueError."""
+    return F.coalesce(key, F.raise_error(F.lit(f"{_NO_KEY} ({', '.join(kf)})")))
+
+
+def _refuse_float_keys(table_path: str, schema: T.StructType, kf: list[str]) -> None:
+    """Refuse float/double record-key fields: Spark's cast renders them as
+    Java's ``Double.toString`` (``1.0E7``), Python as its repr
+    (``10000000.0``), so ``_record_key`` and ``_record_keys`` would differ."""
+    floats = [f.name for f in schema.fields
+              if f.name in kf and isinstance(f.dataType, (T.FloatType, T.DoubleType))]
+    if floats:
+        raise ValueError(f"{table_path}: record-key field(s) {floats} are float/double — "
+                         "Spark and Python render them differently, so keys could not match")
+
+
+def _key_text(v, tz: str) -> Optional[str]:
+    """One key value as Spark's string cast renders it (the session time
+    zone ``tz`` for instants; a naive timestamp is taken as wall clock)."""
+    import datetime as dt
+    from decimal import Decimal
+
+    if v is None:
+        return None
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, dt.datetime):
+        if v.tzinfo is not None:
+            from zoneinfo import ZoneInfo
+
+            v = v.astimezone(ZoneInfo(tz)).replace(tzinfo=None)
+        frac = f".{v.microsecond:06d}".rstrip("0") if v.microsecond else ""
+        return v.strftime("%Y-%m-%d %H:%M:%S") + frac
+    if isinstance(v, dt.date):
+        return v.isoformat()
+    if isinstance(v, Decimal):
+        return format(v, "f")
+    return str(v)
+
+
+def _record_keys(tbl, kf: list[str], tz: str):
+    """Arrow twin of ``_record_key`` for rows held in Python — the merge
+    of a file slice's base rows with its decoded log records: one string
+    per row of the pyarrow table ``tbl``, NULL where the row has no key.
+    String, integer and boolean parts are cast column-wise; other types
+    go through ``_key_text`` value by value."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def texts(col):
+        t = col.type
+        if pa.types.is_string(t) or pa.types.is_integer(t) or pa.types.is_boolean(t):
+            return pc.cast(col, pa.string())
+        return pa.chunked_array([[_key_text(v, tz) for v in col.to_pylist()]], pa.string())
+
+    parts = [texts(tbl.column(f)) for f in kf]
+    none = pa.scalar(None, pa.string())
+    if len(kf) == 1:
+        return pc.if_else(pc.equal(parts[0], ""), none, parts[0])
+    keyless = functools.reduce(pc.and_, [pc.equal(pc.fill_null(t, ""), "") for t in parts])
+    filled = [pc.fill_null(t, _NULL_PART) for t in parts]
+    joined = pc.binary_join_element_wise(
+        *[
+            pc.binary_join_element_wise(f"{f}:", pc.if_else(pc.equal(t, ""), _EMPTY_PART, t), "")
+            for f, t in zip(kf, filled)
+        ],
+        ",",
+    )
+    return pc.if_else(keyless, none, joined)
+
+
+def _merge_slice(tbl, log_paths: list[str], kf: list[str], tz: str):
+    """A file slice's current rows: the pyarrow table ``tbl`` (its base
+    file's rows, or the ones a caller needs) with the slice's log files
+    applied in order — the one merge compaction writes out and the log
+    author takes cdc before-images from. AVRO_DATA records UPSERT by
+    record key (replace the rows with their key, then append) or
+    plain-append on a keyless table; DELETE blocks drop rows by key;
+    command/corrupt blocks hold no rows; HFILE/PARQUET blocks refuse (no
+    byte decoder — never silently drop rows). The base rows stay columnar:
+    only the decoded log records pass through Python."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from onetable_spark.formats.hudi_log import (
+        avro_block_records,
+        delete_block_records,
+        read_log_blocks,
+    )
+
+    cols = tbl.schema.names
+    keys = _record_keys(tbl, kf, tz) if kf else None
+
+    def drop(dead):
+        nonlocal tbl, keys
+        keep = pc.invert(pc.is_in(keys, value_set=dead, skip_nulls=True))
+        tbl, keys = tbl.filter(keep), keys.filter(keep)
+
+    for path in log_paths:
+        for block in read_log_blocks(path):
+            btype = block["type"]
+            if btype == "avro_data":
+                _, recs = avro_block_records(block, decode=True)
+                new = pa.Table.from_pylist(
+                    [{c: r.get(c) for c in cols} for r in recs], schema=tbl.schema
+                )
+                if kf:
+                    new_keys = _record_keys(new, kf, tz)
+                    drop(new_keys.combine_chunks())
+                    keys = pa.chunked_array(keys.chunks + new_keys.chunks, pa.string())
+                tbl = pa.concat_tables([tbl, new])
+            elif btype == "delete":
+                if not kf:
+                    raise ValueError(
+                        f"{path}: DELETE block on a keyless table — rows are "
+                        "unidentifiable"
+                    )
+                _, recs = delete_block_records(block)
+                drop(pa.array([r["recordKey"] for r in recs], pa.string()))
+            elif btype not in ("command", "corrupt"):
+                raise ValueError(
+                    f"{path}: cannot compact a {btype} block — no byte "
+                    "decoder; refusing rather than dropping its rows"
+                )
+    return tbl
+
+
+def _cdc_record(op: str, key: str, before, after, mode: str, ts_ms: str) -> dict:
+    """One RFC-51 CDC_DATA record in the table's supplemental-logging
+    ``mode`` (HoodieCDCUtils: data_before_after, data_before, op_key_only)
+    with JSON-string images."""
+
+    def image(d):
+        return None if d is None else json.dumps(d, default=str)
+
+    if mode == "data_before_after":
+        return {"op": op, "ts_ms": ts_ms, "before": image(before), "after": image(after)}
+    rec = {"op": op, "record_key": key}
+    if mode == "data_before":
+        rec["before"] = image(before)
+    return rec
 
 
 class HudiTimeline:
@@ -309,9 +538,6 @@ class HudiTimeline:
         completed = {i for i, _ in self.completed_instants()}
         return sorted(out - completed)
 
-    def _commit_paths(self, instants: list[tuple[str, str]]) -> list[str]:
-        return [os.path.join(self.hoodie_path, f"{i}.{a}") for i, a in instants]
-
     def _commits_df(self, instants: list[tuple[str, str]]) -> DataFrame:
         """Completed commit metadata as a DataFrame tagged with instant.
 
@@ -324,7 +550,7 @@ class HudiTimeline:
         df = (
             self.spark.read.schema(COMMIT_META_SCHEMA)
             .option("multiLine", "true")
-            .json(self._commit_paths(instants))
+            .json([os.path.join(self.hoodie_path, f"{i}.{a}") for i, a in instants])
         )
         return df.withColumn(
             "instant",
@@ -371,28 +597,12 @@ class HudiTimeline:
         instants = self.completed_instants(as_of=instant, strict=strict)
         if not instants:
             return local_rows_df(self.spark, [], FILES_SCHEMA)
-        commits = self._commits_df(instants)
-        exploded = self._exploded_stats(commits)
-        is_log = F.col("ws.path").contains(".log.")
-        live = self._live_base_slices(exploded, commits)
+        live, unmerged = self._live_slices(self._commits_df(instants))
 
         # MOR log plane — only when the timeline holds deltacommits at all
         # (a COW table pays nothing here; the instants list is driver-side)
         adjusted = F.lit(False)
         if view != "read_optimized" and any(a == "deltacommit" for _, a in instants):
-            logs = exploded.filter(is_log).select(
-                F.col("instant").alias("log_instant"),
-                F.col("ws.fileId").alias("file_id"),
-                (
-                    F.coalesce(F.col("ws.numInserts"), F.lit(0))
-                    - F.coalesce(F.col("ws.numDeletes"), F.lit(0))
-                ).alias("delta"),
-            )
-            base_keys = live.select("file_id", F.col("instant").alias("base_instant"))
-            unmerged = logs.join(base_keys, "file_id", "left_outer").where(
-                F.col("base_instant").isNull()
-                | (F.col("log_instant") > F.col("base_instant"))
-            )
             if view is None:
                 # driver-ok: emptiness probe, one boolean
                 if not unmerged.isEmpty():
@@ -448,54 +658,30 @@ class HudiTimeline:
             ),
         )
 
-    def _exploded_stats(self, commits: DataFrame) -> DataFrame:
-        """``(instant, partition, ws)`` — every write stat of the given
-        commits, exploded (the shared input of the view/compaction/delete
-        planes)."""
-        return (
-            commits.select(
-                "instant",
-                F.explode_outer("partitionToWriteStats").alias("partition", "stats"),
-            )
-            .select("instant", "partition", F.explode("stats").alias("ws"))
-        )
-
     def has_unmerged_logs(self, instant: Optional[str] = None) -> bool:
         """True when any file group carries log files newer than its base
         file (or log files with no base at all) — the state in which a
         base-file scan is stale and a target engine cannot reproduce the
-        realtime view's netted counts by scanning parquet."""
-        instants = self.completed_instants(as_of=instant)
-        if not instants or not any(a == "deltacommit" for _, a in instants):
+        realtime view's netted counts by scanning parquet. Read from the
+        commit files on the driver (``_file_group_states``)."""
+        if not any(a == "deltacommit" for _, a in self.completed_instants(as_of=instant)):
             return False
-        commits = self._commits_df(instants)
-        exploded = self._exploded_stats(commits)
-        live = self._live_base_slices(exploded, commits)
-        logs = exploded.filter(F.col("ws.path").contains(".log.")).select(
-            F.col("instant").alias("log_instant"),
-            F.col("ws.fileId").alias("file_id"),
-        )
-        unmerged = logs.join(
-            live.select("file_id", F.col("instant").alias("base_instant")),
-            "file_id",
-            "left_outer",
-        ).where(
-            F.col("base_instant").isNull()
-            | (F.col("log_instant") > F.col("base_instant"))
-        )
-        # driver-ok: emptiness probe, one boolean
-        return not unmerged.isEmpty()
+        # cutoffs are strictly-before: the next millisecond's includes instant
+        cut = None if instant is None else millis_to_instant(instant_to_millis(instant) + 1)
+        groups = _file_group_states(self.table_path, [cut] if cut else ())[cut]
+        return any(g["logs"] for g in groups.values())
 
-    def _live_base_slices(
-        self, exploded: DataFrame, commits: DataFrame
-    ) -> DataFrame:
-        """Latest BASE-file slice per live file group: explode write
-        stats, drop log paths, keep the newest stat per fileId, anti-join
-        groups replaced at a later-or-equal replacecommit (broadcast:
-        replace sets are tiny). Columns: ``(instant, file_id, rel_path,
-        partition_path, size, record_count, stats_json)`` — the shared
-        core of ``snapshot_files`` and the delete-log writer (which needs
-        the base instant + fileId a log file attaches to)."""
+    def _live_slices(self, commits: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """``(live, logs)`` of ``commits``, by the rules the driver replay
+        ``_file_group_states`` applies: per file group the newest base
+        stat ``(instant, file_id, rel_path, partition_path, size,
+        record_count, stats_json)``, unless a replacecommit at or after it
+        (any, for a log-only group) replaced the group, logs and all; and
+        the live groups' logs newer than their base ``(log_instant,
+        file_id, delta, base_instant)`` (``base_instant`` NULL: no base)."""
+        exploded = commits.select(
+            "instant", F.explode_outer("partitionToWriteStats").alias("partition", "stats")
+        ).select("instant", "partition", F.explode("stats").alias("ws"))
         is_log = F.col("ws.path").contains(".log.")
         adds = exploded.filter(~is_log).select(
             "instant",
@@ -515,11 +701,30 @@ class HudiTimeline:
 
         w = Window.partitionBy("file_id").orderBy(F.desc("instant"))
         latest = adds.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
-        return latest.join(
+        live = latest.join(
             F.broadcast(replaced),
             (latest.file_id == replaced.file_id) & (replaced.replace_instant >= latest.instant),
             "left_anti",
         )
+        logs = exploded.filter(is_log).select(
+            F.col("instant").alias("log_instant"),
+            F.col("ws.fileId").alias("file_id"),
+            (
+                F.coalesce(F.col("ws.numInserts"), F.lit(0))
+                - F.coalesce(F.col("ws.numDeletes"), F.lit(0))
+            ).alias("delta"),
+        ).join(
+            latest.select("file_id", F.col("instant").alias("base_instant")),
+            "file_id",
+            "left_outer",
+        )
+        logs = logs.join(
+            F.broadcast(replaced),
+            (logs.file_id == replaced.file_id)
+            & (F.col("base_instant").isNull() | (replaced.replace_instant >= F.col("base_instant"))),
+            "left_anti",
+        ).where(F.col("base_instant").isNull() | (F.col("log_instant") > F.col("base_instant")))
+        return live, logs
 
     def verify_log_stats(self, instant: Optional[str] = None) -> DataFrame:
         """Trust-but-verify for MOR log files (the Hudi twin of
@@ -793,6 +998,39 @@ class HudiTimeline:
             }
         return heads
 
+    def _instants_in_range(
+        self, from_instant: Optional[str], to_instant: Optional[str]
+    ) -> list[tuple[str, str]]:
+        """Completed commits in (from_instant, to_instant] — refusing when
+        ``archive_timeline`` moved part of that range to
+        ``.hoodie/archived/``: the active timeline alone would answer for
+        only part of it."""
+
+        def inside(i: str) -> bool:
+            return (from_instant is None or i > from_instant) and (
+                to_instant is None or i <= to_instant
+            )
+
+        active = self.completed_instants()
+        archived_dir = os.path.join(self.hoodie_path, "archived")
+        gone = sorted(
+            parts[0]
+            for parts in (
+                f.split(".") for f in (
+                    os.listdir(archived_dir) if os.path.isdir(archived_dir) else ()
+                )
+            )
+            if len(parts) == 2 and parts[1] in COMMIT_ACTIONS and inside(parts[0])
+        )
+        if gone:
+            raise ValueError(
+                f"{self.table_path}: instants {gone[0]}..{gone[-1]} of the "
+                "requested range are archived; the earliest active instant "
+                f"is {active[0][0] if active else None} — start the range "
+                f"at from_instant >= {gone[-1]}"
+            )
+        return [(i, a) for i, a in active if inside(i)]
+
     def changelog(
         self,
         from_instant: Optional[str] = None,
@@ -836,6 +1074,10 @@ class HudiTimeline:
         over the range's commit files keyed by ``input_file_name()``; the
         r13 form ran one ``.first()`` job per instant, pure scheduling
         overhead over long ranges.
+
+        A range reaching instants ``archive_timeline`` moved off the
+        active timeline refuses with ValueError (``_instants_in_range``)
+        rather than answering for part of it.
         """
         import json as _json
 
@@ -854,13 +1096,7 @@ class HudiTimeline:
                 T.StructField("_commit_instant", T.StringType()),
             ]
         )
-        instants = [
-            (i, a)
-            for i, a in self.completed_instants()
-            if a in COMMIT_ACTIONS
-            and (from_instant is None or i > from_instant)
-            and (to_instant is None or i <= to_instant)
-        ]
+        instants = self._instants_in_range(from_instant, to_instant)
         table_path = self.table_path
         field_names = [f.name for f in schema.fields]
         numeric_kf = _numeric_key_fields(schema, key_fields)
@@ -1057,6 +1293,7 @@ class HudiTimeline:
         JSON formatting varies by leg (writer-authored ``json.dumps`` vs
         Spark ``to_json``), exactly as real Hudi's avro-toString vs
         row-JSON renderings do — consumers extract fields, not bytes.
+        A range reaching archived instants refuses, as in ``changelog``.
         """
         import json as _json
 
@@ -1076,13 +1313,7 @@ class HudiTimeline:
                 T.StructField("after", T.StringType()),
             ]
         )
-        instants = [
-            (i, a)
-            for i, a in self.completed_instants()
-            if a in COMMIT_ACTIONS
-            and (from_instant is None or i > from_instant)
-            and (to_instant is None or i <= to_instant)
-        ]
+        instants = self._instants_in_range(from_instant, to_instant)
         table_path = self.table_path
         field_names = [f.name for f in schema.fields]
         heads = self._commit_heads(instants)
@@ -1344,6 +1575,107 @@ class HudiTimeline:
                 continue
         raise RuntimeError(f"could not claim a Hudi instant after {max_retries} attempts")
 
+    def _markers(self, instant: str, action: str) -> list[str]:
+        """The requested and inflight markers of ``instant``."""
+        return [
+            os.path.join(self.hoodie_path, f"{instant}.{action}.requested"),
+            os.path.join(
+                self.hoodie_path,
+                # COW commit inflight has no action infix (Hudi timeline
+                # quirk); deltacommit/replacecommit inflights carry it
+                f"{instant}.inflight" if action == "commit" else f"{instant}.{action}.inflight",
+            ),
+        ]
+
+    def _begin(self, action: str) -> str:
+        """Claim an instant and mark it inflight — the first two steps of
+        the requested→inflight→completed lifecycle every writer walks."""
+        instant, _ = self._claim_instant(action)
+        open(self._markers(instant, action)[1], "w").close()
+        return instant
+
+    def _abandon(self, instant: str, action: str, written=()) -> None:
+        """Take back a claimed ``instant`` that a refusal stops before it
+        completes: delete the files it wrote (table-relative ``written``)
+        and its markers, so no pending instant stays on the timeline."""
+        prefix = self.table_path.rstrip("/") + "/"
+        for p in [prefix + w for w in written] + self._markers(instant, action):
+            if os.path.exists(p):
+                os.remove(p)
+
+    @contextmanager
+    def _refusing_keyless_rows(self, instant: str, action: str):
+        """Re-raise a ``_required_key`` task failure as ValueError, first
+        abandoning ``instant``: the key is computed before any log or base
+        file is written, so the refusal leaves the table as it was."""
+        from pyspark.errors.exceptions.captured import CapturedException
+
+        try:
+            yield
+        except CapturedException as e:
+            if _NO_KEY not in str(e):
+                raise
+            self._abandon(instant, action)
+            raise ValueError(
+                f"{self.table_path}: {_NO_KEY} — a NULL or empty single-field key, "
+                "or a composite key whose parts are all NULL or empty"
+            ) from None
+
+    def _emit_commit(self, instant: str, action: str, stat_pairs, meta: dict) -> None:
+        """Complete ``instant``: write its commit JSON and rename it into
+        place. ``stat_pairs`` yields ``(partition_path, write-stat JSON)``
+        in partition-path order; they stream to the OS buffer as they
+        arrive, so ``partitionToWriteStats`` is never held whole — only
+        the bounded ``meta`` keys are json.dump'd."""
+        completed = os.path.join(self.hoodie_path, f"{instant}.{action}")
+        tmp = completed + ".tmp"
+        with open(tmp, "w") as f:
+            f.write('{"partitionToWriteStats": {')
+            current_pp: str | None = None
+            for pp, stat_str in stat_pairs:
+                if pp != current_pp:
+                    if current_pp is not None:
+                        f.write("], ")
+                    f.write(f"{json.dumps(pp)}: [")
+                    current_pp = pp
+                else:
+                    f.write(", ")
+                f.write(stat_str)
+            if current_pp is not None:
+                f.write("]")
+            f.write("}")
+            for k, v in meta.items():
+                f.write(f", {json.dumps(k)}: {json.dumps(v)}")
+            f.write("}")
+        os.replace(tmp, completed)
+        # the requested/inflight markers STAY on the active timeline (real
+        # Hudi keeps all three lifecycle files until archival) — deleting
+        # the O_EXCL-claimed requested marker would reopen the instant to a
+        # racing writer the moment this commit completes; archive_timeline
+        # sweeps them with the completed instant
+
+    def _emit_stat_rows(
+        self, instant: str, action: str, rows: list[dict], operation: str
+    ) -> str:
+        """Complete ``instant`` from driver-held stat rows (``_STAT_ROWS``
+        shape) — what the log author, the compaction merge and the insert
+        walk return."""
+        pairs = sorted(
+            ((r["partition_path"] or "", json.dumps(_write_stat(r))) for r in rows),
+            key=lambda p: p[0],
+        )
+        self._emit_commit(
+            instant,
+            action,
+            pairs,
+            {
+                "compacted": operation == "COMPACT",
+                "operationType": operation,
+                "extraMetadata": {},
+            },
+        )
+        return instant
+
     def commit(
         self,
         adds: DataFrame | None = None,
@@ -1363,14 +1695,7 @@ class HudiTimeline:
         """
         if action is None:
             action = "replacecommit" if replace_file_ids else "commit"
-        instant, req = self._claim_instant(action)
-        inflight = os.path.join(
-            self.hoodie_path,
-            # COW commit inflight has no action infix (Hudi timeline quirk);
-            # deltacommit/replacecommit inflights carry it
-            f"{instant}.inflight" if action == "commit" else f"{instant}.{action}.inflight",
-        )
-        open(inflight, "w").close()
+        instant = self._begin(action)
 
         we_cached_adds = False
         sorted_adds = None
@@ -1400,7 +1725,7 @@ class HudiTimeline:
                 ),
             ).orderBy("_pp")
         # the non-stats commit keys, built up-front; partitionToWriteStats
-        # streams separately in the writer below
+        # streams separately in the emitter
         meta = {
             "compacted": False,
             "operationType": operation,
@@ -1435,35 +1760,29 @@ class HudiTimeline:
                 meta["schemaString"] = json.dumps(schema.jsonValue())
         if replace_file_ids:
             meta["partitionToReplaceFileIds"] = replace_file_ids
-        completed = os.path.join(self.hoodie_path, f"{instant}.{action}")
-        tmp = completed + ".tmp"
         table_prefix = self.table_path.rstrip("/") + "/"
 
         def _stat_json(rel: str, pp: str, record_count, size, column_stats) -> str:
             """One write-stat entry as a JSON string — shared by the
             driver loop (small commits) and the executor batches (large
-            commits); pure function so both paths serialize identically."""
+            commits); pure function so both paths serialize identically.
+            FILES_SCHEMA adds model pure inserts (external registration)."""
+            n = record_count or 0
             return json.dumps(
-                {
-                    "fileId": _file_id_for(rel),
-                    "path": rel,
-                    "prevCommit": "null",
-                    "numWrites": record_count or 0,
-                    # FILES_SCHEMA adds model pure inserts (external
-                    # registration); log appends with update/delete
-                    # splits come from real writers or raw-JSON fixtures
-                    "numInserts": record_count or 0,
-                    "numDeletes": 0,
-                    "numUpdateWrites": 0,
-                    "totalWriteBytes": size or 0,
-                    "fileSizeInBytes": size or 0,
-                    "partitionPath": pp,
-                    "columnStats": (
-                        json.dumps([dict(s) for s in column_stats])
-                        if column_stats
-                        else None
-                    ),
-                }
+                _write_stat(
+                    {
+                        "file_id": _file_id_for(rel),
+                        "rel_path": rel,
+                        "prev_commit": "null",
+                        "num_writes": n,
+                        "num_inserts": n,
+                        "num_deletes": 0,
+                        "num_updates": 0,
+                        "size": size or 0,
+                        "partition_path": pp,
+                    },
+                    json.dumps([dict(s) for s in column_stats]) if column_stats else None,
+                )
             )
 
         def _stat_pairs():
@@ -1478,6 +1797,8 @@ class HudiTimeline:
             from the persisted adds), and the driver only concatenates
             the returned strings. Hudi's commit is ONE json file, so the
             file write itself stays a driver stream either way."""
+            if sorted_adds is None:
+                return
             # driver-ok: one scalar; adds is persisted above precisely
             # because the commit consumes it more than once
             n = sorted_adds.count()
@@ -1546,34 +1867,7 @@ class HudiTimeline:
             for row in chunked.toLocalIterator(prefetchPartitions=True):
                 yield row["pp"], row["body"]
 
-        with open(tmp, "w") as f:
-            # streaming JSON emitter: write-stats go to the OS buffer as
-            # they arrive (grouped by the pre-sorted partition path); only
-            # the bounded non-stats keys are json.dump'd whole
-            f.write('{"partitionToWriteStats": {')
-            if sorted_adds is not None:
-                current_pp: str | None = None
-                for pp, stat_str in _stat_pairs():
-                    if pp != current_pp:
-                        if current_pp is not None:
-                            f.write("], ")
-                        f.write(f"{json.dumps(pp)}: [")
-                        current_pp = pp
-                    else:
-                        f.write(", ")
-                    f.write(stat_str)
-                if current_pp is not None:
-                    f.write("]")
-            f.write("}")
-            for k, v in meta.items():
-                f.write(f", {json.dumps(k)}: {json.dumps(v)}")
-            f.write("}")
-        os.replace(tmp, completed)
-        # the requested/inflight markers STAY on the active timeline (real
-        # Hudi keeps all three lifecycle files until archival) — deleting
-        # the O_EXCL-claimed requested marker would reopen the instant to a
-        # racing writer the moment this commit completes; archive_timeline
-        # sweeps them with the completed instant
+        self._emit_commit(instant, action, _stat_pairs(), meta)
         if adds is not None:
             # keep the metadata-table column_stats index fresh when the
             # table advertises it (real Hudi updates the metadata table as
@@ -1588,6 +1882,157 @@ class HudiTimeline:
                 adds.unpersist()
         return instant
 
+    # ------------------------------------------------- log and merge writers
+
+    def _file_slices(self) -> list[dict]:
+        """The live file slices of the active timeline
+        (``_file_group_states``), each ``{path, file_id, partition_path,
+        base_instant, logs}`` with absolute paths — the base file (None
+        for a group holding only log files) and the group's log files
+        newer than it, in instant order: what the log writers attach to
+        and compaction merges. Read from the commit files on the driver,
+        with no Spark job."""
+        prefix = self.table_path.rstrip("/") + "/"
+        return [
+            {
+                "path": prefix + g["rel"] if g["rel"] is not None else None,
+                "file_id": fid,
+                "partition_path": g["partition_path"] or "",
+                "base_instant": g["instant"],
+                "logs": [prefix + p for p in g["logs"]],
+            }
+            for fid, g in _file_group_states(self.table_path)[None].items()
+        ]
+
+    def _cdc_mode(self) -> Optional[str]:
+        """The supplemental-logging mode of a ``hoodie.table.cdc.enabled``
+        table (RFC-51), else None."""
+        props = self.table_properties()
+        if props.get("hoodie.table.cdc.enabled", "false") != "true":
+            return None
+        return props.get("hoodie.table.cdc.supplemental.logging.mode", "data_before_after")
+
+    def _author_logs(
+        self, rows: DataFrame, slices: dict[str, dict], instant: str,
+        kf: list[str], schema: T.StructType, cdc_mode: Optional[str], deletes: bool,
+    ):
+        """The one log author: ``rows`` (``_key``, ``_path``, ``_b_<col>``
+        before-images on a cdc table, and the record columns for an
+        upsert) grouped by base file, each group written as ONE log file
+        on its file group (``slices``: base path → ``_file_slices`` entry,
+        looked up on the executor) — an AVRO_DATA block of
+        the records, or with ``deletes`` a DELETE block of the keys
+        (HoodieDeleteBlock V3, byte layout pinned against real Hudi-0.14).
+        On a cdc table (``cdc_mode``) each group also gets a ``-cdc`` log whose CDC_DATA
+        block carries op 'u'/'d' records with before-images from the
+        merged file slice (``_merge_slice`` over the base rows and the
+        group's earlier log blocks) and the after-images.
+
+        The stage is side-effecting (the log-version probe makes a rerun
+        append ``.log.2`` orphans), so it runs in ONE action: collected
+        as an Arrow table, one ``_STAT_ROWS`` row per file group, with the
+        keys it wrote in ``matched``."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from onetable_spark.formats.avro_schema import structtype_to_avro
+        from onetable_spark.formats.hudi_log import logical_fields
+
+        cols = schema.fieldNames()
+        avro_schema = structtype_to_avro(schema, name="record")
+        # date / timestamp columns reach the log writer as Python values;
+        # the Avro datum carries them as epoch ints
+        logical = logical_fields(avro_schema)
+        tz = self.spark.conf.get("spark.sql.session.timeZone")
+        table_prefix = self.table_path.rstrip("/") + "/"
+        out_schema = to_arrow_schema(_STAT_ROWS)
+        ts_ms = str(instant_to_millis(instant))
+
+        def author(_key, tbl):
+            import pyarrow as pa
+
+            from onetable_spark.formats.hudi_log import (
+                encode_logical,
+                write_avro_log_block,
+                write_cdc_log_block,
+                write_delete_log_block,
+            )
+
+            rows_ = tbl.to_pylist()
+            g = slices[rows_[0]["_path"]]
+            path, file_id, pp = g["path"], g["file_id"], g["partition_path"]
+            stem = os.path.join(os.path.dirname(path), f".{file_id}_{g['base_instant']}.log.")
+            version = 1
+            while os.path.exists(f"{stem}{version}_0-0-0"):
+                version += 1
+            lp = f"{stem}{version}_0-0-0"
+            keys = [r["_key"] for r in rows_]
+            records = [None] * len(rows_) if deletes else [{c: r[c] for c in cols} for r in rows_]
+            if deletes:
+                write_delete_log_block(
+                    lp,
+                    [{"recordKey": k, "partitionPath": pp, "orderingVal": None} for k in keys],
+                    instant,
+                    append=False,
+                )
+            else:
+                datums = [encode_logical(r, logical, tz) for r in records] if logical else records
+                write_avro_log_block(lp, datums, avro_schema, instant, append=False)
+            cdc_path = cdc_size = None
+            if cdc_mode:
+                base = tbl.select([f"_b_{c}" for c in cols]).rename_columns(cols)
+                merged = _merge_slice(base, g["logs"], kf, tz)
+                before = dict(zip(_record_keys(merged, kf, tz).to_pylist(), merged.to_pylist()))
+                cp = lp + "-cdc"
+                write_cdc_log_block(
+                    cp,
+                    [
+                        _cdc_record(
+                            "d" if deletes else "u", k, before.get(k), after, cdc_mode, ts_ms
+                        )
+                        for k, after in zip(keys, records)
+                    ],
+                    instant,
+                    mode=cdc_mode,
+                )
+                cdc_path, cdc_size = cp[len(table_prefix):], os.path.getsize(cp)
+            n = len(rows_)
+            return pa.Table.from_pylist(
+                [
+                    {
+                        "rel_path": lp[len(table_prefix):],
+                        "file_id": file_id,
+                        "partition_path": pp,
+                        "prev_commit": g["base_instant"],
+                        "num_writes": 0 if deletes else n,
+                        "num_updates": 0 if deletes else n,
+                        "num_deletes": n if deletes else 0,
+                        "size": os.path.getsize(lp),
+                        "cdc_path": cdc_path,
+                        "cdc_size": cdc_size,
+                        "matched": keys,
+                    }
+                ],
+                schema=out_schema,
+            )
+
+        with self._refusing_keyless_rows(instant, "deltacommit"):
+            return rows.groupBy("_path").applyInArrow(author, _STAT_ROWS).toArrow()
+
+    def _scan_slices(
+        self, paths: list[str], kf: list[str], schema: T.StructType, before_images: bool
+    ) -> DataFrame:
+        """The rows of the given base files through Spark's parquet scan
+        (``session.tagged_rows``: ``_path``, ``_pos``), keyed by
+        ``_record_key``; with ``before_images`` (a cdc table) every column
+        rides along as ``_b_<col>``."""
+        read = T.StructType([f for f in schema.fields if before_images or f.name in kf])
+        return tagged_rows(self.spark, read, paths).select(
+            _record_key(kf).alias("_key"),
+            "_path",
+            "_pos",
+            *[F.col(c).alias(f"_b_{c}") for c in (schema.fieldNames() if before_images else [])],
+        )
+
     def commit_delete_logs(
         self,
         positions: DataFrame,
@@ -1599,22 +2044,30 @@ class HudiTimeline:
         ``sync_delta_dvs_to_iceberg``).
 
         ``positions``: ``(path, pos)`` rows over this table's BASE files.
-        Hudi deletes are KEY-based, not positional, so executors read each
-        affected base file's record-key columns ONCE (one pyarrow
-        ``take`` at the positions) and author one log file per file group
-        holding a single DELETE block (type 1, content V3 — byte layout
-        pinned against the reference's real Hudi-0.14 delete block). The
-        deltacommit's write-stats carry ``numDeletes`` so the realtime
-        view (``snapshot_files(view='realtime')``) nets exactly these
-        rows, and ``verify_log_stats`` can re-derive the count from the
-        bytes. A real Hudi reader merges the same blocks by key.
+        Hudi deletes are KEY-based, not positional: Spark's parquet scan
+        reads the affected base files tagged with ``_metadata.row_index``,
+        a semi-join keeps the deleted positions, and the record key comes
+        from the one key Column (``_record_key``). The log author
+        (``_author_logs``) then writes one log file per file group holding
+        a single DELETE block. The deltacommit's write-stats carry
+        ``numDeletes`` so the realtime view
+        (``snapshot_files(view='realtime')``) nets exactly these rows, and
+        ``verify_log_stats`` can re-derive the count from the bytes. A
+        real Hudi reader merges the same blocks by key. Jobs: one collect
+        of the position count per deleted path (the dangling-position
+        guard) and the author stage. A file whose DELETE block carries
+        fewer rows than it was given positions — a position past its end,
+        a repeated one, or a path spelled otherwise than the scan reports
+        it — refuses with ValueError, and its log files and the claimed
+        instant are removed.
 
         Keys come from ``hoodie.table.recordkey.fields`` (populated from
-        the source's identifier fields on sync); composite keys use the
-        ComplexKeyGenerator ``f1:v1,f2:v2`` form, single-field keys the
-        SimpleKeyGenerator bare-value form. Refuses when the table has no
-        record-key fields — a DELETE block is inexpressible without keys.
-        Returns the deltacommit instant.
+        the source's identifier fields on sync), encoded as Hudi's
+        KeyGenUtils does (``_record_key``); a deleted row with no key
+        refuses with ValueError, as does a table with no record-key
+        fields — a DELETE block is inexpressible without keys, and so do
+        float/double key fields (``_refuse_float_keys``). Returns the
+        deltacommit instant.
 
         Reference contrast: the reference never writes (or reads) log
         files at all — a Hudi target there receives net counts only
@@ -1622,230 +2075,93 @@ class HudiTimeline:
 
         RFC-51 (r14): on a cdc-enabled table each file group's delete
         also authors a ``-cdc`` log (op='d' records carrying the FULL
-        before image of every deleted row, read at the same positions),
-        advertised via cdcStats — ``cdc_feed`` then serves exact delete
-        before-images instead of the key-only inference.
+        before image of every deleted row, from the same scan with the
+        group's earlier log blocks applied), advertised via cdcStats —
+        ``cdc_feed`` then serves exact delete before-images instead of
+        the key-only inference.
         """
-        import pandas as _pd
-
-        from onetable_spark.formats.hudi_log import write_delete_log_block
-
-        key_fields = tuple(
-            key_fields or self.table_descriptor().record_key_fields
-        )
-        if not key_fields:
+        desc = self.table_descriptor()
+        kf = list(key_fields or desc.record_key_fields)
+        if not kf:
             raise ValueError(
                 f"{self.table_path}: no record-key fields configured "
                 "(hoodie.table.recordkey.fields is empty) — Hudi DELETE "
                 "log blocks identify rows by key; cannot translate "
                 "position deletes into a keyless table"
             )
-        instants = self.completed_instants()
-        if not instants:
+        if not self.completed_instants():
             raise ValueError(
                 f"{self.table_path}: no completed commits — delete logs "
                 "attach to existing base file groups"
             )
-        commits = self._commits_df(instants)
-        exploded = self._exploded_stats(commits)
-        table_path = self.table_path
-        table_prefix = table_path.rstrip("/") + "/"
-        base = self._live_base_slices(exploded, commits).select(
-            F.concat(F.lit(table_prefix), F.col("rel_path")).alias("path"),
-            "file_id",
-            "rel_path",
-            "partition_path",
-            F.col("instant").alias("base_instant"),
-        )
-        joined = positions.join(base, "path")
-        # dangling-position guard: every deleted path must be a live base
-        # file — a DELETE block for an unknown file group would dangle
-        # driver-ok: two count scalars on the affected-file side
-        n_files = positions.select("path").distinct().count()
-        n_matched = joined.select("path").distinct().count()
-        if n_matched != n_files:
+        _refuse_float_keys(self.table_path, desc.read_schema, kf)
+        by_path = {g["path"]: g for g in self._file_slices() if g["path"]}
+        # per affected file, the rows its DELETE block must carry; every
+        # deleted path must be a live base file — a DELETE block for an
+        # unknown file group would dangle
+        # driver-ok: one row per affected file
+        wanted = dict(positions.groupBy("path").count().collect())
+        dangling = [p for p in wanted if p not in by_path]
+        if dangling:
             raise ValueError(
-                f"{n_files - n_matched} deleted path(s) match no live "
-                "base file group — positions must target this table's "
-                "base files"
+                f"{len(dangling)} deleted path(s) match no live base file "
+                "group — positions must target this table's base files"
             )
-
-        instant, _ = self._claim_instant("deltacommit")
-        inflight = os.path.join(self.hoodie_path, f"{instant}.deltacommit.inflight")
-        open(inflight, "w").close()
-
-        kf = list(key_fields)
-        # RFC-51: cdc-enabled tables also log op='d' records with the
-        # FULL before image of every deleted row (read at the same
-        # positions the DELETE block's keys come from)
-        props = self.table_properties()
-        cdc_on = props.get("hoodie.table.cdc.enabled", "false") == "true"
-        cdc_mode = props.get(
-            "hoodie.table.cdc.supplemental.logging.mode", "data_before_after"
-        )
-
-        def author(key, pdf):
-            import pyarrow.parquet as pq
-
-            path = key[0]
-            row0 = pdf.iloc[0]
-            file_id = row0["file_id"]
-            pp = row0["partition_path"] or ""
-            base_instant = row0["base_instant"]
-            pos = sorted({int(p) for p in pdf["pos"]})
-            keys_tbl = pq.read_table(path, columns=kf).take(pos)
-            if len(kf) == 1:
-                keys = [str(v) for v in keys_tbl[kf[0]].to_pylist()]
-            else:
-                cols = [keys_tbl[f].to_pylist() for f in kf]
-                keys = [
-                    ",".join(f"{f}:{v}" for f, v in zip(kf, vals))
-                    for vals in zip(*cols)
-                ]
-            records = [
-                {"recordKey": k, "partitionPath": pp, "orderingVal": None}
-                for k in keys
-            ]
-            log_dir = os.path.dirname(path)
-            version = 1
-            while True:
-                name = f".{file_id}_{base_instant}.log.{version}_0-0-0"
-                lp = os.path.join(log_dir, name)
-                if not os.path.exists(lp):
-                    break
-                version += 1
-            write_delete_log_block(lp, records, instant, append=False)
-            rel_log = lp[len(table_prefix):] if lp.startswith(table_prefix) else lp
-            cdc_rel, cdc_size = None, None
-            if cdc_on:
-                import json as _json
-
-                from onetable_spark.formats.hudi_log import write_cdc_log_block
-
-                before_tbl = pq.read_table(path).take(pos).to_pandas(
-                    integer_object_nulls=True
-                )
-                bcols = list(before_tbl.columns)
-                ts_ms = str(instant_to_millis(instant))
-                cdc_records = []
-                for k_, vals in zip(
-                    keys, zip(*[before_tbl[c] for c in bcols])
-                ):
-                    before = {
-                        c: (v.item() if hasattr(v, "item") else v)
-                        for c, v in zip(bcols, vals)
-                    }
-                    rec = {"op": "d"}
-                    if cdc_mode == "data_before_after":
-                        rec["ts_ms"] = ts_ms
-                        rec["before"] = _json.dumps(before, default=str)
-                        rec["after"] = None
-                    else:
-                        rec["record_key"] = k_
-                        if cdc_mode == "data_before":
-                            rec["before"] = _json.dumps(before, default=str)
-                    cdc_records.append(rec)
-                cp = os.path.join(
-                    log_dir,
-                    f".{file_id}_{base_instant}.log.{version}_0-0-0-cdc",
-                )
-                write_cdc_log_block(cp, cdc_records, instant, mode=cdc_mode)
-                cdc_rel = (
-                    cp[len(table_prefix):] if cp.startswith(table_prefix) else cp
-                )
-                cdc_size = os.path.getsize(cp)
-            return _pd.DataFrame(
-                [
-                    {
-                        "rel_path": rel_log,
-                        "file_id": file_id,
-                        "partition_path": pp,
-                        "prev_commit": base_instant,
-                        "num_deletes": len(records),
-                        "size": os.path.getsize(lp),
-                        "cdc_path": cdc_rel,
-                        "cdc_size": cdc_size,
-                    }
-                ]
+        cdc_mode = self._cdc_mode()
+        instant = self._begin("deltacommit")
+        rows = self._scan_slices(list(wanted), kf, desc.read_schema, cdc_mode is not None).join(
+            positions.select(F.col("path").alias("_path"), F.col("pos").alias("_pos")),
+            ["_path", "_pos"],
+            "left_semi",
+        ).withColumn("_key", _required_key(F.col("_key"), kf))
+        stats = self._author_logs(
+            rows, {p: by_path[p] for p in wanted}, instant, kf, desc.read_schema, cdc_mode,
+            deletes=True,
+        ).drop_columns(["matched"]).to_pylist()
+        # the scan must find a row at every requested position: a position
+        # past the file's end, a repeated one, or a path spelled otherwise
+        # than the scan's would leave rows the realtime view still shows
+        got = {r["file_id"]: r["num_deletes"] for r in stats}
+        short = [p for p, n in wanted.items() if got.get(by_path[p]["file_id"], 0) != n]
+        if short:
+            self._abandon(
+                instant,
+                "deltacommit",
+                [w for r in stats for w in (r["rel_path"], r["cdc_path"]) if w],
             )
-
-        # eager localCheckpoint: authoring is SIDE-EFFECTING (the log
-        # version probe makes re-execution append .log.2 orphans) — the
-        # stats stream below must read ONE materialized run
-        stats = (
-            joined.groupBy("path")
-            .applyInPandas(
-                author,
-                "rel_path string, file_id string, partition_path string, "
-                "prev_commit string, num_deletes long, size long, "
-                "cdc_path string, cdc_size long",
+            raise ValueError(
+                f"{len(short)} deleted path(s) (first: {short[0]}) have positions "
+                "the base file holds no distinct row at — out of range, repeated, "
+                "or under a path spelled otherwise than the scanned file's"
             )
-            .localCheckpoint(eager=True)
-        )
-
-        from onetable_spark.model import iter_inventory_rows
-
-        completed = os.path.join(self.hoodie_path, f"{instant}.deltacommit")
-        tmp = completed + ".tmp"
-        with open(tmp, "w") as f:
-            # same streaming emitter shape as commit(): stats grouped by
-            # partition path, O(batch) Python objects
-            f.write('{"partitionToWriteStats": {')
-            current_pp: str | None = None
-            for row in iter_inventory_rows(stats.orderBy("partition_path")):
-                stat = {
-                    "fileId": row["file_id"],
-                    "path": row["rel_path"],
-                    "prevCommit": row["prev_commit"],
-                    "numWrites": 0,
-                    "numInserts": 0,
-                    "numDeletes": row["num_deletes"],
-                    "numUpdateWrites": 0,
-                    "totalWriteBytes": row["size"],
-                    "fileSizeInBytes": row["size"],
-                    "partitionPath": row["partition_path"],
-                    "columnStats": None,
-                }
-                if row["cdc_path"]:
-                    stat["cdcStats"] = {row["cdc_path"]: row["cdc_size"]}
-                pp = row["partition_path"] or ""
-                if pp != current_pp:
-                    if current_pp is not None:
-                        f.write("], ")
-                    f.write(f"{json.dumps(pp)}: [")
-                    current_pp = pp
-                else:
-                    f.write(", ")
-                f.write(json.dumps(stat))
-            if current_pp is not None:
-                f.write("]")
-            f.write("}")
-            meta = {
-                "compacted": False,
-                "operationType": "DELETE",
-                "extraMetadata": {},
-            }
-            for k, v in meta.items():
-                f.write(f", {json.dumps(k)}: {json.dumps(v)}")
-            f.write("}")
-        os.replace(tmp, completed)
-        return instant
+        return self._emit_stat_rows(instant, "deltacommit", stats, "DELETE")
 
     def upsert_records(self, df: DataFrame) -> str:
         """Hudi MOR KEYED UPSERT (r12) — the third format's edge of the
         upsert triangle (Delta: ``upsert_by_key`` via deletion vectors;
         Iceberg: ``commit_upsert`` via equality deletes). Incoming
-        records are TAGGED against the live base files by record key
-        (executors read each base file's key columns once — the same
-        read real Hudi's SimpleIndex does): records whose key already
-        lives somewhere become ONE AVRO_DATA log block on that file
-        group (byte layout the real MOR reader and
-        ``compact_file_groups`` merge by key; the realtime view's
+        records are TAGGED against the live base files by record key —
+        Spark's parquet scan reads the base files' key columns once
+        (``_scan_slices``; the read real Hudi's SimpleIndex does) and one
+        join matches them. Records whose key already lives somewhere
+        become ONE AVRO_DATA log block on that file group, written by the
+        log author (``_author_logs``), which returns the keys it matched;
+        the byte layout is what the real MOR reader and
+        ``compact_file_groups`` merge by key, and the realtime view's
         updates-net-zero arithmetic holds because the stat carries
-        numUpdateWrites, not numInserts); records with NEW keys land in
-        a fresh base parquet — a new file group. One deltacommit carries
-        both. Source keys are assumed unique per batch (real Hudi
-        precombines; we document rather than dedupe).
+        numUpdateWrites, not numInserts. The remaining records — the
+        batch anti-joined against those keys — land in a fresh base
+        parquet, a new file group (a zero-row output file registers
+        nothing). One deltacommit carries both, emitted from the rows the
+        driver already holds. Source keys are assumed unique per batch
+        (real Hudi precombines; we document rather than dedupe).
+
+        Record keys follow Hudi's KeyGenUtils (``_record_key``): a NULL
+        composite part is ``__null__``, an empty one ``__empty__``; a
+        record with no key (a NULL or empty single field, or a composite
+        whose parts are all NULL or empty) refuses with ValueError and
+        leaves no pending instant; float/double key fields refuse
+        (``_refuse_float_keys``).
 
         Partitioned tables (r12): inserts derive their hive partition
         path from the table's partition fields (one Spark partitionBy
@@ -1857,15 +2173,6 @@ class HudiTimeline:
         duplicate the key across partitions). Keyless tables refuse —
         upserts are inexpressible without record keys. Returns the
         deltacommit instant."""
-        import pandas as _pd
-
-        from onetable_spark.formats.avro_schema import structtype_to_avro
-        from onetable_spark.formats.hudi_log import (
-            encode_logical,
-            logical_fields,
-            write_avro_log_block,
-        )
-
         desc = self.table_descriptor()
         kf = list(desc.record_key_fields)
         if not kf:
@@ -1873,322 +2180,91 @@ class HudiTimeline:
                 f"{self.table_path}: no record-key fields configured — "
                 "keyed upserts are inexpressible on a keyless table"
             )
-        pfs = list(desc.partition_fields)
+        _refuse_float_keys(self.table_path, desc.read_schema, kf)
         cols = [f.name for f in desc.read_schema.fields]
-        df = df.select(*cols)
-        avro_schema = structtype_to_avro(desc.read_schema, name="record")
-        # date / timestamp columns reach the log writer as Python values;
-        # the Avro datum carries them as epoch ints
-        logical = logical_fields(avro_schema)
-        session_tz = (
-            df.sparkSession.conf.get("spark.sql.session.timeZone") if logical else None
-        )
+        keyed = df.select(*cols).withColumn("_key", _required_key(_record_key(kf), kf))
+        slices = {g["path"]: g for g in self._file_slices() if g["path"]}
+        cdc_mode = self._cdc_mode()
+        instant = self._begin("deltacommit")
+        stats: list[dict] = []
+        if slices:
+            import pyarrow as pa
+            import pyarrow.compute as pc
 
-        def key_expr(frame: DataFrame) -> DataFrame:
-            if len(kf) == 1:
-                k = F.col(kf[0]).cast("string")
-            else:
-                k = F.concat_ws(
-                    ",", *[F.concat_ws(":", F.lit(f_), F.col(f_).cast("string"))
-                           for f_ in kf]
-                )
-            return frame.withColumn("_key", k)
+            base = self._scan_slices(list(slices), kf, desc.read_schema, cdc_mode is not None)
+            written = self._author_logs(
+                keyed.join(base.drop("_pos"), "_key"), slices, instant, kf, desc.read_schema,
+                cdc_mode, deletes=False,
+            )
+            stats = written.drop_columns(["matched"]).to_pylist()
+            matched = pa.table({"_key": pc.list_flatten(written.column("matched"))})
+            keyed = keyed.join(
+                F.broadcast(self.spark.createDataFrame(matched)), "_key", "left_anti"
+            )
+        with self._refusing_keyless_rows(instant, "deltacommit"):
+            # the filter evaluates the key, so a keyless record refuses
+            # here too on a table with no base file yet
+            stats += self._write_inserts(
+                keyed.where(F.col("_key").isNotNull()).select(*cols),
+                desc.partition_fields,
+                instant,
+            )
+        return self._emit_stat_rows(instant, "deltacommit", stats, "UPSERT")
+
+    def _write_inserts(self, rows: DataFrame, pfs, instant: str) -> list[dict]:
+        """Write ``rows`` as fresh base parquet, each emitted file its own
+        file group in its hive partition dir; returns their stat rows. A
+        file with no rows is deleted and registers nothing."""
+        import shutil
+
+        import pyarrow.parquet as pq
+
+        from onetable_spark.schema.partitions import transform_column
 
         table_path = self.table_path
-        table_prefix = table_path.rstrip("/") + "/"
-        instants = self.completed_instants()
-        keyed = key_expr(df)
-        if instants:
-            commits = self._commits_df(instants)
-            base = self._live_base_slices(
-                self._exploded_stats(commits), commits
-            ).select(
-                F.concat(F.lit(table_prefix), F.col("rel_path")).alias("path"),
-                "file_id",
-                "partition_path",
-                F.col("instant").alias("base_instant"),
-            )
-
-            def read_base_keys(batches):
-                import pyarrow.parquet as _pq
-
-                for pdf in batches:
-                    frames = []
-                    for p, fid, pp, bi in zip(
-                        pdf["path"], pdf["file_id"],
-                        pdf["partition_path"], pdf["base_instant"],
-                    ):
-                        t = _pq.read_table(p, columns=kf).to_pandas(
-                            integer_object_nulls=True
-                        )
-                        if len(kf) == 1:
-                            keys = t[kf[0]].astype(str)
-                        else:
-                            keys = t[kf[0]].astype(str).radd(f"{kf[0]}:")
-                            for f_ in kf[1:]:
-                                keys = keys + "," + t[f_].astype(str).radd(f"{f_}:")
-                        frames.append(
-                            _pd.DataFrame(
-                                {"_key": keys, "path": p, "file_id": fid,
-                                 "partition_path": pp or "",
-                                 "base_instant": bi}
-                            )
-                        )
-                    yield (
-                        _pd.concat(frames)
-                        if frames
-                        else _pd.DataFrame(
-                            columns=["_key", "path", "file_id",
-                                     "partition_path", "base_instant"]
-                        )
-                    )
-
-            base_keys = base.mapInPandas(
-                read_base_keys,
-                "_key string, path string, file_id string, "
-                "partition_path string, base_instant string",
-            )
-            updates = keyed.join(base_keys, "_key")
-            inserts = keyed.join(base_keys.select("_key"), "_key", "left_anti")
-        else:
-            updates = None
-            inserts = keyed
-
-        instant, _ = self._claim_instant("deltacommit")
-        inflight = os.path.join(
-            self.hoodie_path, f"{instant}.deltacommit.inflight"
-        )
-        open(inflight, "w").close()
-
-        # RFC-51 supplemental cdc logging: when the table enables
-        # hoodie.table.cdc.enabled, every UPDATED file group also gets a
-        # ``-cdc`` log file whose CDC_DATA block carries op='u' records
-        # with BEFORE and after images as JSON strings (HoodieCDCUtils'
-        # data_before_after schema; op_key_only/data_before honored).
-        # New-file-group inserts author no cdc file — real Hudi's
-        # BASE_FILE_INSERT inference derives them at read (cdc_feed).
-        props = self.table_properties()
-        cdc_on = props.get("hoodie.table.cdc.enabled", "false") == "true"
-        cdc_mode = props.get(
-            "hoodie.table.cdc.supplemental.logging.mode", "data_before_after"
-        )
-        stat_rows: list[dict] = []
-        if updates is not None:
-
-            def author(key, pdf):
-                path = key[0]
-                row0 = pdf.iloc[0]
-                records = [
-                    {
-                        c: (v.item() if hasattr(v, "item") else v)
-                        for c, v in zip(cols, vals)
-                    }
-                    for vals in zip(*[pdf[c] for c in cols])
-                ]
-                log_dir = os.path.dirname(path)
-                file_id = row0["file_id"]
-                base_instant = row0["base_instant"]
-                version = 1
-                while True:
-                    name = f".{file_id}_{base_instant}.log.{version}_0-0-0"
-                    lp = os.path.join(log_dir, name)
-                    if not os.path.exists(lp):
-                        break
-                    version += 1
-                datums = (
-                    [encode_logical(r, logical, session_tz) for r in records]
-                    if logical
-                    else records
-                )
-                write_avro_log_block(
-                    lp, datums, avro_schema, instant, append=False
-                )
-                rel_log = (
-                    lp[len(table_prefix):] if lp.startswith(table_prefix) else lp
-                )
-                cdc_rel, cdc_size = None, None
-                if cdc_on:
-                    import json as _json
-
-                    import pyarrow.parquet as _pq
-
-                    from onetable_spark.formats.hudi_log import (
-                        write_cdc_log_block,
-                    )
-
-                    # BEFORE images: the matched keys' current rows in
-                    # this file group's base parquet (one columnar read
-                    # per touched group, executor-side)
-                    t = _pq.read_table(path).to_pandas(
-                        integer_object_nulls=True
-                    )
-                    if len(kf) == 1:
-                        bkeys = t[kf[0]].astype(str)
-                    else:
-                        bkeys = t[kf[0]].astype(str).radd(f"{kf[0]}:")
-                        for f_ in kf[1:]:
-                            bkeys = bkeys + "," + t[f_].astype(str).radd(f"{f_}:")
-                    before_by_key = {}
-                    for k_, vals in zip(bkeys, zip(*[t[c] for c in cols])):
-                        before_by_key[k_] = {
-                            c: (v.item() if hasattr(v, "item") else v)
-                            for c, v in zip(cols, vals)
-                        }
-                    ts_ms = str(instant_to_millis(instant))
-                    cdc_records = []
-                    for k_, after in zip(pdf["_key"], records):
-                        rec = {"op": "u"}
-                        if cdc_mode == "data_before_after":
-                            rec["ts_ms"] = ts_ms
-                            rec["before"] = _json.dumps(
-                                before_by_key.get(k_), default=str
-                            )
-                            rec["after"] = _json.dumps(after, default=str)
-                        else:
-                            rec["record_key"] = k_
-                            if cdc_mode == "data_before":
-                                rec["before"] = _json.dumps(
-                                    before_by_key.get(k_), default=str
-                                )
-                        cdc_records.append(rec)
-                    cp = os.path.join(
-                        log_dir,
-                        f".{file_id}_{base_instant}.log.{version}_0-0-0-cdc",
-                    )
-                    write_cdc_log_block(cp, cdc_records, instant, mode=cdc_mode)
-                    cdc_rel = (
-                        cp[len(table_prefix):]
-                        if cp.startswith(table_prefix)
-                        else cp
-                    )
-                    cdc_size = os.path.getsize(cp)
-                return _pd.DataFrame(
-                    [
-                        {
-                            "rel_path": rel_log,
-                            "file_id": file_id,
-                            "partition_path": row0["partition_path"] or "",
-                            "prev_commit": base_instant,
-                            "num_updates": len(records),
-                            "size": os.path.getsize(lp),
-                            "cdc_path": cdc_rel,
-                            "cdc_size": cdc_size,
-                        }
-                    ]
-                )
-
-            # eager localCheckpoint: block authoring is SIDE-EFFECTING (the
-            # log version probe makes re-execution append .log.2 orphans)
-            upd_stats = (
-                updates.groupBy("path")
-                .applyInPandas(
-                    author,
-                    "rel_path string, file_id string, partition_path string, "
-                    "prev_commit string, num_updates long, size long, "
-                    "cdc_path string, cdc_size long",
-                )
-                .localCheckpoint(eager=True)
-            )
-            # driver-ok: one row per AFFECTED file group (commit payload)
-            for row in upd_stats.collect():
-                stat_rows.append(
-                    {
-                        "fileId": row["file_id"],
-                        "path": row["rel_path"],
-                        "prevCommit": row["prev_commit"],
-                        "numWrites": row["num_updates"],
-                        "numInserts": 0,
-                        "numDeletes": 0,
-                        "numUpdateWrites": row["num_updates"],
-                        "totalWriteBytes": row["size"],
-                        "fileSizeInBytes": row["size"],
-                        "partitionPath": row["partition_path"],
-                        "columnStats": None,
-                        **(
-                            {"cdcStats": {row["cdc_path"]: row["cdc_size"]}}
-                            if row["cdc_path"]
-                            else {}
-                        ),
-                    }
-                )
-
-        # driver-ok: emptiness probe, one boolean
-        if not inserts.isEmpty():
-            import shutil as _shutil
-
-            import pyarrow.parquet as _pq
-
-            from onetable_spark.schema.partitions import transform_column
-
-            scratch = os.path.join(
-                table_path, f"_upsert_{uuid.uuid4().hex[:12]}"
-            )
-            ins = inserts.select(*cols)
-            pcols = []
-            for pf in pfs:
-                # __pp_-prefixed duplicates: partitionBy consumes its
-                # column, and Hudi data files keep the ORIGINAL field
-                ins = ins.withColumn(
-                    f"__pp_{pf.name}", transform_column(pf).cast("string")
-                )
-                pcols.append(f"__pp_{pf.name}")
+        scratch = os.path.join(table_path, f"_upsert_{uuid.uuid4().hex[:12]}")
+        pcols = []
+        for pf in pfs:
+            # __pp_-prefixed duplicates: partitionBy consumes its
+            # column, and Hudi data files keep the ORIGINAL field
+            rows = rows.withColumn(f"__pp_{pf.name}", transform_column(pf).cast("string"))
+            pcols.append(f"__pp_{pf.name}")
+        out = []
+        try:
             if pcols:
-                ins.write.partitionBy(*pcols).parquet(scratch)
+                rows.write.partitionBy(*pcols).parquet(scratch)
             else:
-                ins.coalesce(1).write.parquet(scratch)
-            # each emitted file becomes its own file group in its hive
-            # partition dir (walk is O(touched partitions) — the commit
-            # payload, not the table)
+                rows.coalesce(1).write.parquet(scratch)
+            # walk is O(touched partitions) — the commit payload, not the table
             for root_, _dirs, files_ in os.walk(scratch):
-                segs = [
-                    s for s in os.path.relpath(root_, scratch).split(os.sep)
-                    if "=" in s
-                ]
+                segs = [s for s in os.path.relpath(root_, scratch).split(os.sep) if "=" in s]
                 pp = "/".join(s.replace("__pp_", "", 1) for s in segs)
                 for fname in files_:
                     if not fname.endswith(".parquet"):
                         continue
+                    src = os.path.join(root_, fname)
+                    n = pq.read_metadata(src).num_rows
+                    if not n:
+                        continue
                     d = os.path.join(table_path, pp) if pp else table_path
                     os.makedirs(d, exist_ok=True)
                     new_name = f"{uuid.uuid4().hex[:8]}-0_0-0-0_{instant}.parquet"
-                    new_abs = os.path.join(d, new_name)
-                    os.replace(os.path.join(root_, fname), new_abs)
+                    os.replace(src, os.path.join(d, new_name))
                     rel = f"{pp}/{new_name}" if pp else new_name
-                    n_ins = _pq.read_metadata(new_abs).num_rows
-                    stat_rows.append(
+                    out.append(
                         {
-                            "fileId": _file_id_for(rel),
-                            "path": rel,
-                            "prevCommit": "null",
-                            "numWrites": n_ins,
-                            "numInserts": n_ins,
-                            "numDeletes": 0,
-                            "numUpdateWrites": 0,
-                            "totalWriteBytes": os.path.getsize(new_abs),
-                            "fileSizeInBytes": os.path.getsize(new_abs),
-                            "partitionPath": pp,
-                            "columnStats": None,
+                            "rel_path": rel,
+                            "file_id": _file_id_for(rel),
+                            "partition_path": pp,
+                            "prev_commit": "null",
+                            "num_writes": n,
+                            "num_inserts": n,
+                            "size": os.path.getsize(os.path.join(d, new_name)),
                         }
                     )
-            _shutil.rmtree(scratch, ignore_errors=True)
-
-        completed = os.path.join(self.hoodie_path, f"{instant}.deltacommit")
-        tmp = completed + ".tmp"
-        by_pp: dict[str, list[dict]] = {}
-        for s in stat_rows:
-            by_pp.setdefault(s["partitionPath"] or "", []).append(s)
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "partitionToWriteStats": by_pp,
-                    "compacted": False,
-                    "operationType": "UPSERT",
-                    "extraMetadata": {},
-                },
-                f,
-            )
-        os.replace(tmp, completed)
-        return instant
+        finally:
+            shutil.rmtree(scratch, ignore_errors=True)
+        return out
 
     def compact_file_groups(self) -> Optional[str]:
         """MOR COMPACTION (r12): merge every file group's unmerged log
@@ -2198,198 +2274,80 @@ class HudiTimeline:
         logs), and a Delta/Iceberg target synced from them is honest at
         the ROW level, not just in netted counts.
 
-        Semantics per file group, blocks applied in instant order:
-        AVRO_DATA records UPSERT by record key (insert new keys, replace
-        existing — matching the realtime view's inserts-net/updates-zero
-        arithmetic) or plain-append on a keyless table; DELETE blocks
-        drop rows by record key; HFILE/PARQUET blocks refuse (no byte
-        decoder — never silently drop rows). The new base file keeps its
-        file group's id (``{fileId}_0-0-0_{instant}.parquet``, HoodieBase
-        file naming) so the timeline window supersedes the old slice and
-        time travel still sees it. Work is distributed one file group per
-        task (applyInPandas) — the same parallelism real compaction gets.
+        Semantics per file group: ``_merge_slice``, the same merge that
+        gives the log author its cdc before-images — blocks applied in
+        instant order, AVRO_DATA records UPSERT by record key (insert new
+        keys, replace existing — matching the realtime view's
+        inserts-net/updates-zero arithmetic) or plain-append on a keyless
+        table; DELETE blocks drop rows by record key; HFILE/PARQUET
+        blocks refuse (no byte decoder — never silently drop rows). The
+        new base file keeps its file group's id
+        (``{fileId}_0-0-0_{instant}.parquet``, HoodieBase file naming) so
+        the timeline window supersedes the old slice and time travel
+        still sees it. The slices come off the commit files on the driver
+        (``_file_slices``); one ``mapInArrow`` pass merges one file group
+        per task — the same parallelism real compaction gets — and is
+        collected once as Arrow into the commit. The merge is columnar:
+        the base rows stay an Arrow table, and only the decoded log
+        records pass through Python.
 
         Returns the compaction commit instant, or None when nothing needs
         merging. Reference contrast: the reference has no compaction (or
         any log plane); it would keep reading the stale base files
         (HudiDataFileExtractor.java:157)."""
-        import pandas as _pd
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-        instants = self.completed_instants()
-        if not instants:
+        if not self.completed_instants():
             return None
-        commits = self._commits_df(instants)
-        exploded = self._exploded_stats(commits)
-        live = self._live_base_slices(exploded, commits)
-        logs = exploded.filter(F.col("ws.path").contains(".log.")).select(
-            F.col("instant").alias("log_instant"),
-            F.col("ws.fileId").alias("file_id"),
-            F.col("ws.path").alias("log_rel"),
-        )
-        base_keys = live.select(
-            "file_id",
-            F.col("instant").alias("base_instant"),
-            "rel_path",
-            "partition_path",
-        )
-        # driver-ok: emptiness probe, one boolean
-        if not logs.join(
-            base_keys.select("file_id"), "file_id", "left_anti"
-        ).isEmpty():
+        slices = self._file_slices()
+        if any(g["path"] is None for g in slices):
             raise ValueError(
                 f"{self.table_path}: MOR file group holds ONLY log files "
                 "(no base file to merge into); cannot compact"
             )
-        unmerged = logs.join(base_keys, "file_id").where(
-            F.col("log_instant") > F.col("base_instant")
-        )
-        # driver-ok: emptiness probe, one boolean
-        if unmerged.isEmpty():
+        todo = [g for g in slices if g["logs"]]
+        if not todo:
             return None
+        kf = list(self.table_descriptor().record_key_fields)
+        tz = self.spark.conf.get("spark.sql.session.timeZone")
+        prefix = self.table_path.rstrip("/") + "/"
+        out_schema = to_arrow_schema(_STAT_ROWS)
+        instant = self._begin("commit")
 
-        key_fields = tuple(self.table_descriptor().record_key_fields)
-        kf = list(key_fields)
-        table_prefix = self.table_path.rstrip("/") + "/"
-        instant, _ = self._claim_instant("commit")
-        inflight = os.path.join(self.hoodie_path, f"{instant}.inflight")
-        open(inflight, "w").close()
-
-        def merge(key, pdf):
+        def merge(batches):
             import pyarrow as pa
             import pyarrow.parquet as pq
 
-            from onetable_spark.formats.hudi_log import (
-                avro_block_records,
-                delete_block_records,
-                read_log_blocks,
-            )
+            for batch in batches:
+                out = []
+                for g in batch.to_pylist():
+                    merged = _merge_slice(pq.read_table(g["path"]), g["logs"], kf, tz)
+                    new = os.path.join(
+                        os.path.dirname(g["path"]),
+                        f"{g['file_id']}_0-0-0_{instant}.parquet",
+                    )
+                    pq.write_table(merged, new)
+                    out.append(
+                        {
+                            "rel_path": new[len(prefix):],
+                            "file_id": g["file_id"],
+                            "partition_path": g["partition_path"],
+                            "prev_commit": g["base_instant"],
+                            "num_writes": merged.num_rows,
+                            "size": os.path.getsize(new),
+                        }
+                    )
+                yield pa.RecordBatch.from_pylist(out, schema=out_schema)
 
-            file_id = key[0]
-            row0 = pdf.iloc[0]
-            base_rel = row0["rel_path"]
-            pp = row0["partition_path"] or ""
-            base_abs = table_prefix + base_rel
-            base_tbl = pq.read_table(base_abs)
-            cols = list(base_tbl.schema.names)
-            df = base_tbl.to_pandas(integer_object_nulls=True)
-
-            def key_series(frame: _pd.DataFrame) -> _pd.Series:
-                if len(kf) == 1:
-                    return frame[kf[0]].astype(str)
-                s = frame[kf[0]].astype(str).radd(f"{kf[0]}:")
-                for f_ in kf[1:]:
-                    s = s + "," + frame[f_].astype(str).radd(f"{f_}:")
-                return s
-
-            ordered = pdf.sort_values("log_instant")
-            for log_rel in ordered["log_rel"]:
-                for block in read_log_blocks(table_prefix + log_rel):
-                    btype = block["type"]
-                    if btype == "avro_data":
-                        _, recs = avro_block_records(block, decode=True)
-                        rec_df = _pd.DataFrame(
-                            [{c: r.get(c) for c in cols} for r in recs],
-                            columns=cols,
-                        )
-                        if kf and not rec_df.empty:
-                            # upsert: replace existing keys, append new
-                            df = df[~key_series(df).isin(set(key_series(rec_df)))]
-                        df = _pd.concat([df, rec_df], ignore_index=True)
-                    elif btype == "delete":
-                        if not kf:
-                            raise ValueError(
-                                f"{log_rel}: DELETE block on a keyless "
-                                "table — rows are unidentifiable"
-                            )
-                        _, recs = delete_block_records(block)
-                        dead = {r["recordKey"] for r in recs}
-                        df = df[~key_series(df).isin(dead)]
-                    elif btype in ("command", "corrupt"):
-                        continue
-                    else:
-                        raise ValueError(
-                            f"{log_rel}: cannot compact a {btype} block — "
-                            "no byte decoder; refusing rather than "
-                            "dropping its rows"
-                        )
-            new_name = f"{file_id}_0-0-0_{instant}.parquet"
-            rel_dir = os.path.dirname(base_rel)
-            new_rel = f"{rel_dir}/{new_name}" if rel_dir else new_name
-            out = table_prefix + new_rel
-            pq.write_table(
-                pa.Table.from_pandas(
-                    df[cols], schema=base_tbl.schema, preserve_index=False
-                ),
-                out,
-            )
-            return _pd.DataFrame(
-                [
-                    {
-                        "rel_path": new_rel,
-                        "file_id": file_id,
-                        "partition_path": pp,
-                        "prev_commit": row0["base_instant"],
-                        "num_writes": len(df),
-                        "size": os.path.getsize(out),
-                    }
-                ]
-            )
-
-        # eager localCheckpoint: the merge WRITES the new base files — the
-        # stats stream below must read one materialized run
-        stats = (
-            unmerged.groupBy("file_id")
-            .applyInPandas(
-                merge,
-                "rel_path string, file_id string, partition_path string, "
-                "prev_commit string, num_writes long, size long",
-            )
-            .localCheckpoint(eager=True)
+        frame = local_rows_df(
+            self.spark,
+            [tuple(g.values()) for g in todo],
+            "path string, file_id string, partition_path string, "
+            "base_instant string, logs array<string>",
+            slices=len(todo),
         )
-
-        from onetable_spark.model import iter_inventory_rows
-
-        completed = os.path.join(self.hoodie_path, f"{instant}.commit")
-        tmp = completed + ".tmp"
-        with open(tmp, "w") as f:
-            f.write('{"partitionToWriteStats": {')
-            current_pp: str | None = None
-            for row in iter_inventory_rows(stats.orderBy("partition_path")):
-                stat = {
-                    "fileId": row["file_id"],
-                    "path": row["rel_path"],
-                    "prevCommit": row["prev_commit"],
-                    "numWrites": row["num_writes"],
-                    "numInserts": 0,
-                    "numDeletes": 0,
-                    "numUpdateWrites": 0,
-                    "totalWriteBytes": row["size"],
-                    "fileSizeInBytes": row["size"],
-                    "partitionPath": row["partition_path"],
-                    "columnStats": None,
-                }
-                pp = row["partition_path"] or ""
-                if pp != current_pp:
-                    if current_pp is not None:
-                        f.write("], ")
-                    f.write(f"{json.dumps(pp)}: [")
-                    current_pp = pp
-                else:
-                    f.write(", ")
-                f.write(json.dumps(stat))
-            if current_pp is not None:
-                f.write("]")
-            f.write("}")
-            meta = {
-                "compacted": True,
-                "operationType": "COMPACT",
-                "extraMetadata": {},
-            }
-            for k, v in meta.items():
-                f.write(f", {json.dumps(k)}: {json.dumps(v)}")
-            f.write("}")
-        os.replace(tmp, completed)
-        return instant
+        stats = frame.mapInArrow(merge, _STAT_ROWS).toArrow().to_pylist()
+        return self._emit_stat_rows(instant, "commit", stats, "COMPACT")
 
     def rollback(self, instant: str) -> str:
         """Roll back a completed commit (HudiClient ROLLBACK handling)."""
@@ -2536,7 +2494,8 @@ def record_key_to_dict(record_key, key_fields: list[str]) -> dict:
     """One HoodieKey recordKey string back into per-field values: a
     single-field key is the bare value (SimpleKeyGenerator), a composite
     key the ComplexKeyGenerator ``f1:v1,f2:v2`` form (the exact form
-    ``commit_delete_logs``/``upsert_records`` author). Unparseable
+    ``_record_key`` encodes), its ``__null__``/``__empty__`` placeholders
+    mapped back to NULL and empty. Unparseable
     segments of a composite key are dropped — the generator's own form
     is lossy for values containing ``,``/``:``, exactly as in real
     Hudi."""
@@ -2549,7 +2508,7 @@ def record_key_to_dict(record_key, key_fields: list[str]) -> dict:
         if ":" in seg:
             f, v = seg.split(":", 1)
             if f in key_fields:
-                parts[f] = v
+                parts[f] = {_NULL_PART: None, _EMPTY_PART: ""}.get(v, v)
     return {f: parts.get(f) for f in key_fields}
 
 
@@ -2597,21 +2556,24 @@ def _numeric_key_fields(schema: T.StructType, key_fields) -> set[str]:
     }
 
 
-def read_optimized_states_before(
-    table_path: str, instants: list[str]
-) -> dict[str, list[str]]:
-    """PURE-PYTHON replay of the read-optimized view at MANY cutoffs in
-    ONE forward walk: for each requested instant, the rel_paths of live
-    base parquet files strictly BEFORE it — the latest base slice per
-    file group, minus groups replaced at a later-or-equal replacecommit,
-    with rollback/restore undo applied incrementally. Mirrors
-    ``HudiTimeline.snapshot_files_before(view='read_optimized')``
-    (``_live_base_slices``) without a SparkSession, so a STREAMING task
-    can resolve replacecommit victims from the timeline's own tiny JSON
-    files (metadata only; no data file is read). Serving all of a
-    batch's R replacecommits from one walk keeps the planning task
-    O(timeline + R·groups) instead of O(R·timeline) on a
-    clustering-heavy backfill."""
+def _file_group_states(
+    table_path: str, cutoffs=()
+) -> dict[Optional[str], dict[str, dict]]:
+    """PURE-PYTHON replay of the active timeline's file groups, in ONE
+    forward walk over the timeline's own JSON files (metadata only; no
+    data file is read, no SparkSession needed). For each requested cutoff
+    instant the groups live strictly BEFORE it, and under the key ``None``
+    the groups live after the whole timeline: fileId → ``{rel,
+    partition_path, instant, logs}`` — the latest base slice (``rel`` None
+    for a group holding only log files), the instant that wrote it, and
+    the relative paths of the group's log files newer than it in instant
+    order. Groups replaced at a later-or-equal replacecommit are gone;
+    rollback/restore undo applies incrementally. The same rules as
+    ``HudiTimeline._live_slices`` (``snapshot_files``), so the
+    writers and a STREAMING task resolve the same slices as the Spark
+    replay. Serving all of a batch's R cutoffs from one walk keeps it
+    O(timeline + R·groups) instead of O(R·timeline) on a clustering-heavy
+    backfill."""
     hoodie = os.path.join(table_path, ".hoodie")
     events = []
     for f in os.listdir(hoodie):
@@ -2619,24 +2581,38 @@ def read_optimized_states_before(
         if len(parts) == 2 and parts[1] in COMMIT_ACTIONS + UNDO_ACTIONS:
             events.append((parts[0], parts[1]))
     events.sort()
-    cutoffs = sorted(set(instants))
-    out: dict[str, list[str]] = {}
-    # adds[fid] = {instant: rel}; repl[fid] = {replace instants} —
-    # keyed per instant so a rollback can surgically remove one
-    # commit's contributions mid-walk
-    adds: dict[str, dict[str, str]] = {}
+    cutoffs = sorted(set(cutoffs))
+    out: dict[Optional[str], dict[str, dict]] = {}
+    # adds[fid] = {instant: (rel, partition)}; logs[fid] = {instant:
+    # [rel]}; repl[fid] = {replace instants} — keyed per instant so a
+    # rollback can surgically remove one commit's contributions mid-walk
+    adds: dict[str, dict[str, tuple]] = {}
+    logs: dict[str, dict[str, list]] = {}
     repl: dict[str, set[str]] = {}
 
-    def snapshot() -> list[str]:
-        live = []
-        for fid, slices in adds.items():
-            if not slices:
+    def snapshot() -> dict[str, dict]:
+        live = {}
+        for fid in adds.keys() | logs.keys():
+            slices = adds.get(fid) or {}
+            i_star = max(slices) if slices else None
+            if any(i_star is None or r >= i_star for r in repl.get(fid, ())):
                 continue
-            i_star = max(slices)
-            if any(r >= i_star for r in repl.get(fid, ())):
+            rel, pp = slices[i_star] if slices else (None, None)
+            group_logs = logs.get(fid) or {}
+            if rel is None and not group_logs:
                 continue
-            live.append(slices[i_star])
-        return sorted(live)
+            live[fid] = {
+                "rel": rel,
+                "partition_path": pp,
+                "instant": i_star,
+                "logs": [
+                    p
+                    for i in sorted(group_logs)
+                    if i_star is None or i > i_star
+                    for p in group_logs[i]
+                ],
+            }
+        return live
 
     ci = 0
 
@@ -2656,24 +2632,43 @@ def read_optimized_states_before(
             undone = set(meta.get("commitsRollback") or []) | set(
                 meta.get("instantsToRollback") or []
             )
-            for slices in adds.values():
+            for per_instant in (*adds.values(), *logs.values()):
                 for u in undone:
-                    slices.pop(u, None)
+                    per_instant.pop(u, None)
             for rset in repl.values():
                 rset -= undone
             continue
         for stats in (meta.get("partitionToWriteStats") or {}).values():
             for s in stats or []:
                 rel = s.get("path")
-                if not rel or ".log." in rel:
+                if not rel:
                     continue
                 fid = s.get("fileId") or _file_id_for(rel)
-                adds.setdefault(fid, {})[i] = rel
+                if ".log." in rel:
+                    logs.setdefault(fid, {}).setdefault(i, []).append(rel)
+                else:
+                    adds.setdefault(fid, {})[i] = (rel, s.get("partitionPath"))
         for ids in (meta.get("partitionToReplaceFileIds") or {}).values():
             for fid in ids or []:
                 repl.setdefault(fid, set()).add(i)
     flush_until(None)
+    out[None] = snapshot()
     return out
+
+
+def read_optimized_states_before(
+    table_path: str, instants: list[str]
+) -> dict[str, list[str]]:
+    """For each requested instant, the rel_paths of live base parquet
+    files strictly BEFORE it (``_file_group_states``) — the read-optimized
+    view ``HudiTimeline.snapshot_files_before(view='read_optimized')``
+    serves, without a SparkSession, so a STREAMING task can resolve
+    replacecommit victims from the timeline's own tiny JSON files."""
+    states = _file_group_states(table_path, instants)
+    return {
+        c: sorted(g["rel"] for g in states[c].values() if g["rel"] is not None)
+        for c in set(instants)
+    }
 
 
 def read_optimized_files_before(table_path: str, instant: str) -> list[str]:

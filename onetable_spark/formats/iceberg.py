@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from onetable_spark.formats.avro_codec import read_container, write_container
-from onetable_spark.session import local_path, local_rows_df
+from onetable_spark.session import local_path, local_rows_df, tagged_rows
 from onetable_spark.model import (
     FILES_SCHEMA,
     DataLayoutStrategy,
@@ -901,16 +901,10 @@ class IcebergTable:
         paths: list[str],
         seqs: Optional[list[tuple[str, int]]] = None,
     ) -> DataFrame:
-        """Rows of the given data files through Spark's parquet scan, each
-        tagged with its file (``_path``, folded to the plain manifest path)
-        and its parquet row index (``_pos``) — the coordinates position
-        deletes address. ``seqs`` ((path, data sequence number) pairs)
-        adds each file's ``_seq`` through a broadcast join."""
-        rows = self.spark.read.schema(schema).parquet(*paths).select(
-            "*",
-            local_path(F.col("_metadata.file_path")).alias("_path"),
-            F.col("_metadata.row_index").alias("_pos"),
-        )
+        """``session.tagged_rows`` of the given data files; ``seqs``
+        ((path, data sequence number) pairs) adds each file's ``_seq``
+        through a broadcast join."""
+        rows = tagged_rows(self.spark, schema, paths)
         if seqs is None:
             return rows
         seq_df = self.spark.createDataFrame(

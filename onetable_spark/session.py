@@ -60,6 +60,20 @@ def local_path(uri):
     return F.regexp_replace(F.url_decode(uri), r"^file:/+", "/")
 
 
+def tagged_rows(spark: SparkSession, schema, paths):
+    """Rows of the given parquet files through Spark's parquet scan, each
+    tagged with its file (``_path``, folded by ``local_path`` to the plain
+    path that log actions and manifest entries carry) and its parquet row
+    index (``_pos``) — the coordinates position deletes address."""
+    from pyspark.sql import functions as F
+
+    return spark.read.schema(schema).parquet(*paths).select(
+        "*",
+        local_path(F.col("_metadata.file_path")).alias("_path"),
+        F.col("_metadata.row_index").alias("_pos"),
+    )
+
+
 def get_spark(app_name: str = "onetable_spark", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-conscious defaults."""
     if cpus is None:

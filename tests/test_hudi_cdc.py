@@ -120,6 +120,19 @@ def test_cdc_feed_exact_and_inferred_legs(spark, cdc_table):
     assert len(feed2.collect()) == 3  # 2 updates + 1 insert
 
 
+def test_second_update_before_image_reads_the_merged_slice(spark, cdc_table):
+    """A key updated twice: the second change's before-image is the first
+    change's after-image — the base row with its file group's earlier
+    log block applied — not the stale base row."""
+    base, tl = cdc_table
+    schema = "id long, name string, score long"
+    first = tl.upsert_records(spark.createDataFrame([(2, "v2", 20)], schema))
+    tl.upsert_records(spark.createDataFrame([(2, "v3", 30)], schema))
+    (u,) = tl.cdc_feed(from_instant=first).collect()
+    assert u["op"] == "u"
+    assert (json.loads(u["before"])["name"], json.loads(u["after"])["name"]) == ("v2", "v3")
+
+
 def test_vacuum_counts_cdc_files_as_referenced(spark, cdc_table):
     """The cdc file lives in cdcStats, not the stat's path — the vacuum
     reference set must still include it (vacuum's LISTING excludes

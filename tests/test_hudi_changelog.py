@@ -4,9 +4,13 @@ tests/test_delta_cdf.py, tests/test_iceberg_changelog.py).
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 import shutil
+from decimal import Decimal
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,13 +19,9 @@ from onetable_spark.model import DataLayoutStrategy, Table, TableFormat
 from onetable_spark.sources.parquet_inventory import build_inventory
 
 
-@pytest.fixture()
-def mor_table(spark, tmp_path):
-    base = str(tmp_path / "hcl")
+def _mor(spark, base, df, keys=("id",)):
+    """A MOR table at ``base`` whose one base file holds ``df``."""
     os.makedirs(base)
-    df = spark.createDataFrame(
-        [(i, f"name{i}") for i in range(6)], "id long, name string"
-    )
     stage = os.path.join(base, "_stage")
     df.coalesce(1).write.parquet(stage)
     part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
@@ -32,10 +32,19 @@ def mor_table(spark, tmp_path):
     tl.init_table(
         Table(name="t", base_path=base, table_format=TableFormat.HUDI,
               read_schema=df.schema, layout=DataLayoutStrategy.FLAT,
-              record_key_fields=("id",))
+              record_key_fields=tuple(keys))
     )
     tl.commit(adds=build_inventory(spark, [f1], root=base), action="deltacommit")
-    return base, tl
+    return tl
+
+
+@pytest.fixture()
+def mor_table(spark, tmp_path):
+    base = str(tmp_path / "hcl")
+    df = spark.createDataFrame(
+        [(i, f"name{i}") for i in range(6)], "id long, name string"
+    )
+    return base, _mor(spark, base, df)
 
 
 def _ops(df):
@@ -236,3 +245,224 @@ def test_hudi_writers_emit_no_type_hint_warning(spark, mor_table):
     assert not [
         w for w in caught if "Cannot infer the eval type" in str(w.message)
     ]
+
+
+def test_upsert_runs_a_bounded_number_of_jobs(spark, mor_table):
+    """One keyed upsert (one update, one insert) reads the base keys once
+    through Spark's parquet scan, runs its side-effecting log author in
+    one action and spools the commit from the rows the driver holds: at
+    most 7 Spark jobs, counted through its job group. The changelog is
+    unchanged."""
+    base, tl = mor_table
+    seed = tl.latest_instant()
+    batch = spark.createDataFrame([(2, "name2_v2"), (9, "nine")], "id long, name string")
+    sc = spark.sparkContext
+    sc.setJobGroup("hudi_upsert_jobs", "one keyed upsert")
+    try:
+        tl.upsert_records(batch)
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup("hudi_upsert_jobs")
+    assert len(jobs) <= 7, f"expected at most 7 jobs, saw {len(jobs)}"
+    assert _ops(tl.changelog(from_instant=seed)) == {("u", 2, "name2_v2"), ("i", 9, "nine")}
+
+
+@pytest.mark.parametrize(
+    "schema,rows,update",
+    [
+        ("id long, tag string, name string", [(1, None, "a"), (1, "x", "b")], (1, None, "a2")),
+        ("id long, flag boolean, name string", [(1, True, "a"), (1, False, "b")], (1, True, "a2")),
+    ],
+    ids=["null_part", "boolean_part"],
+)
+def test_upsert_matches_composite_keys(spark, tmp_path, schema, rows, update):
+    """A composite key with a NULL or a boolean part matches its row: the
+    upsert logs an update, the realtime count stays 2, and compaction
+    merges the logged record over the base row it replaces."""
+    df = spark.createDataFrame(rows, schema)
+    tl = _mor(spark, str(tmp_path / "ck"), df, keys=df.columns[:2])
+    seed = tl.latest_instant()
+    tl.upsert_records(spark.createDataFrame([update], schema))
+    rt = tl.snapshot_files(view="realtime").collect()
+    assert sum(r["record_count"] for r in rt) == 2
+    got = [(r["_change_operation"], r["name"]) for r in tl.changelog(from_instant=seed).collect()]
+    assert got == [("u", "a2")]
+    tl.compact_file_groups()
+    paths = [r["path"] for r in tl.snapshot_files().collect()]
+    merged = spark.read.parquet(*paths).collect()
+    assert sorted(map(tuple, merged), key=str) == sorted([update, rows[1]], key=str)
+
+
+def test_upsert_refuses_records_without_a_key(spark, mor_table, tmp_path):
+    """A NULL single-field key, or a composite key whose parts are all
+    NULL, is no Hudi record key: the upsert refuses with ValueError and
+    takes back the instant it claimed — no pending instant, no scratch
+    output, on a table with a base file or with none yet."""
+    base, tl = mor_table
+    with pytest.raises(ValueError, match="no record key"):
+        tl.upsert_records(spark.createDataFrame([(None, "x")], "id long, name string"))
+    schema = "id long, tag string, name string"
+    ck = _mor(spark, str(tmp_path / "ck"), spark.createDataFrame([(1, "t", "a")], schema),
+              keys=("id", "tag"))
+    with pytest.raises(ValueError, match="no record key"):
+        ck.upsert_records(spark.createDataFrame([(None, None, "x")], schema))
+    empty = str(tmp_path / "empty")
+    os.makedirs(empty)
+    fresh = HudiTimeline(spark, empty)
+    fresh.init_table(
+        Table(name="t", base_path=empty, table_format=TableFormat.HUDI,
+              read_schema=spark.createDataFrame([], "id long, name string").schema,
+              layout=DataLayoutStrategy.FLAT, record_key_fields=("id",))
+    )
+    with pytest.raises(ValueError, match="no record key"):
+        fresh.upsert_records(spark.createDataFrame([(None, "x")], "id long, name string"))
+    for t, root in ((tl, base), (ck, str(tmp_path / "ck")), (fresh, empty)):
+        assert t.pending_instants() == []
+        assert not [d for d in os.listdir(root) if d.startswith("_upsert_")]
+
+
+def test_delete_logs_refuse_positions_the_scan_misses(spark, mor_table):
+    """A position past the file's end, a repeated position, or a path the
+    scan reports under another spelling leaves fewer deleted rows than
+    were asked for: the delete refuses with ValueError, removes the log
+    files it wrote and leaves no pending instant."""
+    base, tl = mor_table
+    target = tl.snapshot_files().collect()[0]["path"]
+    before = sorted(os.listdir(base))
+    for rows in ([(target, 1), (target, 99)], [(target, 1), (target, 1)]):
+        with pytest.raises(ValueError, match="no distinct row"):
+            tl.commit_delete_logs(spark.createDataFrame(rows, "path string, pos long"))
+    assert tl.pending_instants() == []
+    assert sorted(os.listdir(base)) == before
+    assert sum(r["record_count"] for r in tl.snapshot_files().collect()) == 6
+
+
+@pytest.mark.parametrize(
+    "ddl,value",
+    [
+        ("string", "a b"),
+        ("int", 7),
+        ("long", 2**40),
+        ("boolean", True),
+        ("date", dt.date(2020, 1, 2)),
+        ("timestamp", dt.datetime(2020, 1, 2, 3, 4, 5, 500000)),
+        ("decimal(12,4)", Decimal("1.5000")),
+        ("long", None),
+    ],
+    ids=["string", "int", "long", "boolean", "date", "timestamp", "decimal", "null"],
+)
+def test_record_key_column_and_python_form_agree(spark, tmp_path, ddl, value):
+    """The record-key Column and its Arrow twin — which keys the rows a
+    file-slice merge holds in Python: base rows read by pyarrow and log
+    records decoded from Avro — render each key type identically, alone
+    and as a composite part."""
+    from onetable_spark.formats.avro_schema import structtype_to_avro
+    from onetable_spark.formats.hudi import _record_key, _record_keys
+    from onetable_spark.formats.hudi_log import (
+        avro_block_records,
+        encode_logical,
+        logical_fields,
+        read_log_blocks,
+        write_avro_log_block,
+    )
+
+    df = spark.createDataFrame([(value, 1)], f"k {ddl}, j int")
+    path = str(tmp_path / "k.parquet")
+    df.coalesce(1).write.parquet(path)
+    got = spark.read.parquet(path).select(
+        _record_key(["k"]).alias("one"), _record_key(["k", "j"]).alias("two")
+    ).first()
+    base = pq.read_table(path)
+    decoded = [base]
+    if not ddl.startswith("decimal"):  # the log codec writes no decimals
+        avro = structtype_to_avro(df.schema, name="record")
+        log = str(tmp_path / "k.log")
+        row = base.to_pylist()[0]
+        write_avro_log_block(log, [encode_logical(row, logical_fields(avro))], avro, "1")
+        recs = avro_block_records(read_log_blocks(log)[0], decode=True)[1]
+        decoded.append(pa.Table.from_pylist(recs, schema=base.schema))
+    for tbl in decoded:
+        assert _record_keys(tbl, ["k"], "UTC").to_pylist() == [got["one"]]
+        assert _record_keys(tbl, ["k", "j"], "UTC").to_pylist() == [got["two"]]
+
+
+@pytest.mark.parametrize("ddl", ["float", "double"])
+def test_keyed_writes_refuse_float_keys(spark, tmp_path, ddl):
+    """Spark renders a float or double as Java does (``1.0E7``), Python as
+    its repr (``10000000.0``): the two forms of a key could not agree, so
+    the keyed writers refuse such record-key fields before claiming an
+    instant."""
+    schema = f"k {ddl}, name string"
+    tl = _mor(spark, str(tmp_path / "fk"), spark.createDataFrame([(1e7, "a")], schema),
+              keys=("k",))
+    target = tl.snapshot_files().collect()[0]["path"]
+    with pytest.raises(ValueError, match="float/double"):
+        tl.upsert_records(spark.createDataFrame([(1e7, "b")], schema))
+    with pytest.raises(ValueError, match="float/double"):
+        tl.commit_delete_logs(spark.createDataFrame([(target, 0)], "path string, pos long"))
+    assert tl.pending_instants() == []
+
+
+def test_live_slices_agree_with_the_driver_replay(spark, mor_table):
+    """``snapshot_files``' Spark replay and the driver replay the writers
+    use (``_file_group_states``) keep the same slices on a table with a
+    rollback and a replacecommit: a group replaced while it still holds
+    log files is gone with its logs, so neither the default view nor
+    ``has_unmerged_logs`` reports them and compaction has nothing to do."""
+    from onetable_spark.formats.hudi import _file_group_states, _file_id_for
+
+    base, tl = mor_table
+    first = tl.snapshot_files().collect()[0]["path"]
+    tl.upsert_records(spark.createDataFrame([(2, "v2"), (9, "nine")], "id long, name string"))
+    rolled = tl.upsert_records(spark.createDataFrame([(9, "nine2")], "id long, name string"))
+    tl.rollback(rolled)
+    f2 = os.path.join(base, "f2.parquet")
+    pq.write_table(pa.table({"id": pa.array([20], pa.int64()), "name": ["twenty"]}), f2)
+    tl.commit(adds=build_inventory(spark, [f2], root=base),
+              replace_file_ids={"": [_file_id_for(first[len(base) + 1:])]})
+    groups = _file_group_states(base)[None]
+    spark_view = sorted(r["path"] for r in tl.snapshot_files().collect())
+    assert spark_view == sorted(f"{base}/{g['rel']}" for g in groups.values())
+    assert len(spark_view) == 2 and f2 in spark_view
+    assert not tl.has_unmerged_logs() and not any(g["logs"] for g in groups.values())
+    assert tl.compact_file_groups() is None
+
+
+def test_changelog_refuses_a_range_reaching_archived_instants(spark, tmp_path):
+    """Once archive_timeline has moved instants off the active timeline,
+    a changelog or cdc feed whose range reaches them refuses, naming the
+    earliest active instant; a range starting at the last archived
+    instant is served whole."""
+    base = str(tmp_path / "arch")
+    os.makedirs(base)
+    schema = spark.createDataFrame([], "id long, name string").schema
+    tl = HudiTimeline(spark, base)
+    tl.init_table(
+        Table(name="t", base_path=base, table_format=TableFormat.HUDI,
+              read_schema=schema, layout=DataLayoutStrategy.FLAT,
+              record_key_fields=("id",))
+    )
+    for k in range(12):
+        f = os.path.join(base, f"f{k}.parquet")
+        pq.write_table(pa.table({"id": pa.array([k], pa.int64()), "name": [f"n{k}"]}), f)
+        tl.commit(adds=build_inventory(spark, [f], root=base))
+    instants = [i for i, _ in tl.completed_instants()]
+    assert tl.archive_timeline(keep_latest=10) == 2
+    with pytest.raises(ValueError, match=f"earliest active instant is {instants[2]}"):
+        tl.changelog()
+    with pytest.raises(ValueError, match="archived"):
+        tl.cdc_feed(to_instant=instants[5])
+    rows = tl.changelog(from_instant=instants[1]).collect()
+    assert sorted(r["id"] for r in rows) == list(range(2, 12))
+
+
+def test_upsert_logs_null_integer_values(spark, tmp_path):
+    """A NULL in an integer column of an updated record is logged as NULL
+    beside the non-NULL one: the log author reads Arrow rows, where an
+    integer column with NULLs stays integer."""
+    schema = "id long, score long"
+    tl = _mor(spark, str(tmp_path / "ni"), spark.createDataFrame([(i, i) for i in range(3)], schema))
+    seed = tl.latest_instant()
+    tl.upsert_records(spark.createDataFrame([(1, None), (2, 7)], schema))
+    got = {(r["_change_operation"], r["id"], r["score"]) for r in tl.changelog(from_instant=seed).collect()}
+    assert got == {("u", 1, None), ("u", 2, 7)}

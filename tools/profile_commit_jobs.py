@@ -9,18 +9,24 @@ scheduling latency as "real" jobs.
 
 Jobs per operation, this tool's own output: the r16 baseline, after the
 r16 upsert collapse, after the one-pass Delta upsert (each side of the
-merge read once, commit spooled from driver-held rows), and after the
+merge read once, commit spooled from driver-held rows), after the
 Iceberg changelog moved onto Spark's parquet scan (own manifests decoded
 on the driver, one pooled collect of the reachable parent files, no
-Python row stage; the third column's 9 is the parent re-measured):
-  delta commit (plain add)          1 ->  1 -> 1 -> 1
-  delta upsert_by_key (CDF on)     34 -> 25 -> 7 -> 7
-  delta change_feed + count         3 ->  3 -> 3 -> 3
-  iceberg commit_overwrite          1 ->  1 -> 1 -> 1
-  iceberg commit_upsert             5 ->  5 -> 4 -> 4
-  iceberg eq-delete scan + count    3 ->  3 -> 3 -> 3
-  iceberg changelog + count        10 -> 10 -> 9 -> 5
-  hudi commit                       4 ->  4 -> 4 -> 4
+Python row stage; the third column's 9 is the parent re-measured), and
+after the one Hudi write path (file slices replayed on the driver, base
+keys read by Spark's parquet scan, one log-author or merge action
+collected as Arrow, commits spooled from driver-held rows; the two Hudi
+writer rows were first measured at the fourth column):
+  delta commit (plain add)          1 ->  1 -> 1 -> 1 ->  1
+  delta upsert_by_key (CDF on)     34 -> 25 -> 7 -> 7 ->  7
+  delta change_feed + count         3 ->  3 -> 3 -> 3 ->  3
+  iceberg commit_overwrite          1 ->  1 -> 1 -> 1 ->  1
+  iceberg commit_upsert             5 ->  5 -> 4 -> 4 ->  4
+  iceberg eq-delete scan + count    3 ->  3 -> 3 -> 3 ->  3
+  iceberg changelog + count        10 -> 10 -> 9 -> 5 ->  5
+  hudi commit                       4 ->  4 -> 4 -> 4 ->  4
+  hudi upsert_records                             14 ->  5
+  hudi compact_file_groups                        15 ->  1
   sync full / incremental (2 tgt)   7 / 6 (unchanged)
 
 Usage: python tools/profile_commit_jobs.py
@@ -129,11 +135,14 @@ def main() -> None:
     h.init_table(
         Table(name="h", base_path=hbase, table_format=TableFormat.HUDI,
               read_schema=spark.read.parquet(hp).schema,
-              layout=DataLayoutStrategy.FLAT)
+              layout=DataLayoutStrategy.FLAT, record_key_fields=("id",))
     )
     probe("hudi commit",
           lambda: h.commit(adds=build_inventory(spark, [hp], root=hbase)))
     probe("hudi snapshot + count", lambda: h.snapshot_files().count())
+    batch = spark.createDataFrame([(2, "name2_v2"), (100, "fresh")], "id long, name string")
+    probe("hudi upsert_records", lambda: h.upsert_records(batch))
+    probe("hudi compact_file_groups", h.compact_file_groups)
 
     # --- sync plane (Delta source -> Iceberg + Hudi targets)
     dbase = "/tmp/otb_jobprobe_sync"
