@@ -139,6 +139,14 @@ def instant_to_millis(instant: str) -> int:
     return millis
 
 
+def _instant_millis(instant):
+    """``instant_to_millis`` as a Column over an instant Column, whatever
+    the session time zone (the instant is UTC)."""
+    return F.unix_timestamp(
+        F.concat(F.substring(instant, 1, 14), F.lit("Z")), "yyyyMMddHHmmssX"
+    ) * 1000 + F.coalesce(F.substring(instant, 15, 3).cast("long"), F.lit(0))
+
+
 #: the rows every Hudi writer's executor stage returns, one per written
 #: file: the write-stat facts ``_write_stat`` turns into commit JSON, plus
 #: the record keys a log author wrote (``matched``)
@@ -647,12 +655,7 @@ class HudiTimeline:
             self._partition_values_col().alias("partition_values"),
             F.col("size"),
             F.col("record_count"),
-            # instant is a yyyyMMddHHmmssSSS UTC literal — convert to epoch
-            # millis (instant_to_millis as a Column expr; session tz is UTC)
-            (
-                F.unix_timestamp(F.substring("instant", 1, 14), "yyyyMMddHHmmss") * 1000
-                + F.coalesce(F.substring("instant", 15, 3).cast("long"), F.lit(0))
-            ).alias("last_modified_millis"),
+            _instant_millis(F.col("instant")).alias("last_modified_millis"),
             F.from_json("stats_json", FILES_SCHEMA["column_stats"].dataType).alias(
                 "column_stats"
             ),
@@ -939,65 +942,6 @@ class HudiTimeline:
     def snapshot_files_before(self, instant: str, view: Optional[str] = None) -> DataFrame:
         return self.snapshot_files(instant, strict=True, view=view)
 
-    def _commit_heads(self, instants: list[tuple[str, str]]) -> dict[str, dict]:
-        """Per-instant commit-head facts in ONE Spark job over ALL the
-        range's commit files (keyed by ``input_file_name()``; the r13
-        form ran one ``.first()`` job per instant — 10k instants meant
-        10k scheduling round-trips): operationType plus four
-        payload-presence flags (base adds / data logs / replaced groups
-        / supplemental cdc files). driver-ok: one tiny row per instant."""
-        heads: dict[str, dict] = {}
-        if not instants:
-            return heads
-        hpaths = [
-            os.path.join(self.hoodie_path, f"{i}.{a}") for i, a in instants
-        ]
-        hdf = self.spark.read.schema(COMMIT_META_SCHEMA).json(hpaths).select(
-            F.element_at(F.split(F.input_file_name(), "/"), -1).alias("_fname"),
-            "operationType",
-            (F.size(F.coalesce(F.map_keys("partitionToReplaceFileIds"), F.array())) > 0).alias("has_replace"),
-            F.coalesce(
-                F.aggregate(
-                    F.flatten(F.coalesce(F.map_values("partitionToWriteStats"), F.array())),
-                    F.struct(
-                        F.lit(False).alias("b"),
-                        F.lit(False).alias("l"),
-                        F.lit(False).alias("c"),
-                    ),
-                    lambda acc, s: F.struct(
-                        # coalesce each step: a null stat path would
-                        # otherwise poison the OR fold (false|null=null)
-                        (acc["b"] | F.coalesce(
-                            s["path"].endswith(".parquet")
-                            & (s["numInserts"] > 0),
-                            F.lit(False),
-                        )).alias("b"),
-                        (acc["l"] | F.coalesce(
-                            s["path"].contains(".log."), F.lit(False)
-                        )).alias("l"),
-                        (acc["c"] | F.coalesce(
-                            F.size(F.map_keys(s["cdcStats"])) > 0,
-                            F.lit(False),
-                        )).alias("c"),
-                    ),
-                ),
-                F.struct(
-                    F.lit(False).alias("b"),
-                    F.lit(False).alias("l"),
-                    F.lit(False).alias("c"),
-                ),
-            ).alias("present"),
-        )
-        for r in hdf.collect():
-            heads[r["_fname"].split(".", 1)[0]] = {
-                "op": r["operationType"],
-                "has_base": bool(r["present"]["b"]),
-                "has_logs": bool(r["present"]["l"]),
-                "has_cdc": bool(r["present"]["c"]),
-                "has_replace": bool(r["has_replace"]),
-            }
-        return heads
-
     def _instants_in_range(
         self, from_instant: Optional[str], to_instant: Optional[str]
     ) -> list[tuple[str, str]]:
@@ -1031,37 +975,103 @@ class HudiTimeline:
             )
         return [(i, a) for i, a in active if inside(i)]
 
+    def _change_rows(
+        self, from_instant: Optional[str], to_instant: Optional[str], cdc: bool = False
+    ):
+        """``(schema, key_fields, rows, cdc_work)`` of (from_instant,
+        to_instant]: the typed change rows of the range's ``_change_plan``
+        — the table columns plus ``kind``, ``_change_operation`` and
+        ``_commit_instant`` — and, with ``cdc``, the plan's ``cdc`` work
+        rows.
+
+        Base and victim rows come from ONE ``session.tagged_rows`` scan
+        over every such file in the range, joined to the work rows on
+        ``_path`` (a file inserted at one instant and replaced at a later
+        one yields both rows); log rows from ONE stage of the log-block
+        decoder ``_log_changes``. The plan comes from the commit files on
+        the driver, with no Spark job of its own, and the frame holds one
+        Python operator however long the range."""
+        props = self.table_properties()
+        raw_schema = props.get("hoodie.table.schema")
+        if not raw_schema:
+            raise ValueError(f"{self.table_path}: table carries no schema")
+        schema = T.StructType.fromJson(json.loads(raw_schema))
+        key_fields = [k for k in props.get("hoodie.table.recordkey.fields", "").split(",") if k]
+        commits = []
+        for i, a in self._instants_in_range(from_instant, to_instant):
+            with open(os.path.join(self.hoodie_path, f"{i}.{a}")) as fh:
+                commits.append((i, json.load(fh)))
+        work = _change_plan(self.table_path, commits, cdc)
+        rows_schema = T.StructType(
+            schema.fields
+            + [
+                T.StructField(c, T.StringType())
+                for c in ("kind", "_change_operation", "_commit_instant")
+            ]
+        )
+        frames = []
+        files = [w for w in work if w[0] in ("base", "victim")]
+        if files:
+            frames.append(
+                tagged_rows(self.spark, schema, sorted({p for _, p, _ in files}))
+                .join(F.broadcast(_work_frame(self.spark, files)), "_path")
+                .select(
+                    *schema.fieldNames(),
+                    "kind",
+                    F.when(F.col("kind") == "base", "i").otherwise("d").alias("_change_operation"),
+                    "_commit_instant",
+                )
+            )
+        logs = [w for w in work if w[0] == "log"]
+        if logs:
+
+            def decode(batches):
+                for pdf in batches:
+                    for path, instant in zip(pdf["_path"], pdf["_commit_instant"]):
+                        yield _log_changes(path, instant, schema, key_fields).assign(
+                            kind="log", _commit_instant=instant
+                        )
+
+            frames.append(_work_frame(self.spark, logs).mapInPandas(decode, rows_schema))
+        rows = (
+            functools.reduce(DataFrame.unionByName, frames)
+            if frames
+            else local_rows_df(self.spark, [], rows_schema)
+        )
+        return schema, key_fields, rows, [w for w in work if w[0] == "cdc"]
+
     def changelog(
         self,
         from_instant: Optional[str] = None,
         to_instant: Optional[str] = None,
         identifier_fields: Optional[list[str]] = None,
     ) -> DataFrame:
-        """ROW-LEVEL Hudi changelog (r13 — the third edge of the
-        cross-format CDC triangle; siblings: ``DeltaLog.change_feed``,
+        """ROW-LEVEL Hudi changelog (the third edge of the cross-format
+        CDC triangle; siblings: ``DeltaLog.change_feed``,
         ``IcebergTable.changelog``): table rows + ``_change_operation``
         ('i'/'u'/'d' — Hudi's own CDC op vocabulary) +
         ``_commit_instant`` for every completed commit-type instant in
         (from_instant, to_instant].
 
-        Per instant, by what the commit metadata proves:
+        Per instant, by what its commit metadata proves (``_change_plan``,
+        shared with ``cdc_feed`` and the row stream):
 
         - new BASE parquet with inserts → its rows as 'i';
-        - MOR LOG files → their blocks WITH THIS INSTANT's header:
-          AVRO_DATA upsert records decode through the byte-certified
-          codec as 'u' (after-images — real Hudi CDC emits before images
-          only with the supplemental cdc log, which external-registration
-          tables don't carry); DELETE blocks as 'd' rows carrying the
-          record key (other columns null — the key is all a Hudi delete
-          record holds);
+        - MOR LOG files → their blocks WITH THIS INSTANT's header
+          (``_log_changes``): AVRO_DATA upsert records decode through the
+          byte-certified codec as 'u' (after-images — real Hudi CDC emits
+          before images only with the supplemental cdc log, which
+          external-registration tables don't carry); DELETE blocks as 'd'
+          rows carrying the record key (other columns null — the key is
+          all a Hudi delete record holds);
         - ``partitionToReplaceFileIds`` → the replaced groups' base-file
-          rows at the PRIOR instant as 'd' (file-level derivation, the
+          rows just before the instant as 'd' (file-level derivation, the
           same fallback the Delta reader uses for remove-only commits);
         - operationType COMPACT / CLUSTER instants emit NOTHING — layout
           rewrites are not logical changes (compact_file_groups and the
           clustering planner stamp them accordingly).
 
-        ``identifier_fields`` (r14 — the cross-format twin of
+        ``identifier_fields`` (the cross-format twin of
         ``IcebergTable.changelog``'s identifier-columns mode): when
         given, a same-key 'd'+'i' within one instant (the replace-commit
         upsert shape) pairs into ``update_preimage``/``update_postimage``
@@ -1069,179 +1079,23 @@ class HudiTimeline:
         instant. Log-block 'u' after-images are already updates and pass
         through unchanged.
 
-        Probe plan (r14): ALL in-range commit heads — operationType plus
-        the three payload-presence flags — come off ONE ``spark.read.json``
-        over the range's commit files keyed by ``input_file_name()``; the
-        r13 form ran one ``.first()`` job per instant, pure scheduling
-        overhead over long ranges.
+        Plan (``_change_rows``): the range's commit files are read once
+        on the driver, so building the frame runs no Spark job; base and
+        replaced rows come from Spark's parquet scan, and the log decoder
+        is the plan's one Python operator, whatever the range's length.
 
         A range reaching instants ``archive_timeline`` moved off the
         active timeline refuses with ValueError (``_instants_in_range``)
         rather than answering for part of it.
         """
-        import json as _json
-
-        props = self.table_properties()
-        raw_schema = props.get("hoodie.table.schema")
-        if not raw_schema:
-            raise ValueError(f"{self.table_path}: table carries no schema")
-        schema = T.StructType.fromJson(_json.loads(raw_schema))
-        key_fields = [
-            k for k in props.get("hoodie.table.recordkey.fields", "").split(",") if k
-        ]
-        out_schema = T.StructType(
-            list(schema.fields)
-            + [
-                T.StructField("_change_operation", T.StringType()),
-                T.StructField("_commit_instant", T.StringType()),
-            ]
-        )
-        instants = self._instants_in_range(from_instant, to_instant)
-        table_path = self.table_path
-        field_names = [f.name for f in schema.fields]
-        numeric_kf = _numeric_key_fields(schema, key_fields)
-        frames = []
-        heads = self._commit_heads(instants)
-        for instant, action in instants:
-            cpath = os.path.join(self.hoodie_path, f"{instant}.{action}")
-            head = heads[instant]
-            if head["op"] in ("COMPACT", "CLUSTER"):
-                continue
-            has_base, has_logs = head["has_base"], head["has_logs"]
-            has_replace = head["has_replace"]
-            cdf = self.spark.read.schema(COMMIT_META_SCHEMA).json([cpath])
-            stats = (
-                cdf.select(
-                    F.explode_outer("partitionToWriteStats").alias("partition", "stats")
-                )
-                .select(F.explode_outer("stats").alias("s"))
-                .select("s.path", "s.numInserts")
-                .where(F.col("path").isNotNull())
-                .withColumn(
-                    "abs_path",
-                    F.when(
-                        F.col("path").startswith("/") | F.col("path").contains("://"),
-                        F.col("path"),
-                    ).otherwise(F.concat(F.lit(table_path + "/"), F.col("path"))),
-                )
+        schema, _, rows, _ = self._change_rows(from_instant, to_instant)
+        missing = [c for c in identifier_fields or () if c not in schema.fieldNames()]
+        if missing:
+            raise ValueError(
+                f"{self.table_path}: identifier fields {missing} not in the table schema"
             )
-
-            def stamp(df: DataFrame, change: str) -> DataFrame:
-                return df.withColumn(
-                    "_change_operation", F.lit(change)
-                ).withColumn("_commit_instant", F.lit(instant))
-
-            def read_rows(paths_df: DataFrame) -> DataFrame:
-                def read(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                    import pyarrow.parquet as _pq
-
-                    for pdf in batches:
-                        for p in pdf["abs_path"]:
-                            yield _pq.read_table(p).to_pandas(
-                                integer_object_nulls=True
-                            )
-
-                return paths_df.select("abs_path").mapInPandas(read, schema)
-
-            base_adds = stats.where(
-                F.col("path").endswith(".parquet") & (F.col("numInserts") > 0)
-            )
-            if has_base:
-                frames.append(stamp(read_rows(base_adds), "i"))
-
-            logs = stats.where(F.col("path").contains(".log."))
-            if has_logs:
-                this_instant = instant
-
-                def read_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                    import pandas as pd
-
-                    from onetable_spark.formats.hudi_log import (
-                        avro_block_records,
-                        delete_block_records,
-                        read_log_blocks,
-                    )
-
-                    for pdf in batches:
-                        urows, dkeys = [], []
-                        for p in pdf["abs_path"]:
-                            for b in read_log_blocks(p):
-                                if b["headers"].get("instant_time") != this_instant:
-                                    continue
-                                if b["type"] == "avro_data":
-                                    _, recs = avro_block_records(b, decode=True)
-                                    urows.extend(recs)
-                                elif b["type"] == "delete":
-                                    _, recs = delete_block_records(b)
-                                    dkeys.extend(r.get("recordKey") for r in recs)
-                        out = pd.DataFrame(urows, columns=field_names)
-                        out["_op"] = "u"
-                        if dkeys:
-                            # HoodieKey strings back into typed key
-                            # columns — ALL of them for composite keys
-                            dd = delete_key_frame(
-                                dkeys, field_names, key_fields, numeric_kf
-                            )
-                            dd["_op"] = "d"
-                            out = pd.concat([out, dd])
-                        yield out
-
-                log_schema = T.StructType(
-                    list(schema.fields) + [T.StructField("_op", T.StringType())]
-                )
-                log_rows = logs.select("abs_path").mapInPandas(
-                    read_blocks, log_schema
-                )
-                frames.append(
-                    log_rows.withColumnRenamed("_op", "_change_operation").withColumn(
-                        "_commit_instant", F.lit(instant)
-                    )
-                )
-
-            replaced_ids = (
-                cdf.select(
-                    F.explode_outer("partitionToReplaceFileIds").alias("pp", "ids")
-                )
-                .select(F.explode_outer("ids").alias("file_id"))
-                .where(F.col("file_id").isNotNull())
-            )
-            if has_replace:
-                prior = self.snapshot_files_before(instant, view="read_optimized")
-
-                def with_fid(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                    for pdf in batches:
-                        rel = pdf["path"].map(
-                            lambda p: p[len(table_path) + 1:]
-                            if p.startswith(table_path)
-                            else p
-                        )
-                        pdf = pdf[["path"]].copy()
-                        pdf["file_id"] = rel.map(_file_id_for)
-                        pdf["abs_path"] = pdf["path"]
-                        yield pdf[["abs_path", "file_id"]]
-
-                prior_fids = prior.select("path").mapInPandas(
-                    with_fid, "abs_path string, file_id string"
-                )
-                victims = prior_fids.join(
-                    F.broadcast(replaced_ids), "file_id", "left_semi"
-                )
-                frames.append(stamp(read_rows(victims), "d"))
-
-        if not frames:
-            return local_rows_df(self.spark, [], out_schema)
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
+        out = rows.drop("kind")
         if identifier_fields:
-            missing = [
-                c for c in identifier_fields if c not in schema.fieldNames()
-            ]
-            if missing:
-                raise ValueError(
-                    f"{self.table_path}: identifier fields {missing} not in "
-                    "the table schema"
-                )
             from pyspark.sql import Window
 
             w = Window.partitionBy("_commit_instant", *identifier_fields)
@@ -1266,262 +1120,78 @@ class HudiTimeline:
         from_instant: Optional[str] = None,
         to_instant: Optional[str] = None,
     ) -> DataFrame:
-        """Hudi CDC QUERY (r14 — RFC-51 / ``hoodie.table.cdc.enabled``):
-        the shape real Hudi's ``hoodie.datasource.query.incremental.format
+        """Hudi CDC QUERY (RFC-51 / ``hoodie.table.cdc.enabled``): the
+        shape real Hudi's ``hoodie.datasource.query.incremental.format
         =cdc`` read returns (CDCRelation.FULL_CDC_SPARK_SCHEMA): one row
         per changed record with ``op`` ('i'/'u'/'d'), ``ts_ms`` (commit
         epoch millis as string) and ``before``/``after`` images as JSON
         strings.
 
-        Per FILE GROUP, by RFC-51's inference cases:
+        Per write stat, by RFC-51's inference cases, from the same plan
+        and rows as ``changelog`` (``_change_rows``):
 
         - a supplemental ``-cdc`` log file (advertised by its write
           stat's ``cdcStats`` — what ``upsert_records`` authors when the
-          table property is on) is AUTHORITATIVE: its CDC_DATA block
-          decodes verbatim through the byte-certified codec, EXACT
-          before-images included;
-        - a new base file with inserts and no cdc stats → RFC-51's
-          BASE_FILE_INSERT inference: its rows as op='i', after-image
-          only;
-        - data log files whose stat carries no cdc stats (foreign or
-          pre-enable writers) → 'u' after-images and DELETE-block 'd'
-          rows with a key-only before image — the same documented
-          inference limit as ``changelog()``;
+          table property is on) is AUTHORITATIVE and stands for its stat:
+          its CDC_DATA block decodes verbatim through the byte-certified
+          codec, EXACT before-images included;
+        - a new base file with inserts → RFC-51's BASE_FILE_INSERT
+          inference: its rows as op='i', after-image only;
+        - data log files → 'u' after-images and DELETE-block 'd' rows
+          with a key-only before image — the same documented inference
+          limit as ``changelog()``;
         - replaced file groups → 'd' with the prior rows as FULL before
           images; operationType COMPACT/CLUSTER instants emit nothing.
 
-        JSON formatting varies by leg (writer-authored ``json.dumps`` vs
-        Spark ``to_json``), exactly as real Hudi's avro-toString vs
-        row-JSON renderings do — consumers extract fields, not bytes.
-        A range reaching archived instants refuses, as in ``changelog``.
+        The inferred legs render their images with Spark's ``to_json``,
+        so the 'i', 'u' and 'd' images of one key agree in type; the
+        authoritative leg is the writer's JSON, verbatim — consumers
+        extract fields, not bytes. Its plan holds two Python operators:
+        the log decoder and the cdc-block decoder. A range reaching
+        archived instants refuses, as in ``changelog``.
         """
-        import json as _json
-
-        props = self.table_properties()
-        raw_schema = props.get("hoodie.table.schema")
-        if not raw_schema:
-            raise ValueError(f"{self.table_path}: table carries no schema")
-        schema = T.StructType.fromJson(_json.loads(raw_schema))
-        key_fields = [
-            k for k in props.get("hoodie.table.recordkey.fields", "").split(",") if k
-        ]
         out_schema = T.StructType(
-            [
-                T.StructField("op", T.StringType()),
-                T.StructField("ts_ms", T.StringType()),
-                T.StructField("before", T.StringType()),
-                T.StructField("after", T.StringType()),
-            ]
+            [T.StructField(c, T.StringType()) for c in ("op", "ts_ms", "before", "after")]
         )
-        instants = self._instants_in_range(from_instant, to_instant)
-        table_path = self.table_path
-        field_names = [f.name for f in schema.fields]
-        heads = self._commit_heads(instants)
-        frames = []
-        for instant, action in instants:
-            head = heads[instant]
-            if head["op"] in ("COMPACT", "CLUSTER"):
-                continue
-            cpath = os.path.join(self.hoodie_path, f"{instant}.{action}")
-            cdf = self.spark.read.schema(COMMIT_META_SCHEMA).json([cpath])
-            stats = (
-                cdf.select(
-                    F.explode_outer("partitionToWriteStats").alias("partition", "stats")
-                )
-                .select(F.explode_outer("stats").alias("s"))
-                .select("s.path", "s.numInserts", "s.cdcStats")
-                .where(F.col("path").isNotNull())
-                .withColumn(
-                    "abs_path",
-                    F.when(
-                        F.col("path").startswith("/") | F.col("path").contains("://"),
-                        F.col("path"),
-                    ).otherwise(F.concat(F.lit(table_path + "/"), F.col("path"))),
-                )
-                .withColumn(
-                    "has_cdc",
-                    F.coalesce(F.size(F.map_keys("cdcStats")) > 0, F.lit(False)),
-                )
-            )
-            ts_ms = str(instant_to_millis(instant))
-            this_instant = instant
-            to_json_opts = {"ignoreNullFields": "false"}
+        schema, key_fields, rows, cdc_work = self._change_rows(from_instant, to_instant, cdc=True)
+        opts = {"ignoreNullFields": "false"}
+        image = F.to_json(F.struct(*schema.fieldNames()), opts)
+        key_image = F.to_json(F.struct(*key_fields), opts) if key_fields else F.lit(None)
+        op = F.col("_change_operation")
+        out = rows.select(
+            op.alias("op"),
+            _instant_millis(F.col("_commit_instant")).cast("string").alias("ts_ms"),
+            F.when(op == "d", F.when(F.col("kind") == "log", key_image).otherwise(image))
+            .alias("before"),
+            F.when(op != "d", image).alias("after"),
+        )
+        if cdc_work:
 
-            if head["has_cdc"]:
-                # authoritative leg: the cdc files themselves
-                cdc_paths = stats.where("has_cdc").select(
-                    F.explode(F.map_keys("cdcStats")).alias("rel")
-                ).select(
-                    F.when(
-                        F.col("rel").startswith("/") | F.col("rel").contains("://"),
-                        F.col("rel"),
-                    ).otherwise(F.concat(F.lit(table_path + "/"), F.col("rel")))
-                    .alias("abs_path")
-                )
+            def read_cdc(batches):
+                import pandas as pd
 
-                def read_cdc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                    import pandas as pd
+                from onetable_spark.formats.hudi_log import avro_block_records
 
-                    from onetable_spark.formats.hudi_log import (
-                        avro_block_records,
-                        read_log_blocks,
-                    )
-
-                    cols_ = ["op", "ts_ms", "before", "after"]
-                    for pdf in batches:
-                        rows = []
-                        for p in pdf["abs_path"]:
-                            for b in read_log_blocks(p):
-                                if b["type"] != "cdc_data":
-                                    continue
-                                if b["headers"].get("instant_time") != this_instant:
-                                    continue
-                                _, recs = avro_block_records(b, decode=True)
-                                rows.extend(
+                for pdf in batches:
+                    recs = []
+                    for path, instant in zip(pdf["_path"], pdf["_commit_instant"]):
+                        ts_ms = str(instant_to_millis(instant))
+                        for b in _instant_blocks(path, instant):
+                            if b["type"] == "cdc_data":
+                                recs += [
                                     {
                                         "op": r.get("op"),
                                         "ts_ms": r.get("ts_ms") or ts_ms,
                                         "before": r.get("before"),
                                         "after": r.get("after"),
                                     }
-                                    for r in recs
-                                )
-                        yield pd.DataFrame(rows, columns=cols_)
+                                    for r in avro_block_records(b, decode=True)[1]
+                                ]
+                    yield pd.DataFrame(recs, columns=out_schema.fieldNames())
 
-                frames.append(
-                    cdc_paths.mapInPandas(read_cdc, out_schema)
-                )
-
-            def rows_as(paths_df: DataFrame, op: str, image: str) -> DataFrame:
-                """Read full rows of the given parquet files and wrap
-                them as one-image cdc rows (the inference legs)."""
-
-                def read(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                    import pyarrow.parquet as _pq
-
-                    for pdf in batches:
-                        for p in pdf["abs_path"]:
-                            yield _pq.read_table(p).to_pandas(
-                                integer_object_nulls=True
-                            )
-
-                rows = paths_df.select("abs_path").mapInPandas(read, schema)
-                img = F.to_json(F.struct(*field_names), to_json_opts)
-                return rows.select(
-                    F.lit(op).alias("op"),
-                    F.lit(ts_ms).alias("ts_ms"),
-                    (img if image == "before" else F.lit(None).cast("string")).alias("before"),
-                    (img if image == "after" else F.lit(None).cast("string")).alias("after"),
-                )
-
-            if head["has_base"]:
-                # BASE_FILE_INSERT inference: new file groups, no cdc log
-                base_adds = stats.where(
-                    F.col("path").endswith(".parquet")
-                    & (F.col("numInserts") > 0)
-                    & ~F.col("has_cdc")
-                )
-                frames.append(rows_as(base_adds, "i", "after"))
-
-            if head["has_logs"]:
-                # non-cdc data logs: after-image 'u' / key-only 'd'
-                logs = stats.where(
-                    F.col("path").contains(".log.") & ~F.col("has_cdc")
-                )
-
-                def read_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                    import json as _json2
-
-                    import pandas as pd
-
-                    from onetable_spark.formats.hudi_log import (
-                        avro_block_records,
-                        delete_block_records,
-                        read_log_blocks,
-                    )
-
-                    cols_ = ["op", "ts_ms", "before", "after"]
-                    for pdf in batches:
-                        rows = []
-                        for p in pdf["abs_path"]:
-                            for b in read_log_blocks(p):
-                                if b["headers"].get("instant_time") != this_instant:
-                                    continue
-                                if b["type"] == "avro_data":
-                                    _, recs = avro_block_records(b, decode=True)
-                                    rows.extend(
-                                        {
-                                            "op": "u",
-                                            "ts_ms": ts_ms,
-                                            "before": None,
-                                            "after": _json2.dumps(r, default=str),
-                                        }
-                                        for r in recs
-                                    )
-                                elif b["type"] == "delete":
-                                    _, recs = delete_block_records(b)
-                                    rows.extend(
-                                        {
-                                            "op": "d",
-                                            "ts_ms": ts_ms,
-                                            # composite keys split into
-                                            # ALL their fields (r15)
-                                            "before": _json2.dumps(
-                                                record_key_to_dict(
-                                                    r.get("recordKey"),
-                                                    key_fields,
-                                                )
-                                                if key_fields
-                                                else {
-                                                    "record_key":
-                                                    r.get("recordKey")
-                                                }
-                                            ),
-                                            "after": None,
-                                        }
-                                        for r in recs
-                                    )
-                        yield pd.DataFrame(rows, columns=cols_)
-
-                frames.append(
-                    logs.select("abs_path").mapInPandas(read_blocks, out_schema)
-                )
-
-            if head["has_replace"]:
-                replaced_ids = (
-                    cdf.select(
-                        F.explode_outer("partitionToReplaceFileIds").alias("pp", "ids")
-                    )
-                    .select(F.explode_outer("ids").alias("file_id"))
-                    .where(F.col("file_id").isNotNull())
-                )
-                prior = self.snapshot_files_before(instant, view="read_optimized")
-
-                def with_fid(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                    for pdf in batches:
-                        rel = pdf["path"].map(
-                            lambda p: p[len(table_path) + 1:]
-                            if p.startswith(table_path)
-                            else p
-                        )
-                        pdf = pdf[["path"]].copy()
-                        pdf["file_id"] = rel.map(_file_id_for)
-                        pdf["abs_path"] = pdf["path"]
-                        yield pdf[["abs_path", "file_id"]]
-
-                prior_fids = prior.select("path").mapInPandas(
-                    with_fid, "abs_path string, file_id string"
-                )
-                victims = prior_fids.join(
-                    F.broadcast(replaced_ids), "file_id", "left_semi"
-                )
-                frames.append(rows_as(victims, "d", "before"))
-
-        if not frames:
-            return local_rows_df(self.spark, [], out_schema)
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
+            out = out.unionByName(
+                _work_frame(self.spark, cdc_work).mapInPandas(read_cdc, out_schema)
+            )
         return out
 
     def instants_after_millis(self, millis: int) -> list[str]:
@@ -1926,7 +1596,11 @@ class HudiTimeline:
         On a cdc table (``cdc_mode``) each group also gets a ``-cdc`` log whose CDC_DATA
         block carries op 'u'/'d' records with before-images from the
         merged file slice (``_merge_slice`` over the base rows and the
-        group's earlier log blocks) and the after-images.
+        group's earlier log blocks) and the after-images. An upserted key
+        that the group's earlier log blocks deleted is an insert again:
+        it counts in ``numInserts`` (op 'i'), not ``numUpdateWrites``, so
+        the realtime view nets it back; only groups with log files (or a
+        cdc table) pay for that merge.
 
         The stage is side-effecting (the log-version probe makes a rerun
         append ``.log.2`` orphans), so it runs in ONE action: collected
@@ -1977,17 +1651,28 @@ class HudiTimeline:
             else:
                 datums = [encode_logical(r, logical, tz) for r in records] if logical else records
                 write_avro_log_block(lp, datums, avro_schema, instant, append=False)
-            cdc_path = cdc_size = None
-            if cdc_mode:
-                base = tbl.select([f"_b_{c}" for c in cols]).rename_columns(cols)
+            before = None
+            if cdc_mode or (g["logs"] and not deletes):
+                # the merged file slice: a cdc table's before-images, and
+                # which matched keys the group's earlier log blocks deleted
+                base = (
+                    tbl.select([f"_b_{c}" for c in cols]).rename_columns(cols)
+                    if cdc_mode
+                    else tbl.select(kf)
+                )
                 merged = _merge_slice(base, g["logs"], kf, tz)
                 before = dict(zip(_record_keys(merged, kf, tz).to_pylist(), merged.to_pylist()))
+            # an upserted key the slice no longer holds is an insert again
+            inserts = 0 if deletes or before is None else sum(k not in before for k in keys)
+            cdc_path = cdc_size = None
+            if cdc_mode:
                 cp = lp + "-cdc"
                 write_cdc_log_block(
                     cp,
                     [
                         _cdc_record(
-                            "d" if deletes else "u", k, before.get(k), after, cdc_mode, ts_ms
+                            "d" if deletes else "u" if k in before else "i",
+                            k, before.get(k), after, cdc_mode, ts_ms,
                         )
                         for k, after in zip(keys, records)
                     ],
@@ -2004,7 +1689,8 @@ class HudiTimeline:
                         "partition_path": pp,
                         "prev_commit": g["base_instant"],
                         "num_writes": 0 if deletes else n,
-                        "num_updates": 0 if deletes else n,
+                        "num_inserts": inserts,
+                        "num_updates": 0 if deletes else n - inserts,
                         "num_deletes": n if deletes else 0,
                         "size": os.path.getsize(lp),
                         "cdc_path": cdc_path,
@@ -2308,20 +1994,35 @@ class HudiTimeline:
         todo = [g for g in slices if g["logs"]]
         if not todo:
             return None
-        kf = list(self.table_descriptor().record_key_fields)
+        import pyarrow as pa
+
+        desc = self.table_descriptor()
+        kf = list(desc.record_key_fields)
+        # Spark-written INT96 timestamps read back as timestamp[ns]; the
+        # merged file carries them as Spark's own types (microseconds,
+        # UTC-adjusted for ``timestamp``, local for ``timestamp_ntz``),
+        # which Spark reads back — nanoseconds it cannot
+        stamps = {
+            f.name: f.type
+            for f in to_arrow_schema(desc.read_schema)
+            if pa.types.is_timestamp(f.type)
+        }
         tz = self.spark.conf.get("spark.sql.session.timeZone")
         prefix = self.table_path.rstrip("/") + "/"
         out_schema = to_arrow_schema(_STAT_ROWS)
         instant = self._begin("commit")
 
         def merge(batches):
-            import pyarrow as pa
             import pyarrow.parquet as pq
 
             for batch in batches:
                 out = []
                 for g in batch.to_pylist():
                     merged = _merge_slice(pq.read_table(g["path"]), g["logs"], kf, tz)
+                    for name, t in stamps.items():
+                        if name in merged.column_names:
+                            i = merged.column_names.index(name)
+                            merged = merged.set_column(i, name, merged.column(i).cast(t))
                     new = os.path.join(
                         os.path.dirname(g["path"]),
                         f"{g['file_id']}_0-0-0_{instant}.parquet",
@@ -2570,8 +2271,9 @@ def _file_group_states(
     order. Groups replaced at a later-or-equal replacecommit are gone;
     rollback/restore undo applies incrementally. The same rules as
     ``HudiTimeline._live_slices`` (``snapshot_files``), so the
-    writers and a STREAMING task resolve the same slices as the Spark
-    replay. Serving all of a batch's R cutoffs from one walk keeps it
+    writers and the change planner (``_change_plan``, also inside a
+    STREAMING task) resolve the same slices as the Spark replay. Serving
+    all of a range's R replace instants from one walk keeps it
     O(timeline + R·groups) instead of O(R·timeline) on a clustering-heavy
     backfill."""
     hoodie = os.path.join(table_path, ".hoodie")
@@ -2656,24 +2358,108 @@ def _file_group_states(
     return out
 
 
-def read_optimized_states_before(
-    table_path: str, instants: list[str]
-) -> dict[str, list[str]]:
-    """For each requested instant, the rel_paths of live base parquet
-    files strictly BEFORE it (``_file_group_states``) — the read-optimized
-    view ``HudiTimeline.snapshot_files_before(view='read_optimized')``
-    serves, without a SparkSession, so a STREAMING task can resolve
-    replacecommit victims from the timeline's own tiny JSON files."""
-    states = _file_group_states(table_path, instants)
-    return {
-        c: sorted(g["rel"] for g in states[c].values() if g["rel"] is not None)
-        for c in set(instants)
+def _change_plan(table_path: str, commits, cdc: bool = False) -> list[tuple[str, str, str]]:
+    """The one Hudi change planner behind ``changelog``, ``cdc_feed`` and
+    the row stream — HudiDataFileExtractor.java:126-255's per-action
+    dispatch. ``commits``, ``(instant, commit JSON)`` pairs each read
+    once, become ``(kind, path, instant)`` work rows with absolute paths:
+
+    - ``base``: a new base parquet with inserts;
+    - ``log``: a data log file (the reader takes its blocks with this
+      instant's header);
+    - ``victim``: the base file of a group a replacecommit replaced, as
+      it stood just before the instant — ``_file_group_states``, one walk
+      for every replace instant, keyed on the write stat's own fileId, so
+      the ``{fileId}_…`` base file compaction wrote is found too;
+    - ``cdc`` (only with ``cdc``): a supplemental ``-cdc`` log, which then
+      stands for the write stat that advertises it.
+
+    COMPACT and CLUSTER instants rewrite layout, not rows: they plan
+    nothing. Pure Python over the commit files: no Spark job, no
+    SparkSession, so a streaming task plans with it too."""
+    commits = [(i, m) for i, m in commits if m.get("operationType") not in ("COMPACT", "CLUSTER")]
+    replaced = {
+        i: sorted(
+            {f for ids in (m.get("partitionToReplaceFileIds") or {}).values() for f in ids or []}
+        )
+        for i, m in commits
     }
+    need = [i for i, fids in replaced.items() if fids]
+    states = _file_group_states(table_path, need) if need else {}
+    prefix = table_path.rstrip("/") + "/"
+
+    def absolute(rel: str) -> str:
+        if "://" in rel:
+            return rel
+        return os.path.abspath(rel if rel.startswith("/") else prefix + rel)
+
+    work = []
+    for i, meta in commits:
+        for fid in replaced[i]:
+            rel = states[i].get(fid, {}).get("rel")
+            if rel:
+                work.append(("victim", absolute(rel), i))
+        for stats in (meta.get("partitionToWriteStats") or {}).values():
+            for s in stats or []:
+                rel = s.get("path") or ""
+                if cdc and s.get("cdcStats"):
+                    work += [("cdc", absolute(c), i) for c in s["cdcStats"]]
+                elif rel.endswith(".parquet") and (s.get("numInserts") or 0) > 0:
+                    work.append(("base", absolute(rel), i))
+                elif ".log." in rel and not rel.endswith("-cdc"):
+                    work.append(("log", absolute(rel), i))
+    return work
 
 
-def read_optimized_files_before(table_path: str, instant: str) -> list[str]:
-    """Single-cutoff form of ``read_optimized_states_before``."""
-    return read_optimized_states_before(table_path, [instant])[instant]
+def _work_frame(spark: SparkSession, work: list[tuple[str, str, str]]) -> DataFrame:
+    """``_change_plan`` work rows as a ``(kind, _path, _commit_instant)``
+    DataFrame, built from Arrow on the JVM side: no Python worker runs to
+    turn them into Spark rows, as one would for ``local_rows_df``."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(
+        pa.table(list(map(list, zip(*work))), names=["kind", "_path", "_commit_instant"])
+    )
+
+
+def _instant_blocks(path: str, instant: str) -> list[dict]:
+    """The blocks of the log file ``path`` that ``instant`` wrote — a log
+    file can hold several instants' blocks."""
+    from onetable_spark.formats.hudi_log import read_log_blocks
+
+    return [b for b in read_log_blocks(path) if b["headers"].get("instant_time") == instant]
+
+
+def _log_changes(path: str, instant: str, schema: T.StructType, key_fields: list[str]):
+    """The one log-block decoder of the change readers: the rows
+    ``instant`` wrote to the log file ``path``, as a pandas frame of the
+    table columns plus ``_change_operation``. AVRO_DATA records decode
+    through the byte-certified codec to typed 'u' after-images; DELETE
+    keys become 'd' rows whose key columns are typed back
+    (``delete_key_frame``) and whose other columns are NULL. A DELETE
+    block on a keyless table refuses: its rows are unidentifiable."""
+    import pandas as pd
+
+    from onetable_spark.formats.hudi_log import avro_block_records, delete_block_records
+
+    names = schema.fieldNames()
+    urows, dkeys = [], []
+    for b in _instant_blocks(path, instant):
+        if b["type"] == "avro_data":
+            urows += avro_block_records(b, decode=True)[1]
+        elif b["type"] == "delete":
+            if not key_fields:
+                raise ValueError(
+                    f"{path}: DELETE block on a keyless table — rows are unidentifiable"
+                )
+            dkeys += [r.get("recordKey") for r in delete_block_records(b)[1]]
+    frames = [pd.DataFrame(urows, columns=names).assign(_change_operation="u")]
+    if dkeys:
+        frames.append(
+            delete_key_frame(dkeys, names, key_fields, _numeric_key_fields(schema, key_fields))
+            .assign(_change_operation="d")
+        )
+    return pd.concat(frames, ignore_index=True) if urows and dkeys else frames[-1]
 
 
 def _file_id_for(rel_path: str) -> str:
@@ -2689,3 +2475,21 @@ def _file_id_for(rel_path: str) -> str:
     if m:
         return m.group(1)
     return uuid.uuid5(uuid.NAMESPACE_URL, rel_path).hex
+
+
+def _file_id_column(rel):
+    """``_file_id_for`` of a base file's relative path as a Spark
+    expression, so no Python stage derives it: uuid5 is the first 16
+    bytes of SHA-1 over the URL-namespace bytes and the UTF-8 path, with
+    the version nibble set to 5 and the variant bits to ``10``."""
+    digest = F.sha1(F.concat(F.unhex(F.lit(uuid.NAMESPACE_URL.hex)), F.encode(rel, "UTF-8")))
+    variant = F.conv(
+        (F.conv(F.substring(digest, 17, 1), 16, 10).cast("int") % 4 + 8).cast("string"), 10, 16
+    )
+    return F.concat(
+        F.substring(digest, 1, 12),
+        F.lit("5"),
+        F.substring(digest, 14, 3),
+        F.lower(variant),
+        F.substring(digest, 18, 15),
+    )

@@ -634,8 +634,8 @@ def q_streaming_hudi_replace(spark: SparkSession, sf: str) -> DataFrame:
     r14 row stream refused any replacecommit with
     ``partitionToReplaceFileIds``, so clustering-heavy tables could not
     stream at all. The r15 source derives them: the planning task
-    replays the timeline's own tiny commit JSONs
-    (``read_optimized_files_before`` — pure Python, metadata only) to
+    replays the timeline's own tiny commit JSONs (the shared change
+    planner ``_change_plan`` — pure Python, metadata only) to
     find each replaced file group's PRIOR base file, emits its rows as
     'd', and the rewrite's new base rows stream as 'i' — identical to
     the batch changelog's file-level derivation (real Hudi's

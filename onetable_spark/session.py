@@ -54,10 +54,11 @@ def local_path(uri):
     """A scan's file URI column (``input_file_name()``,
     ``_metadata.file_path``: ``file:///…``, percent-encoded) folded back
     to the plain absolute path that log actions and manifest entries
-    carry, so scanned rows join against them."""
+    carry, so scanned rows join against them. A ``+`` is a literal in a
+    URI path, not the form-encoded space ``url_decode`` would read."""
     from pyspark.sql import functions as F
 
-    return F.regexp_replace(F.url_decode(uri), r"^file:/+", "/")
+    return F.regexp_replace(F.url_decode(F.regexp_replace(uri, r"\+", "%2B")), r"^file:/+", "/")
 
 
 def tagged_rows(spark: SparkSession, schema, paths):

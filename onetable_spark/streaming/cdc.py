@@ -879,34 +879,32 @@ def read_hudi_row_stream(
     fanout: int | None = None,
     _task_probe_dir: str | None = None,
 ) -> DataFrame:
-    """ROW-LEVEL streaming read of a Hudi table (r14; restructured r15 —
-    the third edge of the STREAMING triangle; siblings
-    ``read_cdf_stream`` (Delta) and ``read_iceberg_append_stream``): a
-    file stream over the timeline's completed commit markers; each
-    arriving commit-type instant's rows are derived on executors with
-    the same per-file-group rules the batch ``changelog()`` uses:
+    """ROW-LEVEL streaming read of a Hudi table (the third edge of the
+    STREAMING triangle; siblings ``read_cdf_stream`` (Delta) and
+    ``read_iceberg_append_stream``): a file stream over the timeline's
+    completed commit markers; each arriving commit-type instant's rows
+    are derived on executors by the batch ``changelog()``'s own planner
+    and log decoder (``formats/hudi._change_plan``, ``_log_changes``):
 
     - base parquet files with inserts → their rows as 'i';
     - AVRO_DATA log blocks with this instant's header → 'u'
       after-images through the byte-certified codec;
     - DELETE blocks → 'd' rows carrying the record key (ALL fields of
-      a composite key, r15);
+      a composite key);
     - operationType COMPACT/CLUSTER instants emit nothing (layout);
-    - a replacecommit's replaced file groups emit their PRIOR base-file
-      rows as 'd' (r15 — the r14 source refused replacecommits
-      outright): the prior state is replayed from the timeline's own
-      tiny commit JSONs inside the planning task
-      (``read_optimized_files_before`` — metadata only, no Spark
-      state), matching the batch ``changelog()``'s file-level
-      derivation, so clustering-heavy tables stream too.
+    - a replacecommit's replaced file groups emit their base-file rows
+      just before it as 'd': the planner replays the timeline's own tiny
+      commit JSONs inside the planning task (``_file_group_states`` —
+      metadata only, no Spark state) and matches the groups on the write
+      stat's fileId, so clustering-heavy and compacted tables stream too.
 
-    Two-stage shape (r15 — the r14 form was one task per commit,
-    reading every file serially into one pandas buffer): stage 1 parses
-    each marker into per-file work rows ``(kind, path, instant)``; an
-    explicit ``repartition(shuffle.partitions, path, instant)`` fans
-    them out (explicit width — adaptive coalescing can't undo it);
-    stage 2 reads ONE file per row and yields ONE bounded frame per
-    file.
+    Two-stage shape: stage 1 plans each marker into per-file work rows
+    ``(kind, path, instant)``; an explicit ``repartition(width, path,
+    instant)`` fans them out (explicit width — adaptive coalescing can't
+    undo it); stage 2 reads ONE file per row and yields ONE bounded
+    frame per file — a base or replaced file through pyarrow (a stream
+    cannot start the nested Spark scan the batch reader joins), a log
+    file through the shared decoder.
 
     Columns: the table schema + ``_change_operation`` ('i'/'u'/'d') +
     ``_commit_instant``. Everything is derivable from the commit file
@@ -921,10 +919,9 @@ def read_hudi_row_stream(
 
     from pyspark.sql import types as _T
 
-    from onetable_spark.formats.hudi import HudiTimeline, _numeric_key_fields
+    from onetable_spark.formats.hudi import HudiTimeline
 
-    tl = HudiTimeline(spark, table_path)
-    desc = tl.table_descriptor()
+    desc = HudiTimeline(spark, table_path).table_descriptor()
     schema = desc.read_schema
     key_fields = list(desc.record_key_fields)
     out_schema = _T.StructType(
@@ -945,8 +942,6 @@ def read_hudi_row_stream(
         .load(hoodie)
         .select(F.col("path").alias("_marker"))
     )
-    field_names = [f.name for f in schema.fields]
-    numeric_kf = _numeric_key_fields(schema, key_fields)
 
     def _local(p: str) -> str:
         from urllib.parse import unquote as _unquote
@@ -955,99 +950,37 @@ def read_hudi_row_stream(
             p = "/" + p[5:].lstrip("/")
         return _unquote(p)
 
-    def _abs(rel: str) -> str:
-        return (
-            rel
-            if rel.startswith("/") or "://" in rel
-            else _os.path.join(table_path, rel)
-        )
-
     def plan(batches):
         """Stage 1 — metadata-only: commit marker → per-file work rows."""
         import pandas as _pd
 
-        from onetable_spark.formats.hudi import (
-            _file_id_for,
-            read_optimized_states_before,
-        )
+        from onetable_spark.formats.hudi import _change_plan
 
         for pdf in batches:
-            kinds, paths, instants = [], [], []
-
-            def emit(kind: str, path: str, instant: str) -> None:
-                kinds.append(kind)
-                paths.append(path)
-                instants.append(instant)
-
-            markers: list[tuple[str, dict, set]] = []
+            commits = []
             for marker in pdf["_marker"]:
                 lp = _local(marker)
-                instant = _os.path.basename(lp).split(".", 1)[0]
                 with open(lp) as fh:
-                    meta = _json.load(fh)
-                if meta.get("operationType") in ("COMPACT", "CLUSTER"):
-                    continue
-                replaced = {
-                    fid
-                    for ids in (
-                        meta.get("partitionToReplaceFileIds") or {}
-                    ).values()
-                    for fid in (ids or [])
-                }
-                markers.append((instant, meta, replaced))
-            # prior-state victims: ONE incremental timeline replay
-            # serves every replacecommit in the batch (O(timeline + R)
-            # instead of O(R·timeline) on a clustering-heavy backfill)
-            need = [i for i, _m, r in markers if r]
-            states = (
-                read_optimized_states_before(table_path, need)
-                if need
-                else {}
-            )
-            for instant, meta, replaced in markers:
-                for rel in states.get(instant, ()):
-                    if _file_id_for(rel) in replaced:
-                        emit("victim", _abs(rel), instant)
-                for stats in (
-                    meta.get("partitionToWriteStats") or {}
-                ).values():
-                    for s in stats or []:
-                        rel = s.get("path")
-                        if not rel:
-                            continue
-                        if (
-                            rel.endswith(".parquet")
-                            and (s.get("numInserts") or 0) > 0
-                        ):
-                            emit("base", _abs(rel), instant)
-                        elif ".log." in rel and not rel.endswith("-cdc"):
-                            emit("log", _abs(rel), instant)
+                    commits.append((_os.path.basename(lp).split(".", 1)[0], _json.load(fh)))
             yield _pd.DataFrame(
-                {"kind": kinds, "path": paths, "_commit_instant": instants}
+                _change_plan(table_path, commits), columns=["kind", "path", "_commit_instant"]
             )
 
     work = raw.mapInPandas(
         plan, "kind string, path string, _commit_instant string"
     )
-    # r16: ``fanout=None`` probes the timeline's commit markers and skips
-    # the exchange when every observed instant wrote/replaced at most a
+    # ``fanout=None`` probes the timeline's commit markers and skips the
+    # exchange when every observed instant wrote/replaced at most a
     # couple of files (see _fanout_width).
     width = _fanout_width(spark, fanout, _hudi_max_files_per_commit(hoodie))
     if width is not None:
         work = work.repartition(width, "path", "_commit_instant")
 
     def read_files(batches):
-        """Stage 2 — one bounded frame (or two, for a log file with both
-        block types) yielded PER FILE."""
-        import pandas as _pd
+        """Stage 2 — one bounded frame yielded PER FILE."""
         import pyarrow.parquet as _pq
 
-        from onetable_spark.formats.hudi import delete_key_frame
-        from onetable_spark.formats.hudi_log import (
-            avro_block_records,
-            delete_block_records,
-            read_log_blocks,
-        )
+        from onetable_spark.formats.hudi import _log_changes
 
         def mark():
             if _task_probe_dir:
@@ -1067,35 +1000,12 @@ def read_hudi_row_stream(
                 pdf["kind"], pdf["path"], pdf["_commit_instant"]
             ):
                 mark()
-                if kind in ("base", "victim"):
-                    t = _pq.read_table(ap).to_pandas(
-                        integer_object_nulls=True
-                    )
+                if kind == "log":
+                    t = _log_changes(ap, instant, schema, key_fields)
+                else:
+                    t = _pq.read_table(ap).to_pandas(integer_object_nulls=True)
                     t["_change_operation"] = "i" if kind == "base" else "d"
-                    t["_commit_instant"] = instant
-                    yield t
-                    continue
-                urows, dkeys = [], []
-                for b in read_log_blocks(ap):
-                    if b["headers"].get("instant_time") != instant:
-                        continue
-                    if b["type"] == "avro_data":
-                        _, recs = avro_block_records(b, decode=True)
-                        urows.extend(recs)
-                    elif b["type"] == "delete":
-                        _, recs = delete_block_records(b)
-                        dkeys.extend(r.get("recordKey") for r in recs)
-                if urows:
-                    t = _pd.DataFrame(urows, columns=field_names)
-                    t["_change_operation"] = "u"
-                    t["_commit_instant"] = instant
-                    yield t
-                if dkeys:
-                    dd = delete_key_frame(
-                        dkeys, field_names, key_fields, numeric_kf
-                    )
-                    dd["_change_operation"] = "d"
-                    dd["_commit_instant"] = instant
-                    yield dd
+                t["_commit_instant"] = instant
+                yield t
 
     return work.mapInPandas(read_files, out_schema)

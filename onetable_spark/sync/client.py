@@ -24,10 +24,6 @@ import time
 from dataclasses import dataclass, field
 from typing import Iterator, Optional, Protocol
 
-# module-level so pandas_udf string annotations resolve under
-# `from __future__ import annotations` (evaluated in module globals)
-import pandas as pd  # noqa: F401
-
 from pyspark.sql import SparkSession
 from pyspark.storagelevel import StorageLevel
 
@@ -410,21 +406,15 @@ class HudiTarget:
         """Removed paths → per-partition fileIds (replace-commit semantics,
         BaseFileUpdatesExtractor.java:77-232).
 
-        The rel-path strip / partition split / uuid5 fileId all run
-        distributed (one Arrow-batched UDF for the uuid5); the driver only
-        collects the per-partition aggregated id lists — the same payload
-        the commit JSON must hold anyway — instead of iterating every
-        removed row through toLocalIterator."""
-        import uuid as _uuid
-
+        The rel-path strip, the partition split and the uuid5 fileId
+        (``_file_id_column``) are Spark expressions, with no Python stage;
+        the driver only collects the per-partition aggregated id lists —
+        the same payload the commit JSON must hold anyway."""
         from pyspark.sql import functions as F
 
+        from onetable_spark.formats.hudi import _file_id_column
+
         prefix = self.timeline.table_path.rstrip("/") + "/"
-
-        @F.pandas_udf("string")
-        def file_id_of(rel: pd.Series) -> pd.Series:
-            return rel.map(lambda r: _uuid.uuid5(_uuid.NAMESPACE_URL, r).hex)
-
         rel = F.when(
             F.col("path").startswith(prefix), F.expr(f"substring(path, {len(prefix) + 1})")
         ).otherwise(F.col("path"))
@@ -436,7 +426,7 @@ class HudiTarget:
                 )
                 .otherwise(F.lit(""))
                 .alias("partition"),
-                file_id_of("rel").alias("file_id"),
+                _file_id_column(F.col("rel")).alias("file_id"),
             )
             .groupBy("partition")
             .agg(F.sort_array(F.collect_list("file_id")).alias("file_ids"))

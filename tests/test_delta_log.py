@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from onetable_spark.formats.delta import CHECKPOINT_INTERVAL, DeltaLog
 from onetable_spark.model import DataLayoutStrategy, Table, TableFormat, TableMetadata
-from onetable_spark.sources.parquet_inventory import inventory_from_directory
+from onetable_spark.sources.parquet_inventory import build_inventory, inventory_from_directory
 
 
 @pytest.fixture()
@@ -598,3 +598,173 @@ def test_checkpoint_only_table_full_sync_path(spark, sf_dir, tmp_path):
     snap = fresh.current_snapshot()  # used to raise FileNotFoundError
     assert snap.files.count() == 1
     assert fresh.table_descriptor().name  # full descriptor path works
+
+
+def _stage_delta(spark, sf_dir, base, n_small=2):
+    os.makedirs(base)
+    small = []
+    for i in range(n_small):
+        p = os.path.join(base, f"small{i}.parquet")
+        shutil.copy(os.path.join(sf_dir, "region.parquet"), p)
+        small.append(p)
+    schema = spark.read.parquet(base).schema
+    log = DeltaLog(spark, base)
+    log.init_table(
+        Table(
+            name="staged",
+            base_path=base,
+            table_format=TableFormat.DELTA,
+            read_schema=schema,
+            layout=DataLayoutStrategy.FLAT,
+        )
+    )
+    log.commit(adds=build_inventory(spark, small, root=base))
+    return log
+
+
+def test_torn_multipart_checkpoint_refused(spark, sf_dir, tmp_path):
+    """A multi-part checkpoint with a missing part must REFUSE, not replay
+    a partial snapshot (dropped live files = silent wrong data)."""
+    base = str(tmp_path / "torn")
+    log = _stage_delta(spark, sf_dir, base)
+    log.checkpoint()
+    v = log._last_checkpoint()
+    single = os.path.join(log.log_path, f"{v:020d}.checkpoint.parquet")
+    # fake a 2-part checkpoint where only part 1 survived
+    torn = os.path.join(
+        log.log_path, f"{v:020d}.checkpoint.{1:010d}.{2:010d}.parquet"
+    )
+    os.rename(single, torn)
+    with pytest.raises(ValueError, match="incomplete/torn"):
+        DeltaLog(spark, base)._checkpoint_files(v)
+    # a COMPLETE 2-part checkpoint (duplicate content is fine: replay
+    # dedups per path) passes the guard and replays
+    part2 = os.path.join(
+        log.log_path, f"{v:020d}.checkpoint.{2:010d}.{2:010d}.parquet"
+    )
+    shutil.copy(torn, part2)
+    fresh = DeltaLog(spark, base)
+    assert len(fresh._checkpoint_files(v)) == 2
+    assert fresh.snapshot_files().count() == 2
+
+
+def test_last_checkpoint_parts_mismatch_refused(spark, sf_dir, tmp_path):
+    """_last_checkpoint's ``parts`` must agree with the on-disk part count
+    — the protocol's reader-side completeness rule."""
+    base = str(tmp_path / "parts")
+    log = _stage_delta(spark, sf_dir, base)
+    log.checkpoint()
+    v = log._last_checkpoint()
+    single = os.path.join(log.log_path, f"{v:020d}.checkpoint.parquet")
+    p1 = os.path.join(log.log_path, f"{v:020d}.checkpoint.{1:010d}.{1:010d}.parquet")
+    os.rename(single, p1)
+    lc = os.path.join(log.log_path, "_last_checkpoint")
+    with open(lc, "w") as f:
+        json.dump({"version": v, "parts": 3}, f)
+    with pytest.raises(ValueError, match="declares 3"):
+        DeltaLog(spark, base)._checkpoint_files(v)
+
+
+def test_json_v2_checkpoint_refused_explicitly(spark, sf_dir, tmp_path):
+    """A JSON-format v2 checkpoint gets a clean 'unsupported' refusal, not
+    a confusing no-checkpoint-files FileNotFoundError."""
+    base = str(tmp_path / "jsonv2")
+    log = _stage_delta(spark, sf_dir, base)
+    log.checkpoint()
+    v = log._last_checkpoint()
+    single = os.path.join(log.log_path, f"{v:020d}.checkpoint.parquet")
+    os.remove(single)
+    j = os.path.join(
+        log.log_path, f"{v:020d}.checkpoint.80a083e8-7026-4e79-81be-64bd76c43a11.json"
+    )
+    open(j, "w").write("{}\n")
+    with pytest.raises(ValueError, match="JSON-format v2"):
+        DeltaLog(spark, base)._checkpoint_files(v)
+
+
+def test_multipart_checkpoint_write_and_replay(spark, sf_dir, tmp_path):
+    """The writer now produces the classic MULTI-PART checkpoint form
+    (parts write in parallel, names embed (index, total), _last_checkpoint
+    declares parts) and the reader's completeness guard accepts it whole
+    and refuses it torn."""
+    base = str(tmp_path / "multipart")
+    log = _stage_delta(spark, sf_dir, base, n_small=3)
+    log.checkpoint(parts=3)
+    lc = json.load(open(os.path.join(log.log_path, "_last_checkpoint")))
+    v = lc["version"]
+    # `parts` is a fan-out TARGET: round-robin can leave a target
+    # partition empty on tiny tables and Spark skips empty output files.
+    # The contract is CONSISTENCY — names, _last_checkpoint, and disk all
+    # agree — plus genuinely multi-part output.
+    n = lc["parts"]
+    assert 2 <= n <= 3
+    parts = sorted(
+        f for f in os.listdir(log.log_path)
+        if f.startswith(f"{v:020d}.checkpoint.") and f.endswith(".parquet")
+    )
+    assert parts == [
+        f"{v:020d}.checkpoint.{i:010d}.{n:010d}.parquet"
+        for i in range(1, n + 1)
+    ]
+    # checkpoint-only replay: sweep the commit JSONs, read back whole
+    removed = log.clean_log(retention_hours=0)
+    assert removed >= 1
+    fresh = DeltaLog(spark, base)
+    assert fresh.snapshot_files().count() == 3
+    # torn: losing one part refuses
+    os.remove(os.path.join(log.log_path, parts[1]))
+    with pytest.raises(ValueError, match="incomplete/torn"):
+        DeltaLog(spark, base).snapshot_files().count()
+
+
+def test_commit_plane_goes_through_filesystem_seam(spark, sf_dir, tmp_path, monkeypatch):
+    """r12 (VERDICT #8): the commit plane's visibility-changing writes —
+    commit publish, checkpoint-part replace, _last_checkpoint swap — go
+    through the injectable CommitFilesystem seam. A fake object store
+    (conditional-put via exists-check + copy, NO hard links) drives a
+    full commit + multi-part checkpoint lifecycle; os.link is poisoned to
+    prove the log writer no longer binds POSIX directly."""
+    import shutil as _sh
+
+    class FakeObjectStore:
+        """Copy-based conditional put — what an S3/GCS adapter does."""
+
+        def __init__(self):
+            self.puts = []
+            self.replaces = []
+            self.docs = []
+
+        def publish_if_absent(self, src, dest):
+            if os.path.exists(dest):
+                raise FileExistsError(dest)
+            _sh.copyfile(src, dest)
+            self.puts.append(dest)
+
+        def replace(self, src, dest):
+            _sh.copyfile(src, dest)
+            os.remove(src)
+            self.replaces.append(dest)
+
+        def write_atomic(self, path, data):
+            with open(path + ".staged", "w") as f:
+                f.write(data)
+            os.rename(path + ".staged", path)
+            self.docs.append(path)
+
+    base = str(tmp_path / "seam")
+    fake = FakeObjectStore()
+    _stage_delta(spark, sf_dir, base, n_small=3)
+
+    def no_link(*a, **k):
+        raise AssertionError("commit plane bound os.link directly")
+
+    monkeypatch.setattr(os, "link", no_link)
+    log = DeltaLog(spark, base, fs=fake)
+    log.commit(operation="SEAM-PROBE")
+    log.checkpoint(parts=2)
+    assert fake.puts, "commit publish bypassed the seam"
+    assert fake.replaces, "checkpoint parts bypassed the seam"
+    assert any(p.endswith("_last_checkpoint") for p in fake.docs)
+    # the table written through the fake store reads back whole
+    fresh = DeltaLog(spark, base)
+    assert fresh.snapshot_files().count() == 3

@@ -121,9 +121,9 @@ def test_clustering_is_changelog_invisible(spark, mor_table):
 
 
 def test_changelog_probe_is_one_job(spark, mor_table):
-    """r14: ALL in-range commit heads come off ONE spark.read.json — the
-    r13 form ran one .first() job per instant. Build the changelog over
-    several instants inside a job group and count the group's jobs."""
+    """Building the changelog over several instants runs NO Spark job:
+    the change planner reads the range's commit files on the driver.
+    Build it inside a job group and count the group's jobs."""
     base, tl = mor_table
     for k in range(3):
         batch = spark.createDataFrame(
@@ -137,11 +137,125 @@ def test_changelog_probe_is_one_job(spark, mor_table):
     finally:
         sc.setJobGroup(None, None)
     probe_jobs = sc.statusTracker().getJobIdsForGroup("hudi_probe_count")
-    assert len(probe_jobs) == 1, f"expected 1 probe job, saw {len(probe_jobs)}"
-    # and the batched probe changes nothing about the output
+    assert len(probe_jobs) == 0, f"expected no build job, saw {len(probe_jobs)}"
+    # and the planner changes nothing about the output
     got = _ops(feed)
     assert {("i", i, f"name{i}") for i in range(6)} <= got
     assert {("i", 20 + k, f"bulk{k}") for k in range(3)} <= got
+
+
+def _python_ops(df) -> int:
+    import re
+
+    # an executed adaptive plan prints its initial plan after the final one
+    plan = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    return len(re.findall(r"MapInPandas|FlatMapGroupsInPandas|MapInArrow|EvalPython", plan))
+
+
+def test_change_plans_do_not_grow_with_the_range(spark, mor_table):
+    """The changelog's plan holds one Python operator (the log decoder)
+    over 1 upsert instant and over 4; the cdc feed's at most two (plus
+    the cdc-block decoder), with two plain and two supplemental-cdc
+    upserts in range. Base rows come from Spark's parquet scan."""
+    base, tl = mor_table
+    seed = tl.latest_instant()
+    firsts = []
+    for k in range(4):
+        if k == 2:
+            tl.set_table_properties({"hoodie.table.cdc.enabled": "true"})
+        firsts.append(tl.upsert_records(
+            spark.createDataFrame([(k, f"v{k}"), (30 + k, f"new{k}")], "id long, name string")
+        ))
+    one = tl.changelog(from_instant=seed, to_instant=firsts[0])
+    four = tl.changelog(from_instant=seed)
+    assert _ops(one) == {("u", 0, "v0"), ("i", 30, "new0")}
+    assert len(four.collect()) == 8
+    assert _python_ops(one) == _python_ops(four) <= 1
+    for to in (firsts[0], None):
+        feed = tl.cdc_feed(from_instant=seed, to_instant=to)
+        assert len(feed.collect()) == (2 if to else 8)
+        assert _python_ops(feed) <= 2
+
+
+def _replace_compacted_group(spark, base, tl):
+    """Update the fixture's one file group, compact it (the new base file
+    is ``{fileId}_0-0-0_{instant}.parquet``), then replace the group with
+    a one-row file; returns the compaction and replace instants."""
+    from onetable_spark.formats.hudi import _file_id_for
+
+    tl.upsert_records(spark.createDataFrame([(2, "v2")], "id long, name string"))
+    compacted = tl.compact_file_groups()
+    f2 = os.path.join(base, "f2.parquet")
+    pq.write_table(pa.table({"id": pa.array([20], pa.int64()), "name": ["twenty"]}), f2)
+    replace = tl.commit(
+        adds=build_inventory(spark, [f2], root=base),
+        replace_file_ids={"": [_file_id_for("f1.parquet")]},
+    )
+    return compacted, replace
+
+
+def test_replacing_a_compacted_group_emits_its_rows(spark, mor_table, tmp_path):
+    """A replacecommit of a file group whose base file compaction wrote
+    emits that file's rows as 'd' — matched on the write stat's fileId,
+    not a fileId derived from the file's name — in the changelog, the
+    cdc feed and the row stream alike."""
+    import json
+
+    from onetable_spark.streaming.cdc import read_hudi_row_stream
+    from tests.test_streaming_cdc import _drain_rows
+
+    base, tl = mor_table
+    compacted, replace = _replace_compacted_group(spark, base, tl)
+    want = {("d", i, "v2" if i == 2 else f"name{i}") for i in range(6)} | {("i", 20, "twenty")}
+    assert _ops(tl.changelog(from_instant=compacted)) == want
+    feed = tl.cdc_feed(from_instant=compacted).collect()
+    got = set()
+    for r in feed:
+        image = json.loads(r["before"] if r["op"] == "d" else r["after"])
+        got.add((r["op"], image["id"], image["name"]))
+    assert len(feed) == 7 and got == want
+    rows = _drain_rows(spark, read_hudi_row_stream(spark, base), str(tmp_path / "ck"))
+    tail = [(r["_change_operation"], r["id"], r["name"]) for r in rows if r["_commit_instant"] == replace]
+    assert len(tail) == 7 and set(tail) == want
+
+
+def test_reupserted_deleted_key_counts_as_an_insert(spark, mor_table):
+    """A key a DELETE block removed and a later upsert writes back is an
+    insert again: the realtime count nets it back, and equals the row
+    count compaction then writes."""
+    base, tl = mor_table
+    target = tl.snapshot_files().collect()[0]["path"]
+    ids = pq.read_table(target, columns=["id"])["id"].to_pylist()
+    tl.commit_delete_logs(spark.createDataFrame([(target, ids.index(2))], "path string, pos long"))
+    tl.upsert_records(spark.createDataFrame([(2, "back")], "id long, name string"))
+    realtime = sum(r["record_count"] for r in tl.snapshot_files(view="realtime").collect())
+    tl.compact_file_groups()
+    merged = spark.read.parquet(*[r["path"] for r in tl.snapshot_files().collect()]).collect()
+    assert realtime == len(merged) == 6
+    assert {(r["id"], r["name"]) for r in merged} == {
+        (i, "back" if i == 2 else f"name{i}") for i in range(6)
+    }
+
+
+def test_compaction_keeps_date_and_timestamp_values(spark, tmp_path):
+    """Compaction writes ``date``, ``timestamp`` and ``timestamp_ntz``
+    columns (a Spark-written base file holds INT96 timestamps) in types
+    Spark reads back: the compacted values equal the realtime rows."""
+    schema = "id long, d date, ts timestamp, ntz timestamp_ntz"
+    noon = dt.datetime(2020, 1, 1, 12, 0, 0, 250000)
+    df = spark.createDataFrame(
+        [(i, dt.date(2020, 1, 1 + i), noon, noon) for i in range(3)], schema
+    )
+    tl = _mor(spark, str(tmp_path / "cts"), df)
+    late = dt.datetime(1969, 12, 31, 23, 59, 59, 123456)
+    batch = spark.createDataFrame([(1, dt.date(1969, 12, 31), late, late)], schema)
+    tl.upsert_records(batch)
+    want = {r["id"]: tuple(r) for r in df.collect()}
+    want.update({r["id"]: tuple(r) for r in batch.collect()})
+    tl.compact_file_groups()
+    paths = [r["path"] for r in tl.snapshot_files().collect()]
+    got = spark.read.parquet(*paths).collect()
+    assert sorted(map(tuple, got)) == sorted(want.values())
 
 
 def test_changelog_pairs_updates_with_identifier_fields(spark, mor_table):
@@ -466,3 +580,16 @@ def test_upsert_logs_null_integer_values(spark, tmp_path):
     tl.upsert_records(spark.createDataFrame([(1, None), (2, 7)], schema))
     got = {(r["_change_operation"], r["id"], r["score"]) for r in tl.changelog(from_instant=seed).collect()}
     assert got == {("u", 1, None), ("u", 2, 7)}
+
+
+def test_changelog_and_upsert_under_a_path_with_plus_and_space(spark, tmp_path):
+    """Spark's scan reports a file under ``a+b c/`` as ``a+b%20c``; the
+    rows it tags join the planned and live paths all the same, so the
+    changelog holds every row and the upsert finds its file group."""
+    tl = _mor(spark, str(tmp_path / "a+b c" / "t"),
+              spark.createDataFrame([(i, f"name{i}") for i in range(3)], "id long, name string"))
+    seed = tl.latest_instant()
+    assert _ops(tl.changelog()) == {("i", i, f"name{i}") for i in range(3)}
+    tl.upsert_records(spark.createDataFrame([(1, "v1")], "id long, name string"))
+    assert _ops(tl.changelog(from_instant=seed)) == {("u", 1, "v1")}
+

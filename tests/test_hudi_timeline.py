@@ -733,15 +733,16 @@ def test_partitioned_upsert_records(spark, sf_dir, tmp_path):
 
 
 def test_read_optimized_states_before_incremental_walk(spark, tmp_path):
-    """r15: the pure-Python multi-cutoff replay matches per-cutoff
-    single replays, including a rollback applied MID-walk (a commit is
-    live at cutoffs between it and its rollback, gone after)."""
+    """The pure-Python multi-cutoff replay (``_file_group_states``)
+    matches per-cutoff single replays, including a rollback applied
+    MID-walk (a commit is live at cutoffs between it and its rollback,
+    gone after)."""
     import json
 
-    from onetable_spark.formats.hudi import (
-        read_optimized_files_before,
-        read_optimized_states_before,
-    )
+    from onetable_spark.formats.hudi import _file_group_states
+
+    def base_files(groups):
+        return sorted(g["rel"] for g in groups.values() if g["rel"] is not None)
 
     base = str(tmp_path / "hstates")
     hoodie = os.path.join(base, ".hoodie")
@@ -767,9 +768,9 @@ def test_read_optimized_states_before_incremental_walk(spark, tmp_path):
     commit("005", "commit", stats=[("c.parquet", "fc")])
 
     cutoffs = ["002", "003", "004", "005", "006"]
-    states = read_optimized_states_before(base, cutoffs)
+    states = {c: base_files(g) for c, g in _file_group_states(base, cutoffs).items() if c}
     for c in cutoffs:
-        assert states[c] == read_optimized_files_before(base, c), c
+        assert states[c] == base_files(_file_group_states(base, [c])[c]), c
     assert states["002"] == ["a.parquet"]
     assert states["003"] == ["a.parquet", "b.parquet"]
     # 003 replaced fa and added fm — live until its rollback at 004
@@ -788,3 +789,18 @@ def test_hudi_last_modified_is_epoch_millis(spark, seeded_hudi):
     assert row["last_modified_millis"] == instant_to_millis(instant)
     # sanity: within a day of now, not a 2e16 yyyyMMdd literal
     assert abs(row["last_modified_millis"] - time.time() * 1000) < 86_400_000
+
+
+@pytest.mark.parametrize(
+    "rel", ["f1.parquet", "p=1/part-0001.parquet", "dt=é/ünï.parquet", "a+b/c d.parquet"],
+    ids=["ascii", "partitioned", "non_ascii", "plus_and_space"],
+)
+def test_file_id_column_matches_file_id_for(spark, rel):
+    """The Spark form of a base file's uuid5 fileId, which the Hudi sync
+    target derives replaced groups with, equals the Python one."""
+    from onetable_spark.formats.hudi import _file_id_column
+
+    got = spark.createDataFrame([(rel,)], "rel string").select(
+        _file_id_column(F.col("rel")).alias("fid")
+    ).first()["fid"]
+    assert got == _file_id_for(rel)

@@ -785,3 +785,18 @@ def test_checkerboard_near_dup_matches_broadcast_reference(spark, sf_dir):
         .collect()
     }
     assert got == want and len(want) > 0
+
+
+def test_bpe_batch_rejects_duplicate_merged_string():
+    """('a','bc') and ('ab','c') share no symbol but both yield 'abc'; the
+    second must CONFLICT (stop the prefix), or pairs containing 'abc' gain
+    count from two sources and the batch-exactness bound breaks."""
+    from onetable_spark.functions.bpe import _select_batch
+
+    rows = [
+        {"a": "a", "b": "bc", "cnt": 10},
+        {"a": "ab", "b": "c", "cnt": 9},
+        {"a": "x", "b": "y", "cnt": 8},
+    ]
+    batch = _select_batch(rows, overflow_cnt=0, universe={"a", "b", "c", "ab", "bc", "x", "y"})
+    assert batch == [("a", "bc")]

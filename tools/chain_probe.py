@@ -10,8 +10,10 @@ Why this could be nonlinear: the r13 Iceberg changelog re-ran
 ``snapshot_with_deleted_positions(parent)`` per removed-file snapshot
 (O(chain) re-decodes of every prior delete file → O(chain^2) work), and
 the r13 Hudi changelog fired one ``.first()`` probe job per instant.
-Both are fixed in r14 (incremental dead-position state + one batched
-head read); this probe is the regression guard.
+Both are fixed (incremental dead-position state; the Hudi change
+planner reads the range's commit files once on the driver, with no Spark
+job, and its plan holds one Python stage however long the chain); this
+probe is the regression guard.
 
 Chain shapes (each commit touches 1 key — the incremental-sync shape):
 - delta: CDF-enabled, alternating keyed upserts (cdc authoring + DV) —
@@ -19,7 +21,7 @@ Chain shapes (each commit touches 1 key — the incremental-sync shape):
 - iceberg: v2 keyed upserts (equality delete + data file per snapshot) —
   exercises the dead-position walk;
 - hudi: MOR ``upsert_records`` (one log block per instant) — exercises
-  the head probe plus per-instant block reads.
+  the driver-side change planner plus the one log-decoder stage.
 
 Usage: python tools/chain_probe.py [N] [--append]
   N        chain length (default 100)
